@@ -1932,6 +1932,7 @@ def q_dup_graph_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     (12.5M list_intersect pairs at sf0.1 take DuckDB ~10+ min), so
     local sf-sweeps treat this as sf0.01-bounded; the Spark side runs
     fine at every SF and its sf1 pair graph is smoke-checked."""
+    from meta_frame_spark.operators.bounded import bounded_collect
     from meta_frame_spark.operators.dedup import minhash_lsh_dedup
     from meta_frame_spark.operators.graph import degree_stats, triangle_count
 
@@ -1950,13 +1951,12 @@ def q_dup_graph_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # expressions (sum/2 cast, round(avg, 6)) so every value is
     # bit-identical to the operators'. Larger graphs take the
     # distributed operators unchanged.
-    rows = pairs.select("id_a", "id_b").limit(100_001).collect()
-    if len(rows) <= 100_000:
+    local = bounded_collect(pairs.select("id_a", "id_b"), 100_000, "dup_graph_stats")
+    if local is not None:
         from collections import defaultdict
 
         adj: dict = defaultdict(set)
-        for r in rows:
-            a, b = r[0], r[1]
+        for a, b in zip(local.column(0).to_pylist(), local.column(1).to_pylist()):
             if a != b:
                 lo, hi = (a, b) if a < b else (b, a)
                 adj[lo].add(hi)
@@ -2004,6 +2004,7 @@ def q_dup_cluster_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
     only ~0.64 there and depend on the corpus' bimodal pair-Jaccard
     distribution); the exact-Jaccard verify step drops the extra false
     candidates, so the all-pairs oracle stays a true oracle."""
+    from meta_frame_spark.operators.bounded import bounded_collect
     from meta_frame_spark.operators.dedup import dup_clusters, minhash_lsh_dedup
 
     docs = _t(spark, sf_dir, "documents")
@@ -2017,8 +2018,8 @@ def q_dup_cluster_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
     # roots — the distributed groupBy over the tiny local label frame
     # (one more scheduled exchange job) disappears. Larger graphs take
     # dup_clusters' distributed loop + groupBy unchanged.
-    rows = pairs.select("id_a", "id_b").limit(100_001).collect()
-    if len(rows) <= 100_000:
+    local = bounded_collect(pairs.select("id_a", "id_b"), 100_000, "dup_cluster_sizes")
+    if local is not None:
         parent: dict = {}
 
         def find(x):
@@ -2027,8 +2028,7 @@ def q_dup_cluster_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
                 x = parent[x]
             return x
 
-        for r in rows:
-            a, b = r[0], r[1]
+        for a, b in zip(local.column(0).to_pylist(), local.column(1).to_pylist()):
             parent.setdefault(a, a)
             parent.setdefault(b, b)
             ra, rb = find(a), find(b)

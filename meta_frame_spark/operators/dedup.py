@@ -17,17 +17,28 @@ String hashing stays JVM-side (codegen'd xxhash64); the dense
 signature arithmetic (shingles × permutations, token-hash bit votes)
 runs in Arrow-batched vectorized pandas UDFs — measured ~10-20× faster
 than interpreted higher-order-function folds at identical semantics.
+
+``minhash_lsh_dedup`` and ``dup_clusters`` are dual-path
+(:mod:`.bounded`): at or below ``driver_threshold`` rows they collect
+through ``bounded_collect`` and run the same algorithm on the
+driver (numpy signatures, band grouping and Jaccard; union-find), with
+no Python worker and no shuffle; above it the distributed plans run
+unchanged. Tests pin both branches equal.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from meta_frame_spark.operators.bounded import bounded_collect, row_cap
+from meta_frame_spark.operators.bounded import log as bounded_log
 from meta_frame_spark.operators.cache import track
 from meta_frame_spark.operators.skew import ensure_min_partitions
 
@@ -109,20 +120,50 @@ def dedup_against(
 #: permutation a*h+b stays < 2^62 — no long overflow under ANSI mode.
 _MERSENNE = (1 << 31) - 1
 
+#: Driver bytes of one document beyond its 16 per token (the collected
+#: token hashes and, at most as many, distinct shingle hashes) and 8 per
+#: signature value: the id, the Arrow offset and the numpy header of
+#: its shingle set. :func:`minhash_lsh_dedup` passes the sum as
+#: ``bounded_collect``'s ``row_bytes``, so long documents are stopped
+#: before they are collected.
+_DOC_OVERHEAD = 136
+
+#: Default driver cap of :func:`minhash_lsh_dedup`, in documents: as
+#: many as fill ``bounded.DRIVER_BYTES`` at the fixtures' mean length of
+#: 54 tokens and 64 hashes (44,384). The driver branch won up to the
+#: 80,000 documents measured unless a mega-bucket outgrew
+#: :data:`PAIR_CAP` (crossover table in :mod:`.bounded`), so memory
+#: sets it; longer documents are stopped earlier by the gate's byte
+#: total.
+DOC_CAP = row_cap(16 * 54 + 8 * 64 + _DOC_OVERHEAD)
+
+#: Candidate pairs, summed over bands, the driver branch of
+#: :func:`minhash_lsh_dedup` may build: 32 bytes each (the pair's rows
+#: while a band is expanded and its key through the final unique), so
+#: the candidates stay within ``bounded.DRIVER_BYTES`` too.
+PAIR_CAP = row_cap(32)
+
 
 def _shingles(text_col, n: int = 5):
     """Word n-gram shingles of a text column (array<string>), computed
-    JVM-side: split -> sliding windows via transform over indices.
+    JVM-side: split, then the n shifted slices of the token array
+    zipped and joined per window — linear in the token count (a
+    per-window ``slice`` of the token array re-evaluated the split once
+    per window). A text shorter than ``n`` tokens gives one shingle of
+    all of them; a null text gives ``[""]``.
 
     Used only where the literal shingle strings are required (the
     SQL-oracle-matched exact-Jaccard path); the LSH hot path never
     materializes shingle strings — see :func:`_token_hashes` /
     :func:`_np_shingle_hashes`."""
-    tokens = F.split(F.lower(F.col(text_col) if isinstance(text_col, str) else text_col), r"\s+")
+    text = F.col(text_col) if isinstance(text_col, str) else text_col
+    tokens = F.split(F.lower(text), r"\s+")
     k = F.greatest(F.size(tokens) - F.lit(n - 1), F.lit(1))
-    return F.transform(
-        F.sequence(F.lit(0), k - 1),
-        lambda i: F.concat_ws(" ", F.slice(tokens, i + 1, n)),
+    # a slice starting past the end is empty, and arrays_zip pads it
+    # with nulls, which concat_ws skips
+    windows = F.arrays_zip(*[F.slice(tokens, j + 1, k) for j in range(n)])
+    return F.when(text.isNull(), F.array(F.lit(""))).otherwise(
+        F.transform(windows, lambda w: F.concat_ws(" ", *[w[str(j)] for j in range(n)]))
     )
 
 
@@ -165,6 +206,16 @@ def _np_shingle_hashes(arr: "np.ndarray", n: int) -> "np.ndarray":
     return h & np.int64(_MERSENNE)
 
 
+def _minhash_coefs(num_hashes: int, seed: int) -> tuple["np.ndarray", "np.ndarray"]:
+    """(A, B) of the ``num_hashes`` permutations ``(a*h + b) mod P``."""
+    import random
+
+    rng = random.Random(seed)
+    coefs = [(rng.randrange(1, _MERSENNE), rng.randrange(0, _MERSENNE)) for _ in range(num_hashes)]
+    return (np.array([a for a, _ in coefs], dtype=np.int64),
+            np.array([b for _, b in coefs], dtype=np.int64))
+
+
 def minhash_signatures(
     df: DataFrame,
     text_col: str = "text",
@@ -186,12 +237,7 @@ def minhash_signatures(
     num_hashes) permutation/min arithmetic run as vectorized numpy
     inside one Arrow-batched pandas UDF. Map-only — no shuffle.
     """
-    import random
-
-    rng = random.Random(seed)
-    coefs = [(rng.randrange(1, _MERSENNE), rng.randrange(0, _MERSENNE)) for _ in range(num_hashes)]
-    A = np.array([a for a, _ in coefs], dtype=np.int64)
-    B = np.array([b for _, b in coefs], dtype=np.int64)
+    A, B = _minhash_coefs(num_hashes, seed)
     P = np.int64(_MERSENNE)
     empty_sig = np.full(num_hashes, _MERSENNE, dtype=np.int64)
 
@@ -424,19 +470,23 @@ def hashed_jaccard_pairs(
     )
 
 
+def _sig_and_set(arr: "np.ndarray", A: "np.ndarray", B: "np.ndarray",
+                 shingle_n: int) -> tuple["np.ndarray", "np.ndarray"]:
+    """Minhash signature and distinct hashed-shingle set of one
+    document's token hashes."""
+    if arr.size == 0:
+        return np.full(len(A), _MERSENNE, dtype=np.int64), np.array([], dtype=np.int64)
+    sh = _np_shingle_hashes(arr, shingle_n)
+    # sh < 2^31 and a < 2^31, so a*sh+b < 2^62: no overflow
+    return ((sh[:, None] * A + B) % np.int64(_MERSENNE)).min(axis=0), np.unique(sh)
+
+
 def _minhash_sig_and_set(num_hashes: int, shingle_n: int, seed: int):
     """One Arrow-batched UDF emitting BOTH the minhash signature and the
     distinct hashed-shingle set from per-token hashes — the fused form
     used when the verify stage will need sets for (almost) every doc
     anyway, so tokenize+hash runs once instead of once per stage."""
-    import random
-
-    rng = random.Random(seed)
-    coefs = [(rng.randrange(1, _MERSENNE), rng.randrange(0, _MERSENNE)) for _ in range(num_hashes)]
-    A = np.array([a for a, _ in coefs], dtype=np.int64)
-    B = np.array([b for _, b in coefs], dtype=np.int64)
-    P = np.int64(_MERSENNE)
-    empty_sig = np.full(num_hashes, _MERSENNE, dtype=np.int64)
+    A, B = _minhash_coefs(num_hashes, seed)
 
     @F.pandas_udf("signature array<bigint>, sh array<bigint>")
     def _both(hs: pd.Series) -> pd.DataFrame:
@@ -446,17 +496,98 @@ def _minhash_sig_and_set(num_hashes: int, shingle_n: int, seed: int):
                 sig_out.append(None)
                 set_out.append(None)
                 continue
-            arr = np.asarray(h, dtype=np.int64)
-            if arr.size == 0:
-                sig_out.append(empty_sig)
-                set_out.append(np.array([], dtype=np.int64))
-                continue
-            sh = _np_shingle_hashes(arr, shingle_n)
-            sig_out.append(((sh[:, None] * A + B) % P).min(axis=0))
-            set_out.append(np.unique(sh))
+            sig, sh = _sig_and_set(np.asarray(h, dtype=np.int64), A, B, shingle_n)
+            sig_out.append(sig)
+            set_out.append(sh)
         return pd.DataFrame({"signature": sig_out, "sh": set_out})
 
     return _both
+
+
+def _spark_hash_rows(m: "np.ndarray") -> "np.ndarray":
+    """Spark's ``hash`` of each row of an int64 matrix read as
+    ``array<bigint>`` (Murmur3 x86_32, seed 42, folded element by
+    element through ``hashLong``): the bucket key the distributed
+    branch computes JVM-side, so both branches group alike."""
+    def rotl(x, r):
+        return (x << np.uint32(r)) | (x >> np.uint32(32 - r))
+
+    u = np.ascontiguousarray(m, dtype=np.int64).view(np.uint64)
+    h = np.full(len(m), 42, dtype=np.uint32)
+    for col in range(m.shape[1]):
+        for word in (u[:, col] & np.uint64(0xFFFFFFFF), u[:, col] >> np.uint64(32)):
+            k = rotl(word.astype(np.uint32) * np.uint32(0xCC9E2D51), 15) * np.uint32(0x1B873593)
+            h = rotl(h ^ k, 13) * np.uint32(5) + np.uint32(0xE6546B64)
+        h ^= np.uint32(8)
+        h ^= h >> np.uint32(16)
+        h *= np.uint32(0x85EBCA6B)
+        h ^= h >> np.uint32(13)
+        h *= np.uint32(0xC2B2AE35)
+        h ^= h >> np.uint32(16)
+    return h.view(np.int32)
+
+
+def _bucket_pairs(keys: "np.ndarray") -> tuple["np.ndarray", "np.ndarray"]:
+    """(i, j), i < j, of every two rows sharing a key: per bucket of c
+    rows, its c(c-1)/2 pairs, built without a Python loop."""
+    order = np.argsort(keys, kind="stable")
+    _, starts, counts = np.unique(keys[order], return_index=True, return_counts=True)
+    pos = np.arange(len(keys))
+    later = np.repeat(starts + counts, counts) - pos - 1  # rows after pos in its bucket
+    left = np.repeat(pos, later)
+    right = left + 1 + np.arange(len(left)) - np.repeat(np.cumsum(later) - later, later)
+    i, j = order[left], order[right]
+    return np.minimum(i, j), np.maximum(i, j)
+
+
+def _minhash_pairs_np(
+    hashes: "pa.ListArray", num_hashes: int, num_bands: int, shingle_n: int,
+    threshold: float, seed: int, pair_cap: int,
+) -> tuple["np.ndarray", "np.ndarray", "np.ndarray"] | None:
+    """Driver branch of :func:`minhash_lsh_dedup` over the documents'
+    token hashes: (row_a, row_b, jaccard) of every row pair that shares
+    a band bucket and whose hashed-shingle Jaccard reaches
+    ``threshold``. Buckets are keyed on Spark's ``hash`` of the band
+    (:func:`_spark_hash_rows`), as in the distributed branch, so both
+    see the same candidates. Null documents pair with nothing (the
+    distributed verify drops them: a null set has a null size).
+
+    ``None`` when the buckets hold more than ``pair_cap`` pairs summed
+    over bands — counted from the bucket sizes before any pair is built
+    — so a mega-bucket of boilerplate or identical documents (m of them
+    give m(m-1)/2 pairs per band) goes to the distributed branch
+    instead of exhausting the driver."""
+    A, B = _minhash_coefs(num_hashes, seed)
+    offsets = hashes.offsets.to_numpy()
+    values = hashes.values.to_numpy()
+    docs = np.flatnonzero(~hashes.is_null().to_numpy(zero_copy_only=False))
+    sigs = np.empty((len(docs), num_hashes), dtype=np.int64)
+    sets = []
+    for k, d in enumerate(docs):
+        sigs[k], sh = _sig_and_set(values[offsets[d]:offsets[d + 1]], A, B, shingle_n)
+        sets.append(sh)
+    rows_per_band = num_hashes // num_bands
+    keys = [_spark_hash_rows(sigs[:, b * rows_per_band:(b + 1) * rows_per_band])
+            for b in range(num_bands)]
+    band_pairs = 0
+    for k in keys:
+        c = np.unique(k, return_counts=True)[1].astype(np.int64)
+        band_pairs += int((c * (c - 1) // 2).sum())
+    if band_pairs > pair_cap:
+        return None
+    n = np.int64(len(docs))
+    cand = np.unique(np.concatenate(
+        [np.zeros(0, dtype=np.int64)]
+        + [i * n + j for i, j in map(_bucket_pairs, keys)]
+    ))
+    out = []
+    for x, y in zip((cand // max(n, 1)).tolist(), (cand % max(n, 1)).tolist()):
+        inter = np.intersect1d(sets[x], sets[y], assume_unique=True).size
+        jac = inter / (sets[x].size + sets[y].size - inter)
+        if jac >= threshold:
+            out.append((docs[x], docs[y], jac))
+    a, b, j = zip(*out) if out else ((), (), ())
+    return np.array(a, dtype=np.int64), np.array(b, dtype=np.int64), np.array(j, dtype=np.float64)
 
 
 def minhash_lsh_dedup(
@@ -469,21 +600,70 @@ def minhash_lsh_dedup(
     threshold: float = 0.8,
     seed: int = 42,
     restrict_to_candidates: bool = True,
+    driver_threshold: int = DOC_CAP,
 ) -> DataFrame:
     """Full near-dup pipeline: minhash -> LSH candidates -> exact
     Jaccard verify (hashed-shingle sets). Returns verified near-dup
     pairs (id_a, id_b, jaccard).
 
-    ``restrict_to_candidates``: True (default) runs signature and
-    verify as separate text passes so set-building can be semi-join
-    pruned to candidate docs — the winning trade at cluster scale,
-    where candidates ≪ corpus (see :func:`hashed_jaccard_pairs`).
+    Dual path (see :mod:`.bounded`). Corpora of at most
+    ``driver_threshold`` documents (default :data:`DOC_CAP`) whose
+    working set fits ``bounded.DRIVER_BYTES`` run on the driver: a
+    first job collects each document's byte size, a second the token
+    hashes (computed JVM-side) as Arrow buffers; then the signature and
+    shingle-set numpy body of the distributed UDF, band grouping on
+    Spark's own band hash and the hashed-shingle Jaccard run in numpy
+    (:func:`_minhash_pairs_np`) — no Python workers, no shuffle. Band
+    buckets holding more than :data:`PAIR_CAP` pairs send the corpus to
+    the distributed branch. The final ``round`` runs in Spark on both
+    branches, so values and schema match; tests pin driver ==
+    distributed. ``driver_threshold=0`` forces the distributed branch.
+
+    Distributed branch, ``restrict_to_candidates``: True (default) runs
+    signature and verify as separate text passes so set-building can be
+    semi-join pruned to candidate docs — the winning trade at cluster
+    scale, where candidates ≪ corpus (see :func:`hashed_jaccard_pairs`).
     False fuses both text passes into ONE Arrow UDF emitting
     (signature, shingle-set) and persists that single base: buckets
     derive from the cached signature JVM-side and the verify joins
     sets from the same cache — half the tokenize+hash work and one
     persist instead of two, the winning trade when candidates are NOT
     much rarer than docs (small corpora, low thresholds)."""
+    local = bounded_collect(
+        df.select(F.col(id_col), _token_hashes(text_col).alias("h")),
+        driver_threshold, "minhash_lsh_dedup",
+        row_bytes=16 * F.coalesce(F.size("h"), F.lit(0)) + 8 * num_hashes + _DOC_OVERHEAD,
+    )
+    found = None
+    if local is not None:
+        found = _minhash_pairs_np(
+            local.column(1).combine_chunks(), num_hashes, num_bands, shingle_n,
+            threshold, seed, PAIR_CAP,
+        )
+        if found is None:
+            bounded_log.info(
+                "minhash_lsh_dedup: distributed path, band buckets hold > %d pairs",
+                PAIR_CAP,
+            )
+    if found is not None:
+        rows_a, rows_b, jac = found
+        ids = local.column(0)
+        a, b = ids.take(rows_a), ids.take(rows_b)
+        # canonical id_a < id_b, as the distributed self-join emits
+        swap = pc.fill_null(pc.greater(a, b), False)
+        pairs = pa.table({
+            "id_a": pc.if_else(swap, b, a), "id_b": pc.if_else(swap, a, b),
+            "jaccard": jac,
+        }).filter(pc.fill_null(pc.not_equal(a, b), False))
+        id_type = df.schema[id_col].dataType
+        schema = T.StructType([
+            T.StructField("id_a", id_type), T.StructField("id_b", id_type),
+            T.StructField("jaccard", T.DoubleType()),
+        ])
+        return df.sparkSession.createDataFrame(pairs, schema).select(
+            "id_a", "id_b", F.round("jaccard", 4).alias("jaccard")
+        )
+
     rows_per_band = num_hashes // num_bands
     if restrict_to_candidates:
         sigs = minhash_signatures(df, text_col, id_col, num_hashes, shingle_n, seed)
@@ -628,21 +808,18 @@ def dup_clusters(
     single core finishes in microseconds. The collect is BOUNDED by
     the threshold — a real 10⁹-pair corpus takes the distributed loop;
     identical output either way (min-reachable-id labels), pinned by
-    test. Set ``driver_threshold=0`` to force the distributed path.
+    test. The gate is :func:`.bounded.bounded_collect`; set
+    ``driver_threshold=0`` to force the distributed path.
 
     Raises ``RuntimeError`` if ``max_iter`` rounds pass without
     convergence (a silent partial result would let duplicates through
     ``drop_near_duplicates`` undetected); raise ``max_iter`` for
     corpora with very long duplicate chains.
     """
-    rows = None
-    if driver_threshold:
-        # ONE bounded computation decides the path AND feeds the small
-        # case; the big case pays one early-terminating limit scan.
-        rows = pairs.select("id_a", "id_b").limit(driver_threshold + 1).collect()
-        if len(rows) > driver_threshold:
-            rows = None
-    if rows is not None:
+    local = bounded_collect(
+        pairs.select("id_a", "id_b"), driver_threshold, "dup_clusters"
+    )
+    if local is not None:
         parent: dict = {}
 
         def find(x):
@@ -651,8 +828,7 @@ def dup_clusters(
                 x = parent[x]
             return x
 
-        for r in rows:
-            a, b = r[0], r[1]
+        for a, b in zip(local.column(0).to_pylist(), local.column(1).to_pylist()):
             parent.setdefault(a, a)
             parent.setdefault(b, b)
             ra, rb = find(a), find(b)

@@ -17,6 +17,11 @@ Exact scoring is built-in expressions (zip_with/aggregate/window) so
 the DuckDB oracle can mirror it bit-for-bit; the LSH projection stage
 is a vectorized (Arrow-batched) pandas UDF doing one numpy matmul per
 batch — the measured-fast shape for dense linear algebra.
+
+``embedding_near_dup_pairs`` is dual-path (:mod:`.bounded`): below its
+``driver_threshold`` the same SRP bucketing and cosine verify run in
+numpy on one bounded Arrow collect, with no Python worker and no
+shuffle; above it the distributed plan runs unchanged.
 """
 
 from __future__ import annotations
@@ -25,11 +30,15 @@ import random
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from meta_frame_spark.functions.vectors import cosine_similarity
+from meta_frame_spark.operators.bounded import bounded_collect, row_cap
+from meta_frame_spark.operators.bounded import log as bounded_log
 
 
 def brute_force_topk(
@@ -82,6 +91,16 @@ def _srp_planes(dim: int, n_planes: int, seed: int) -> list[list[float]]:
     return [[rng.gauss(0.0, 1.0) for _ in range(dim)] for _ in range(n_planes)]
 
 
+def _srp_band_buckets(M: "np.ndarray", planes: "np.ndarray",
+                      planes_per_band: int) -> "np.ndarray":
+    """(n, num_bands) int32 bucket ids of the rows of ``M``: signs of the
+    hyperplane projections, packed per band MSB-first."""
+    weights = (1 << np.arange(planes_per_band - 1, -1, -1)).astype(np.int64)
+    bits = (M @ planes.T >= 0).astype(np.int64)  # (n, n_planes)
+    bits = bits.reshape(len(M), len(planes) // planes_per_band, planes_per_band)
+    return (bits @ weights).astype(np.int32)
+
+
 def _bucketize(df: DataFrame, ident: str, vec: str,
                planes: list[list[float]], planes_per_band: int, num_bands: int) -> DataFrame:
     """(_id, v, band, bucket) — one row per (vector, band).
@@ -95,8 +114,6 @@ def _bucketize(df: DataFrame, ident: str, vec: str,
     ``num_bands`` ints per vector.
     """
     P = np.asarray(planes, dtype=np.float64)  # (n_planes, dim)
-    weights = (1 << np.arange(planes_per_band - 1, -1, -1)).astype(np.int64)
-
     dim = P.shape[1]
 
     @F.pandas_udf("array<int>")
@@ -110,8 +127,7 @@ def _bucketize(df: DataFrame, ident: str, vec: str,
         out = [None] * len(vs)
         if valid:
             M = np.stack([np.asarray(vs.iloc[i], dtype=np.float64) for i in valid])
-            bits = (M @ P.T >= 0).astype(np.int64)  # (n_valid, n_planes)
-            bk = (bits.reshape(len(valid), -1, len(weights)) @ weights).astype(np.int32)
+            bk = _srp_band_buckets(M, P, planes_per_band)
             for j, i in enumerate(valid):
                 out[i] = bk[j]
         return pd.Series(out)
@@ -351,6 +367,67 @@ def ivf_topk(
     )
 
 
+#: Gram-block size of the driver branch: rows per block times corpus rows.
+_GRAM_BLOCK = 1 << 20
+
+#: Near-duplicate pairs the driver branch of
+#: :func:`embedding_near_dup_pairs` may hold: about 128 bytes each
+#: through the final sort and the Arrow result, within
+#: ``bounded.DRIVER_BYTES``.
+PAIR_CAP = row_cap(128)
+
+
+def _near_dup_pairs_np(
+    ids: "np.ndarray", M: "np.ndarray", planes: "np.ndarray",
+    planes_per_band: int, threshold: float, pair_cap: int,
+) -> tuple["np.ndarray", "np.ndarray", "np.ndarray"] | None:
+    """Driver branch of :func:`embedding_near_dup_pairs` on the valid
+    vectors ``M`` (n × dim, float64): (id_a, id_b, cosine) of every
+    row pair that shares a band bucket and reaches ``threshold``, or
+    ``None`` as soon as more than ``pair_cap`` pairs are found (a
+    mega-cluster of duplicates: m copies give m(m-1)/2 pairs).
+
+    Sharing a bucket and reaching the threshold are independent tests
+    of one pair, so the verify runs first, as one blocked Gram product
+    of the normalized rows, and only the pairs above the threshold are
+    checked for a shared bucket. Below the cap the dense product is the
+    cheaper order: at the loose settings near-dup audits use (2 planes
+    per band) the in-bucket products of all bands cover more entries
+    than the n²/2 of the Gram matrix."""
+    bk = _srp_band_buckets(M, planes, planes_per_band)
+    with np.errstate(divide="ignore", invalid="ignore"):
+        M = M / np.linalg.norm(M, axis=1, keepdims=True)
+    n = len(M)
+    step = max(1, _GRAM_BLOCK // max(n, 1))
+    empty = np.zeros(0, dtype=np.int64)
+    rows, cols, cos = [empty], [empty], [np.zeros(0)]
+    found = 0
+    for lo in range(0, n, step):
+        S = M[lo:lo + step] @ M.T
+        i, j = np.nonzero(S >= threshold)
+        c = S[i, j]
+        i = i + lo
+        keep = j > i
+        i, j, c = i[keep], j[keep], c[keep]
+        keep = (bk[i] == bk[j]).any(axis=1)
+        found += int(keep.sum())
+        if found > pair_cap:
+            return None
+        rows.append(i[keep])
+        cols.append(j[keep])
+        cos.append(c[keep])
+    i, j, c = (np.concatenate(x) for x in (rows, cols, cos))
+    a, b = ids[i], ids[j]
+    a, b = np.minimum(a, b), np.maximum(a, b)
+    # repeated ids: one row per id pair, its largest cosine (the
+    # distributed branch's groupBy(id_a, id_b).max)
+    order = np.lexsort((-c, b, a))
+    a, b, c = a[order], b[order], c[order]
+    first = np.ones(len(a), dtype=bool)
+    first[1:] = (a[1:] != a[:-1]) | (b[1:] != b[:-1])
+    return a[first], b[first], c[first]
+
+
 def embedding_near_dup_pairs(
     df: DataFrame,
     threshold: float = 0.95,
@@ -360,23 +437,73 @@ def embedding_near_dup_pairs(
     planes_per_band: int = 4,
     num_bands: int = 16,
     seed: int = 42,
+    driver_threshold: int | None = None,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (id_a < id_b, cosine >=
     threshold) via the same SRP-LSH bucketing — candidates only, then
-    exact cosine verify.
+    exact cosine verify. Null and wrong-length vectors pair with
+    nothing.
 
-    The verify runs per (band, bucket) group with ``applyInPandas``:
-    one shuffle of the bucketized vectors, then an in-group pairwise
-    matmul (normalize once per vector, S = M·Mᵀ), emitting ONLY
-    above-threshold pairs. Candidate pairs are never materialized as
-    rows — the previous self-join + dropDuplicates shape shuffled every
-    candidate pair with both 64-float vectors attached (~GBs at 2k
-    vectors / low threshold) and scored them with interpreted
-    per-element lambdas; this shape moves each vector ``num_bands``
-    times, total work per group is one BLAS call, and the final dedup
-    shuffles only survivors. Skewed buckets (a mega-cluster of dups)
-    should be salted upstream or capped via ``planes_per_band``."""
+    Dual path (see :mod:`.bounded`). Inputs of at most
+    ``driver_threshold`` rows (default: as many as fit
+    ``bounded.DRIVER_BYTES`` of driver working set) run on the
+    driver: one bounded Arrow collect, then SRP projections with the
+    same planes, band buckets and the cosine verify in numpy
+    (:func:`_near_dup_pairs_np`) — no Python workers, no shuffle.
+    More than :data:`PAIR_CAP` pairs above the threshold send the input
+    to the distributed branch. ``driver_threshold=0`` forces it.
+
+    Distributed branch: the verify runs per (band, bucket) group with
+    ``applyInPandas``: one shuffle of the bucketized vectors, then an
+    in-group pairwise matmul (normalize once per vector, S = M·Mᵀ),
+    emitting ONLY above-threshold pairs. Candidate pairs are never
+    materialized as rows — the previous self-join + dropDuplicates
+    shape shuffled every candidate pair with both 64-float vectors
+    attached (~GBs at 2k vectors / low threshold) and scored them with
+    interpreted per-element lambdas; this shape moves each vector
+    ``num_bands`` times, total work per group is one BLAS call, and the
+    final dedup shuffles only survivors. Skewed buckets (a mega-cluster
+    of dups) should be salted upstream or capped via
+    ``planes_per_band``.
+
+    Both branches round the cosine in Spark, so values and schema
+    match; tests pin driver == distributed."""
     all_planes = _srp_planes(dim, planes_per_band * num_bands, seed)
+    if driver_threshold is None:
+        # float64 vectors and their normalized copy, the float32
+        # collected copy, projections and sign bits
+        driver_threshold = row_cap(4 * (5 * dim + 4 * planes_per_band * num_bands))
+    # wrong-length vectors pair with nothing: null them JVM-side so
+    # every collected row is at most ``dim`` floats wide
+    fixed = F.when(F.size(vec_col) == dim, F.col(vec_col)).alias(vec_col)
+    local = bounded_collect(
+        df.select(id_col, fixed), driver_threshold, "embedding_near_dup_pairs"
+    )
+    found = None
+    if local is not None:
+        vecs = local.column(1).combine_chunks()
+        valid = pc.fill_null(pc.equal(pc.list_value_length(vecs), dim), False)
+        M = (
+            pc.filter(vecs, valid).flatten()
+            .to_numpy(zero_copy_only=False).astype(np.float64).reshape(-1, dim)
+        )
+        ids = pc.filter(local.column(0), valid).to_numpy().astype(np.int64)
+        found = _near_dup_pairs_np(
+            ids, M, np.asarray(all_planes, dtype=np.float64), planes_per_band,
+            threshold, PAIR_CAP,
+        )
+        if found is None:
+            bounded_log.info(
+                "embedding_near_dup_pairs: distributed path, > %d pairs", PAIR_CAP
+            )
+    if found is not None:
+        a, b, c = found
+        pairs = df.sparkSession.createDataFrame(
+            pa.table({"id_a": a, "id_b": b, "cosine": c}),
+            "id_a bigint, id_b bigint, cosine double",
+        )
+        return pairs.select("id_a", "id_b", F.round("cosine", 4).alias("cosine"))
+
     eb = _bucketize(df, id_col, vec_col, all_planes, planes_per_band, num_bands)
 
     def score_group(pdf: pd.DataFrame) -> pd.DataFrame:

@@ -42,9 +42,36 @@ def ensure_min_partitions(df: DataFrame, target: int | None = None) -> DataFrame
     in the 100 TB path.
     """
     target = target or df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < target:
+    n = _planned_partitions(df)
+    if n is None:
+        # the RDD conversion executes any AQE shuffle-map stages of
+        # df's plan, which the real query then recomputes
+        n = df.rdd.getNumPartitions()
+    if n < target:
         return df.repartition(target)
     return df
+
+
+def _planned_partitions(df: DataFrame) -> int | None:
+    """Partition count of ``df`` when an explicit ``repartition(n, ...)``
+    exchange fixes it, read from the physical plan without running a
+    job; ``None`` otherwise. The count is taken only when the plan's
+    root reports that exchange's partitioning unchanged — any other
+    exchange (AQE may coalesce it), a ``coalesce``, or a node with
+    several children on the way down gives ``None``."""
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+        plan = plan.initialPlan()
+    root_n = plan.outputPartitioning().numPartitions()
+    node = plan
+    while node.getClass().getSimpleName() != "ShuffleExchangeExec":
+        if node.children().size() != 1:
+            return None
+        node = node.children().head()
+    if node.shuffleOrigin().toString() != "REPARTITION_BY_NUM":
+        return None
+    n = node.outputPartitioning().numPartitions()
+    return n if n == root_n else None
 
 
 #: (partial_fn, merge_fn) per supported aggregate: phase 1 computes

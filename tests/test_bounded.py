@@ -1,0 +1,241 @@
+"""Bounded driver path (meta_frame_spark.operators.bounded) and the
+dual-path operators built on it: each operator's driver branch must
+return exactly what its distributed branch (``driver_threshold=0``)
+returns, schema included."""
+
+import logging
+from itertools import combinations
+
+import numpy as np
+import pyarrow as pa
+import pytest
+from pyspark.sql import functions as F
+
+from meta_frame_spark.operators import bounded, dedup, similarity
+from meta_frame_spark.operators.bounded import bounded_collect
+from meta_frame_spark.operators.dedup import dup_clusters, minhash_lsh_dedup
+from meta_frame_spark.operators.similarity import embedding_near_dup_pairs
+
+DOC_SCHEMA = "doc_id bigint, text string"
+VEC_SCHEMA = "vec_id bigint, embedding array<float>"
+PAIR_SCHEMA = "id_a bigint, id_b bigint"
+
+#: Edge rows per input kind. Documents: null and empty texts (the empty
+#: pair is a Jaccard-1 duplicate), leading whitespace, texts shorter
+#: than the shingle size, and (9, 10) at exactly the 0.5 threshold
+#: (3-shingle sets {xyz, yzw, zwv} and {xyz, yzw, zwq}). Vectors (dim
+#: 4): null, wrong-length and zero vectors, an exact duplicate, and
+#: (1, 2) at exactly cosine 0.6 (3/5, exact in binary arithmetic).
+EDGE_DOCS = [
+    (1, None), (2, None), (3, ""), (4, ""), (5, " the cat sat"),
+    (6, "the cat sat"), (7, "a b"), (8, "a b"), (9, "x y z w v"),
+    (10, "x y z w q"), (11, "nothing like the others at all"),
+]
+EDGE_VECS = [
+    (1, [1.0, 0.0, 0.0, 0.0]), (2, [3.0, 4.0, 0.0, 0.0]), (3, None),
+    (4, [1.0, 0.0, 0.0]), (5, [1.0, 0.0, 0.0, 0.0]), (6, [0.0, 0.0, 0.0, 0.0]),
+    (7, [0.0, 1.0, 0.0, 0.0]), (8, [-1.0, 0.0, 0.5, 0.0]),
+]
+EDGE_PAIRS = [(1, 2), (2, 3), (5, 4), (7, 7), (8, 9), (9, 10), (10, 11)]
+#: 60 identical documents: one bucket of 1,770 pairs in every band.
+MEGA_DOCS = [(i, "same boilerplate footer text") for i in range(60)] + EDGE_DOCS[8:]
+#: 60 copies of one vector: 1,770 pairs at cosine 1.
+MEGA_VECS = [(100 + i, [0.5, 0.5, 0.5, 0.5]) for i in range(60)] + EDGE_VECS
+
+
+def _minhash(restrict):
+    def run(df, **kw):
+        return minhash_lsh_dedup(
+            df, threshold=0.5, num_hashes=64, num_bands=32, shingle_n=3,
+            restrict_to_candidates=restrict, **kw,
+        )
+    return run
+
+
+def _emb_edge(df, **kw):
+    return embedding_near_dup_pairs(
+        df, threshold=0.6, dim=4, planes_per_band=1, num_bands=8, **kw,
+    )
+
+
+def _emb_fixture(df, **kw):
+    return embedding_near_dup_pairs(
+        df, threshold=0.4, planes_per_band=2, num_bands=32, **kw,
+    )
+
+
+def _fixture(name):
+    def load(spark, sf_dir):
+        return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    return load
+
+
+def _fixture_pairs(spark, sf_dir):
+    return _minhash(False)(_fixture("documents")(spark, sf_dir))
+
+
+def _rows(rows, schema):
+    return lambda spark, sf_dir: spark.createDataFrame(rows, schema)
+
+
+#: (case id, input builder, operator run(df, **kw), a row
+#: the output must hold — proof the edge case is exercised — or None)
+CASES = [
+    ("minhash-edge", _rows(EDGE_DOCS, DOC_SCHEMA), _minhash(False), (9, 10, 0.5)),
+    ("minhash-restrict-edge", _rows(EDGE_DOCS, DOC_SCHEMA), _minhash(True), (3, 4, 1.0)),
+    ("minhash-single", _rows(EDGE_DOCS[4:5], DOC_SCHEMA), _minhash(False), None),
+    ("minhash-empty", _rows([], DOC_SCHEMA), _minhash(False), None),
+    ("minhash-fixture", _fixture("documents"), _minhash(False), None),
+    ("minhash-mega-bucket", _rows(MEGA_DOCS, DOC_SCHEMA), _minhash(False), (0, 59, 1.0)),
+    ("emb-edge", _rows(EDGE_VECS, VEC_SCHEMA), _emb_edge, (1, 2, 0.6)),
+    ("emb-single", _rows(EDGE_VECS[:1], VEC_SCHEMA), _emb_edge, None),
+    ("emb-empty", _rows([], VEC_SCHEMA), _emb_edge, None),
+    ("emb-fixture", _fixture("embeddings"), _emb_fixture, None),
+    ("emb-mega-cluster", _rows(MEGA_VECS, VEC_SCHEMA), _emb_edge, (100, 159, 1.0)),
+    ("clusters-edge", _rows(EDGE_PAIRS, PAIR_SCHEMA), dup_clusters, (7, 7)),
+    ("clusters-single", _rows(EDGE_PAIRS[:1], PAIR_SCHEMA), dup_clusters, (2, 1)),
+    ("clusters-empty", _rows([], PAIR_SCHEMA), dup_clusters, None),
+    ("clusters-fixture", _fixture_pairs, dup_clusters, None),
+]
+
+
+@pytest.mark.parametrize(
+    "build,run,must_hold", [c[1:] for c in CASES], ids=[c[0] for c in CASES]
+)
+def test_driver_branch_equals_distributed(spark, sf_dir, caplog, build, run, must_hold):
+    df = build(spark, sf_dir)
+    with caplog.at_level(logging.INFO, logger="meta_frame_spark.operators.bounded"):
+        driver = run(df)
+    assert any(": driver path," in m for m in caplog.messages), caplog.messages
+    distributed = run(df, driver_threshold=0)
+    assert driver.schema == distributed.schema
+    got = sorted(tuple(r) for r in driver.collect())
+    want = sorted(tuple(r) for r in distributed.collect())
+    assert got == want
+    if must_hold is not None:
+        assert must_hold in got
+
+
+def test_bounded_collect_logs_each_branch(spark, caplog, monkeypatch):
+    df = spark.range(5)
+    with caplog.at_level(logging.INFO, logger="meta_frame_spark.operators.bounded"):
+        table = bounded_collect(df, 10, "op_a")
+        assert bounded_collect(df, 4, "op_b") is None
+        assert bounded_collect(df, 4, "op_b", row_bytes=F.lit(1)) is None
+        assert bounded_collect(df, 0, "op_c") is None
+        monkeypatch.setattr(bounded, "DRIVER_BYTES", 39)
+        assert bounded_collect(df, 10, "op_d") is None
+        monkeypatch.setattr(bounded, "DRIVER_BYTES", 40)
+        assert bounded_collect(df, 10, "op_e", row_bytes=F.col("id") * 4) == table
+        assert bounded_collect(df, 10, "op_f", row_bytes=F.col("id") * 4 + 1) is None
+    assert table.column("id").to_pylist() == [0, 1, 2, 3, 4]
+    assert caplog.messages == [
+        "op_a: driver path, 5 rows <= 10",
+        "op_b: distributed path, > 4 rows",
+        "op_b: distributed path, > 4 rows",
+        "op_c: distributed path, driver_threshold=0",
+        "op_d: distributed path, 5 rows hold 40 bytes > 39",
+        "op_e: driver path, 5 rows <= 10",
+        "op_f: distributed path, 5 rows need 45 bytes > 40",
+    ]
+
+
+def test_operator_logs_branch_with_size(spark, caplog):
+    docs = spark.createDataFrame(EDGE_DOCS, DOC_SCHEMA)
+    with caplog.at_level(logging.INFO, logger="meta_frame_spark.operators.bounded"):
+        minhash_lsh_dedup(docs, driver_threshold=20)
+        minhash_lsh_dedup(docs, driver_threshold=5)
+    assert caplog.messages == [
+        "minhash_lsh_dedup: driver path, 11 rows <= 20",
+        "minhash_lsh_dedup: distributed path, > 5 rows",
+    ]
+
+
+def test_driver_branch_starts_no_python_worker(spark):
+    """The driver branch's result plan is a local relation plus the
+    Spark-side round: no Python UDF, no exchange."""
+    docs = spark.createDataFrame(EDGE_DOCS, DOC_SCHEMA)
+    vecs = spark.createDataFrame(EDGE_VECS, VEC_SCHEMA)
+    for out in (minhash_lsh_dedup(docs), _emb_edge(vecs)):
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert "Python" not in plan and "Exchange" not in plan, plan
+
+
+def test_minhash_gate_bounds_bytes_before_collecting(spark, caplog, monkeypatch):
+    """Long documents over the byte budget take the distributed branch
+    after a gate that collects only per-row sizes: the token hashes
+    never reach the driver."""
+    text = " ".join(f"w{i}" for i in range(2000))
+    docs = spark.createDataFrame([(i, text) for i in range(10)], DOC_SCHEMA)
+    monkeypatch.setattr(bounded, "DRIVER_BYTES", 100_000)  # each doc needs ~32 KB
+    collected = []
+    to_arrow = type(docs).toArrow
+
+    def recording(self):
+        table = to_arrow(self)
+        collected.append(table.column_names)
+        return table
+
+    monkeypatch.setattr(type(docs), "toArrow", recording)
+    with caplog.at_level(logging.INFO, logger="meta_frame_spark.operators.bounded"):
+        out = _minhash(False)(docs)
+    assert collected == [["_bytes"]]
+    assert caplog.messages == [
+        f"minhash_lsh_dedup: distributed path, 10 rows need "
+        f"{10 * (16 * 2000 + 8 * 64 + dedup._DOC_OVERHEAD)} bytes > 100000"
+    ]
+    assert out.count() == 45  # every pair of the ten identical documents
+
+
+def test_minhash_mega_bucket_over_pair_cap_goes_distributed(spark, caplog, monkeypatch):
+    docs = spark.createDataFrame(MEGA_DOCS, DOC_SCHEMA)
+    monkeypatch.setattr(dedup, "PAIR_CAP", 1_000)  # the bucket holds 1,770 a band
+    with caplog.at_level(logging.INFO, logger="meta_frame_spark.operators.bounded"):
+        got = sorted(tuple(r) for r in _minhash(False)(docs).collect())
+    assert caplog.messages == [
+        f"minhash_lsh_dedup: driver path, {len(MEGA_DOCS)} rows <= {dedup.DOC_CAP}",
+        "minhash_lsh_dedup: distributed path, band buckets hold > 1000 pairs",
+    ]
+    want = sorted(tuple(r) for r in _minhash(False)(docs, driver_threshold=0).collect())
+    assert got == want and (0, 59, 1.0) in got
+
+
+def test_emb_mega_cluster_over_pair_cap_goes_distributed(spark, caplog, monkeypatch):
+    vecs = spark.createDataFrame(MEGA_VECS, VEC_SCHEMA)
+    monkeypatch.setattr(similarity, "PAIR_CAP", 1_000)  # the copies give 1,770
+    with caplog.at_level(logging.INFO, logger="meta_frame_spark.operators.bounded"):
+        got = sorted(tuple(r) for r in _emb_edge(vecs).collect())
+    assert caplog.messages[1:] == [
+        "embedding_near_dup_pairs: distributed path, > 1000 pairs",
+    ]
+    want = sorted(tuple(r) for r in _emb_edge(vecs, driver_threshold=0).collect())
+    assert got == want and (100, 159, 1.0) in got
+
+
+def test_minhash_pair_cap_counts_buckets_before_building_pairs():
+    """30,000 identical documents (4.5e8 pairs a band) are declined from
+    the bucket sizes alone, without building a pair."""
+    n = 30_000
+    hashes = pa.array([[11, 22, 33, 44]] * n, type=pa.list_(pa.int64()))
+    assert dedup._minhash_pairs_np(hashes, 64, 32, 3, 0.5, 42, dedup.PAIR_CAP) is None
+    found = dedup._minhash_pairs_np(hashes.slice(0, 50), 64, 32, 3, 0.5, 42, dedup.PAIR_CAP)
+    assert len(found[0]) == 50 * 49 // 2 and set(found[2]) == {1.0}
+
+
+def test_bucket_pairs_lists_every_pair_sharing_a_key():
+    keys = np.random.default_rng(3).integers(0, 40, 300).astype(np.int32)
+    i, j = dedup._bucket_pairs(keys)
+    want = {(x, y) for x, y in combinations(range(len(keys)), 2) if keys[x] == keys[y]}
+    assert len(i) == len(want) and set(zip(i.tolist(), j.tolist())) == want
+
+
+def test_band_keys_match_spark_hash(spark):
+    """The driver branch's bucket key is Spark's ``hash`` of the band."""
+    rng = np.random.default_rng(5)
+    m = rng.integers(-(1 << 63), (1 << 63) - 1, size=(200, 3), dtype=np.int64)
+    m[0] = [0, -1, (1 << 63) - 1]
+    m[1] = [-(1 << 63), 1, (1 << 31) - 1]
+    df = spark.createDataFrame([(i, row.tolist()) for i, row in enumerate(m)],
+                               "i int, band array<bigint>")
+    want = [r[0] for r in df.orderBy("i").select(F.hash("band")).collect()]
+    assert dedup._spark_hash_rows(m).tolist() == want

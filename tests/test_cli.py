@@ -1,6 +1,7 @@
 """CLI entrypoint (python -m meta_frame_spark)."""
 
 import json
+import os
 
 import pytest
 
@@ -10,6 +11,9 @@ from meta_frame_spark.config.model import (
     validate_pipeline_config,
     validate_tree_config,
 )
+
+#: this checkout's root (the examples/ and tools/ scripts live under it)
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def test_init_example_writes_valid_configs(tmp_path):
@@ -57,7 +61,7 @@ def test_example_curation_pipeline_end_to_end(spark, sf_dir, tmp_path):
     story: the full quality->dedup->decontaminate->split->pack->export
     flow must run end to end and only ever shrink the corpus."""
     import sys as _sys
-    _sys.path.insert(0, "/root/repo/examples")
+    _sys.path.insert(0, os.path.join(REPO, "examples"))
     from curate_corpus import curate
 
     counts = curate(spark, sf_dir, str(tmp_path / "out"))
@@ -133,7 +137,7 @@ def test_example_web_pipeline_runs(spark, sf_dir, tmp_path):
     row/byte accounting."""
     import sys as _sys
 
-    _sys.path.insert(0, "/root/repo/examples")
+    _sys.path.insert(0, os.path.join(REPO, "examples"))
     from web_pipeline import run_web_pipeline
 
     counts = run_web_pipeline(spark, sf_dir, str(tmp_path / "wet"))
@@ -157,15 +161,13 @@ def test_driver_evidence_freshness_gate():
     new query without any driver row yet must hold a window slot
     (never-orphaned). Fails in-suite, so freshness can never silently
     decay between rounds."""
-    import os
-
     import pytest as _pt
 
-    if not os.path.exists("/root/repo/CORRECTNESS_r01.json"):
+    if not os.path.exists(os.path.join(REPO, "CORRECTNESS_r01.json")):
         _pt.skip("driver correctness records not present")
     import sys as _sys
 
-    _sys.path.insert(0, "/root/repo/tools")
+    _sys.path.insert(0, os.path.join(REPO, "tools"))
     from check_correctness import staleness_report
 
     rep = staleness_report()
@@ -174,12 +176,37 @@ def test_driver_evidence_freshness_gate():
     assert rep["orphaned_new"] == [], rep["orphaned_new"]
 
 
+def test_check_correctness_imports_its_own_checkout(tmp_path):
+    """tools/check_correctness.py must put the checkout it lives in on
+    sys.path, not a fixed directory: the benchmark imports it before
+    the program, so a hard-coded root would make a run from any other
+    checkout time (and hash) that root's code instead of its own."""
+    import shutil
+    import subprocess
+    import sys as _sys
+
+    (tmp_path / "tools").mkdir()
+    shutil.copy(os.path.join(REPO, "tools", "check_correctness.py"), tmp_path / "tools")
+    (tmp_path / "__spark_entry__.py").write_text("")
+    elsewhere = tmp_path / "elsewhere"
+    elsewhere.mkdir()
+    out = subprocess.run(
+        [_sys.executable, "-c",
+         "import sys; sys.path.insert(0, sys.argv[1]); "
+         "import check_correctness, __spark_entry__; "
+         "print(check_correctness.ROOT); print(__spark_entry__.__file__)",
+         str(tmp_path / "tools")],
+        cwd=elsewhere, capture_output=True, text=True, check=True,
+    ).stdout.split()
+    assert out == [str(tmp_path), str(tmp_path / "__spark_entry__.py")]
+
+
 def test_example_monitor_events_runs(spark, sf_dir):
     """examples/monitor_events.py: the monitoring composition (spine ->
     EWMA -> robust anomaly -> drift -> hot keys) must run end to end
     with consistent frames."""
     import sys as _sys
-    _sys.path.insert(0, "/root/repo/examples")
+    _sys.path.insert(0, os.path.join(REPO, "examples"))
     from monitor_events import monitor
 
     report = monitor(spark, sf_dir)
@@ -232,7 +259,7 @@ def test_example_targeted_selection_end_to_end(spark, sf_dir):
     the target label (the kept slice's NB-predicted majority is the
     English target)."""
     import sys as _sys
-    _sys.path.insert(0, "/root/repo/examples")
+    _sys.path.insert(0, os.path.join(REPO, "examples"))
     from select_for_target import select_for_target
 
     stats = select_for_target(spark, sf_dir)
@@ -279,7 +306,7 @@ def test_example_corpus_health_runs(spark, sf_dir):
     n_docs, totals match the corpus) and a language histogram that
     accounts for every doc."""
     import sys as _sys
-    _sys.path.insert(0, "/root/repo/examples")
+    _sys.path.insert(0, os.path.join(REPO, "examples"))
     from corpus_health import corpus_health
 
     report = corpus_health(spark, sf_dir)
@@ -304,7 +331,7 @@ def test_example_plan_mixture_runs(spark, sf_dir):
     1, and the materialized mix respects the per-language keep
     fractions (<= allocation-implied counts, deterministic)."""
     import sys as _sys
-    _sys.path.insert(0, "/root/repo/examples")
+    _sys.path.insert(0, os.path.join(REPO, "examples"))
     from plan_mixture import plan_mixture
 
     out = plan_mixture(spark, sf_dir, budget=30_000.0, max_epochs=1.5)
@@ -333,7 +360,7 @@ def test_example_eval_report_runs(spark, sf_dir):
     end to end and honor the invariants its staging guarantees."""
     import sys as _sys
 
-    _sys.path.insert(0, "/root/repo/examples")
+    _sys.path.insert(0, os.path.join(REPO, "examples"))
     from eval_report import run_eval_report
 
     r = run_eval_report(spark, sf_dir)

@@ -187,7 +187,9 @@ def test_near_dup_pipelines_have_no_cartesian_product(spark, sf_dir):
     """Every near-dup path must pair docs through banded-LSH equi-joins,
     never an n^2 join: an all-pairs shape that passes at test scale is
     a guaranteed non-starter on a real corpus (the previous simhash
-    query's crossJoin could not even finish at sf0.1)."""
+    query's crossJoin could not even finish at sf0.1).
+    ``driver_threshold=0`` pins the distributed branch, which the
+    fixture corpus would otherwise skip for the bounded driver one."""
     from meta_frame_spark.operators.dedup import minhash_lsh_dedup
     from meta_frame_spark.operators.similarity import embedding_near_dup_pairs
 
@@ -195,8 +197,9 @@ def test_near_dup_pipelines_have_no_cartesian_product(spark, sf_dir):
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     for df in (
         minhash_lsh_dedup(docs, threshold=0.9, num_hashes=64, num_bands=16,
-                          shingle_n=3),
-        embedding_near_dup_pairs(emb, threshold=0.4, num_bands=64),
+                          shingle_n=3, driver_threshold=0),
+        embedding_near_dup_pairs(emb, threshold=0.4, num_bands=64,
+                                 driver_threshold=0),
     ):
         plan = _plan(df)
         assert "CartesianProduct" not in plan
@@ -243,6 +246,7 @@ def test_release_tracked_caches_drops_operator_persists(spark, sf_dir):
     pairs = minhash_lsh_dedup(
         docs, threshold=0.5, num_hashes=16, num_bands=4, shingle_n=3,
         restrict_to_candidates=False,
+        driver_threshold=0,  # the distributed branch holds the persist
     )
     pairs.count()  # materializes the tracked persist
     assert len(_TRACKED) >= 1
@@ -767,9 +771,10 @@ def test_ann_dedup_family_quadratic_guard(spark, sf_dir):
     audited allowance; any NEW nested loop (e.g. a candidates-hook
     regression that silently falls back to all-pairs) exceeds the pin
     and fails here before it can ship."""
+    import os as _os
     import sys as _sys
 
-    _sys.path.insert(0, "/root/repo")
+    _sys.path.insert(0, _os.path.dirname(_os.path.dirname(_os.path.abspath(__file__))))
     import __spark_entry__ as e
 
     # audited NLJ allowances: broadcast query-batch joins in the
@@ -810,9 +815,10 @@ def test_r14_eval_ops_plan_shapes(spark, sf_dir):
     over the bounded 60-row sample (its audited allowance — anything
     more means the sample bound broke); the one-row audits never
     cartesian."""
+    import os as _os
     import sys as _sys
 
-    _sys.path.insert(0, "/root/repo")
+    _sys.path.insert(0, _os.path.dirname(_os.path.dirname(_os.path.abspath(__file__))))
     import __spark_entry__ as e
 
     qs = e.queries()

@@ -293,3 +293,29 @@ def test_embedding_outliers_flags_planted_stray(spark):
     assert len(flagged) < 10  # the tight cloud mostly passes
     stray = next(r for r in out if r.vec_id == 999)
     assert stray.z > 2.0 and stray.dist > 10
+
+
+@pytest.mark.parametrize("n", [2, 3, 5])
+def test_shingles_match_per_window_slice_form(spark, n):
+    """_shingles zips n shifted slices of the token array (linear in
+    tokens); it must equal the per-window form it replaced, which
+    sliced the split array once per window, on every edge row."""
+    from meta_frame_spark.operators.dedup import _shingles
+
+    def per_window(col, n):
+        tokens = F.split(F.lower(F.col(col)), r"\s+")
+        k = F.greatest(F.size(tokens) - F.lit(n - 1), F.lit(1))
+        return F.transform(
+            F.sequence(F.lit(0), k - 1),
+            lambda i: F.concat_ws(" ", F.slice(tokens, i + 1, n)),
+        )
+
+    df = spark.createDataFrame(
+        [(1, None), (2, ""), (3, "  Lead space"), (4, "a"), (5, "a b"),
+         (6, "The cat sat on the mat"), (7, "trailing  space  "), (8, "x\ty\nz w")],
+        "id int, text string",
+    )
+    rows = df.select("id", _shingles("text", n).alias("new"),
+                     per_window("text", n).alias("old")).collect()
+    assert all(r.new == r.old for r in rows), [r for r in rows if r.new != r.old]
+    assert rows[0].new == [""]

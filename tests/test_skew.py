@@ -435,3 +435,30 @@ def test_corpus_concentration_hand_cases(spark):
     r = corpus_concentration(sk, "src").collect()[0]
     assert r.gini == 0.25 and r.top_share == 0.75
     assert r.entropy == round(math.log(4) - 3 * math.log(3) / 4, 6)
+
+
+def test_ensure_min_partitions_reads_repartition_from_plan(spark, sf_dir):
+    """On an input whose partition count an explicit repartition(n, ...)
+    fixes, the count comes from the physical plan: no job runs (the RDD
+    probe would execute the repartition's shuffle-map stage, which the
+    real query then recomputes), and the decision is the probe's."""
+    from meta_frame_spark.operators.skew import _planned_partitions, ensure_min_partitions
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    sc = spark.sparkContext
+    st = sc.statusTracker()
+    rep = docs.repartition(4, "doc_id").select("doc_id", F.upper("text").alias("t"))
+    sc.setJobGroup("ensure_min_partitions_plan", "test")
+    try:
+        assert ensure_min_partitions(rep, target=4) is rep
+        assert ensure_min_partitions(rep, target=8) is not rep
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert st.getJobIdsForGroup("ensure_min_partitions_plan") == []
+    # shapes the plan cannot settle fall back to the probe; where it
+    # does settle, it agrees with the probe
+    for df in (rep, docs.repartition(3), docs, docs.repartition(4, "doc_id").coalesce(2),
+               docs.repartition(4, "doc_id").groupBy("source").count()):
+        n = _planned_partitions(df)
+        assert n is None or n == df.rdd.getNumPartitions()
+    assert _planned_partitions(docs.repartition(4, "doc_id").coalesce(2)) is None

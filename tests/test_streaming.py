@@ -388,7 +388,7 @@ def test_stream_dir_prunes_stale_links(tmp_path, monkeypatch):
     import os
     import sys
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     from __spark_entry__ import _stream_dir
 
     monkeypatch.setenv("TMPDIR", str(tmp_path))

@@ -22,11 +22,14 @@ python tools/check_correctness.py --staleness
 from __future__ import annotations
 
 import hashlib
+import os
 import sys
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+#: the checkout this tool belongs to; its program is the one imported
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part",
@@ -62,13 +65,12 @@ def table_hash(rows, colnames) -> tuple[int, str]:
 MAX_STALE_ROUNDS = 4
 
 
-def staleness_report(repo_dir: str = "/root/repo") -> dict:
+def staleness_report(repo_dir: str = ROOT) -> dict:
     """Compute each registered query's latest green driver round from
     the CORRECTNESS_r*.json records, plus the violation lists the
     gate checks. Pure file parsing — no Spark session."""
     import glob
     import json
-    import os
     import re
 
     import __spark_entry__ as entrymod
