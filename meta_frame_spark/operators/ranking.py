@@ -330,17 +330,20 @@ def quantile_match(
 
     Scale (exact mode): one group-window shuffle, one GLOBAL sort
     for the reference ranks (single task — same bounded-input caveat
-    as ``rrf_fuse``'s window mode), one equi-join on the rank index.
+    as ``rrf_fuse``'s window mode), one equi-join on the rank index;
+    the reference size N is a one-row aggregate broadcast into the
+    index expression, so building the frame runs no job.
     The exact tool for calibration sets that fit a task; use
     ``mode="bucketed"`` for unbounded corpora.
     """
     out = out_col or f"{value_col}_cal"
-    for reserved in (out, "_idx"):
+    for reserved in (out, "_idx", "_ref_n"):
         if reserved in df.columns:
             raise ValueError(
                 f"quantile_match: column {reserved!r} already exists in "
-                "the input (reserved for the output/rank index) — pass a "
-                "different out_col or rename the input column"
+                "the input (reserved for the output, rank index and "
+                "reference size) — pass a different out_col or rename "
+                "the input column"
             )
     if mode not in ("exact", "bucketed"):
         raise ValueError(f"mode must be exact|bucketed, got {mode!r}")
@@ -410,9 +413,11 @@ def quantile_match(
     # rejoin the output with an explicit NULL, as bucketed mode does.
     vtype = df.schema[value_col].dataType
     nn = df.filter(v.isNotNull())
-    n = nn.count()  # bounded driver scalar: reference size
-    if n == 0:
-        return df.withColumn(out, F.lit(None).cast(vtype))
+    # the reference size as a lazy one-row aggregate broadcast into the
+    # index expression: no eager count() re-running the upstream as a
+    # query of its own. An all-null input leaves nn empty, so every
+    # row takes the null branch below.
+    n = nn.agg(F.count(F.lit(1)).alias("_ref_n"))
     glob_w = Window.orderBy(v.asc(), F.col(id_col).asc())
     ref = nn.select(
         F.row_number().over(glob_w).alias("_idx"), v.alias(out)
@@ -421,11 +426,14 @@ def quantile_match(
         v.asc(), F.col(id_col).asc()
     )
     idx = (
-        F.round(F.percent_rank().over(grp_nn_w) * F.lit(float(n - 1)), 0)
-        .cast("long") + F.lit(1)
+        F.round(
+            F.percent_rank().over(grp_nn_w) * (F.col("_ref_n") - 1).cast("double"), 0
+        ).cast("long") + F.lit(1)
     )
     scored = (
-        nn.withColumn("_idx", idx)
+        nn.crossJoin(F.broadcast(n))
+        .withColumn("_idx", idx)
+        .drop("_ref_n")
         .join(ref, "_idx")
         .drop("_idx")
     )

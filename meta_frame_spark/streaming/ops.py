@@ -17,6 +17,7 @@ Scale design:
 
 from __future__ import annotations
 
+import re
 from collections.abc import Iterator
 from typing import TYPE_CHECKING
 
@@ -267,6 +268,28 @@ def run_to_parquet(
     q.awaitTermination()
 
 
+_FS_CHECKPOINT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
+_LOCAL_MASTER = re.compile(r"local(?:\[(\*|\d+)(?:\s*,\s*\d+)?\])?")
+
+
+def _local_task_slots(spark: SparkSession) -> int | None:
+    """Task slots of a ``local`` / ``local[N]`` / ``local[*]`` /
+    ``local[N, F]`` master (every task runs in the one driver JVM), or
+    ``None`` for any other master, ``local-cluster`` included."""
+    m = _LOCAL_MASTER.fullmatch(spark.sparkContext.master)
+    if m is None:
+        return None
+    if m.group(1) is None:
+        return 1
+    if m.group(1) == "*":
+        # what Spark itself sizes local[*] by
+        return spark.sparkContext._jvm.java.lang.Runtime.getRuntime().availableProcessors()
+    return int(m.group(1))
+
+
 def run_to_memory(
     stream_df: DataFrame,
     name: str,
@@ -279,31 +302,53 @@ def run_to_memory(
     sink would be kafka/delta/parquet). Returns the result as a batch
     DataFrame.
 
-    ``state_partitions`` temporarily overrides
-    ``spark.sql.shuffle.partitions`` for the streaming run only (the
-    value is bound into the query at ``start()`` and restored after):
-    every stateful operator initializes one state store PER shuffle
-    partition per stateful subtree, so a small local corpus pays
-    store-init latency 32x while holding trivial state (measured 6.2s
-    -> 2.4s on the stream-stream join at sf0.1 going 32 -> 8). On a
-    real cluster SIZE IT TO THE STATE, not to a constant: state
-    partitions are the unit of both parallelism and state-store
-    memory, so scale them with the number of distinct state rows the
-    query retains (group/key cardinality) up to ~2-3x total cores —
-    a 20-group complete-mode rollup holds 20 state rows at ANY corpus
-    size and pays pure store-init/commit overhead for every partition
-    beyond that, while a per-user keyed operator wants the full core
-    multiple.
+    Every conf below is set before ``start()`` (the query binds it
+    then) and restored in ``finally``, also when the query raises.
+
+    **State partitions** (``spark.sql.shuffle.partitions``): every
+    stateful operator keeps one state store per shuffle partition, per
+    stateful subtree (a stream-stream join keeps four per partition),
+    and every store costs a directory, a delta file, a checksum file,
+    two CRCs and a commit per batch. ``state_partitions`` overrides the
+    session default for this run; on a ``local[N]`` master the value
+    used — ``state_partitions``, or the session default when it is
+    ``None`` — is clamped to N, because in one JVM partitions beyond
+    the task slots add only stores and a second task wave, never
+    parallelism (``stream_join`` at local[4]: 32 stores -> 16, and its
+    ``chmod`` forks 200 -> 116). Other masters take the value as given.
+    There, SIZE IT TO THE STATE, not to a constant: state partitions
+    are the unit of both parallelism and state-store memory, so scale
+    them with the distinct state rows the query retains (group/key
+    cardinality) up to ~2-3x total cores — a 20-group complete-mode
+    rollup holds 20 state rows at ANY corpus size, while a per-user
+    keyed operator wants the full core multiple.
+
+    **Checkpoint manager.** With no session-wide
+    ``spark.sql.streaming.checkpointLocation`` the memory sink
+    checkpoints into a temporary local directory that Spark deletes
+    and nothing recovers from. That run uses
+    ``FileSystemBasedCheckpointFileManager``, which renames with
+    ``FileSystem.rename`` (POSIX ``rename(2)`` on ``file:``). Spark's
+    default FileContext manager looks up link status on every rename,
+    and without Hadoop's native library that forks ``readlink`` four
+    times per rename. Running the four ``stream_events`` benchmark
+    pipelines, the JVM started 1,360 child processes, 1,008 of them
+    ``readlink``; with this manager and the clamp above it starts 227-229
+    and no ``readlink`` (``tools/jvm_process_starts.py`` counts them).
+    ``.crc`` and state checksum files are still written. A durable
+    checkpoint — a session-wide checkpointLocation, or
+    ``run_to_parquet``'s — keeps Spark's default manager. 221 of the
+    remaining forks are ``chmod`` from Hadoop's ``setPermission`` on
+    every file create; only native IO removes them.
 
     ``no_data_batches=False`` additionally disables the trailing
-    NO-DATA micro-batch (``spark.sql.streaming.noDataMicroBatches``,
-    bound at ``start()`` and restored after). After the last data
-    batch advances the watermark, that extra empty batch exists ONLY
-    to let event-time-final operators emit rows that become complete
-    when the watermark passes (left-outer interval-join nulls,
-    append-mode aggregation finals) and to evict expired state. For
-    shapes that emit everything in the batch that carries the data —
-    INNER stream-stream joins, ``dropDuplicatesWithinWatermark``
+    NO-DATA micro-batch (``spark.sql.streaming.noDataMicroBatches``).
+    After the last data batch advances the watermark, that extra empty
+    batch exists ONLY to let event-time-final operators emit rows that
+    become complete when the watermark passes (left-outer interval-join
+    nulls, append-mode aggregation finals) and to evict expired state.
+    For shapes that emit everything in the batch that carries the data
+    — INNER stream-stream joins, ``dropDuplicatesWithinWatermark``
     (first occurrence emits immediately), complete-mode aggregations —
     the no-data batch re-runs the whole stateful pipeline (state store
     load + commit per partition) to produce zero rows; skipping it is
@@ -311,13 +356,22 @@ def run_to_memory(
     and saves a full micro-batch of harness cost per run. Leave it ON
     for any left-outer join or append-mode windowed aggregation."""
     spark = stream_df.sparkSession
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    _ND_CONF = "spark.sql.streaming.noDataMicroBatches.enabled"
-    prev_nd = spark.conf.get(_ND_CONF)
-    if state_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
+    confs: dict[str, str] = {}
+    partitions = state_partitions
+    slots = _local_task_slots(spark)
+    if slots is not None:
+        if partitions is None:
+            partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        partitions = min(partitions, slots)
+    if partitions is not None:
+        confs["spark.sql.shuffle.partitions"] = str(partitions)
     if not no_data_batches:
-        spark.conf.set(_ND_CONF, "false")
+        confs["spark.sql.streaming.noDataMicroBatches.enabled"] = "false"
+    if spark.conf.get("spark.sql.streaming.checkpointLocation", None) is None:
+        confs["spark.sql.streaming.checkpointFileManagerClass"] = _FS_CHECKPOINT_MANAGER
+    prev = {k: spark.conf.get(k, None) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
     try:
         q = (
             stream_df.writeStream.format("memory")
@@ -328,8 +382,9 @@ def run_to_memory(
         )
         q.awaitTermination()
     finally:
-        if state_partitions is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
-        if not no_data_batches:
-            spark.conf.set(_ND_CONF, prev_nd)
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
     return spark.table(name)

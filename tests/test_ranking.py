@@ -133,6 +133,33 @@ def test_quantile_match_equalizes_group_distributions(spark):
         assert [c for _, c in vals] == sorted(c for _, c in vals)
 
 
+def test_quantile_match_exact_builds_without_a_job(spark, tmp_path):
+    """Exact mode's reference size rides the plan as a one-row
+    broadcast aggregate: building the frame must start no Spark job
+    (an eager count() re-ran the whole upstream as a query of its own),
+    and an all-null input still calibrates every row to NULL."""
+    from meta_frame_spark.operators.ranking import quantile_match
+
+    src = str(tmp_path / "scores")
+    spark.createDataFrame(
+        [("a", 1, 1.0), ("a", 2, 3.0), ("b", 3, 2.0), ("b", 4, None)],
+        "g string, id int, v double",
+    ).write.parquet(src)
+    df = spark.read.parquet(src).filter(F.col("id") > 0)
+    sc = spark.sparkContext
+    sc.setJobGroup("quantile_match_exact_build", "test")
+    try:
+        out = quantile_match(df, "v", ["g"], "id")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("quantile_match_exact_build") == []
+    assert sorted((r.id, r.v_cal) for r in out.collect()) == [
+        (1, 1.0), (2, 3.0), (3, 1.0), (4, None)
+    ]
+    all_null = quantile_match(df.filter(F.col("v").isNull()), "v", ["g"], "id")
+    assert [(r.id, r.v_cal) for r in all_null.collect()] == [(4, None)]
+
+
 def test_quantile_match_deterministic_and_single_row_group(spark):
     from meta_frame_spark.operators.ranking import quantile_match
 

@@ -147,6 +147,65 @@ def test_events_loader_normalizes_both_physical_ts_types(spark, tmp_path):
     assert rows_n == rows_u
 
 
+@pytest.mark.parametrize(
+    "layout", ["ts_ntz_us", "ts_utc_us", "ts_ns", "int64", "ts_int96", "fixture"]
+)
+def test_event_stream_schema_matches_spark_inference(spark, sf_dir, tmp_path, layout):
+    """The stream schema's ``ts`` type is read from the parquet footer
+    with no Spark job; it must equal what Spark's own schema inference
+    reads for every layout the events table has had or could take.
+    INT96 (legacy Spark/Hive writers), which pyarrow reports as a
+    nanosecond timestamp, is left to Spark's inference."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from meta_frame_spark.sources.events import event_stream_schema
+
+    micros = [1704103200000000, 1704110400123456]
+    ts = {
+        "ts_ntz_us": pa.array(micros, pa.timestamp("us")),
+        "ts_utc_us": pa.array(micros, pa.timestamp("us", tz="UTC")),
+        "ts_ns": pa.array([m * 1000 + 7 for m in micros], pa.timestamp("ns")),
+        "int64": pa.array(micros, pa.int64()),
+        "ts_int96": pa.array(micros, pa.timestamp("us")),
+    }
+    d = tmp_path / "src"
+    d.mkdir()
+    if layout == "fixture":
+        (d / "events.parquet").symlink_to(f"{sf_dir}/events.parquet")
+    else:
+        pq.write_table(pa.table({
+            "event_id": pa.array([1, 2], pa.int64()),
+            "ts": ts[layout],
+            "user_id": pa.array([10, 11], pa.int64()),
+            "event_type": pa.array(["view", "click"]),
+            "value": pa.array([1.0, 2.0], pa.float64()),
+            "props": pa.array(["{}", "{}"]),
+        }), str(d / "part-0.parquet"), use_deprecated_int96_timestamps=layout == "ts_int96")
+    (d / "_SUCCESS").write_text("")
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+
+    sc = spark.sparkContext
+    group = f"event_stream_schema_footer_{layout}"
+    sc.setJobGroup(group, "test")
+    try:
+        got = event_stream_schema(spark, str(d))["ts"].dataType
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert (jobs == []) == (layout != "ts_int96")
+    assert got == spark.read.parquet(str(d)).schema["ts"].dataType
+
+
+def test_event_stream_schema_empty_dir_falls_back_to_ntz(spark, tmp_path):
+    from pyspark.sql import types as T
+
+    from meta_frame_spark.sources.events import event_stream_schema
+
+    assert event_stream_schema(spark, str(tmp_path))["ts"].dataType == T.TimestampNTZType()
+    assert event_stream_schema(spark, str(tmp_path / "missing"))["ts"].dataType == T.TimestampNTZType()
+
+
 def test_text_and_binary_sources(spark, tmp_path):
     """Raw-corpus (text) and multimodal-asset (binaryFile) ingestion."""
     (tmp_path / "a.txt").write_text("line one\nline two\n")

@@ -321,33 +321,125 @@ def test_interval_left_outer_stream_emits_unmatched_after_watermark(spark, tmp_p
     assert 3 in rows and rows[3] is None          # unmatched -> null right
 
 
-def test_run_to_memory_rerun_same_name_and_conf_restore(spark, tmp_path):
-    """Driver queries reuse memory-sink names across runs in one
-    session (bench + correctness both call them); a second availableNow
-    run under the same queryName must work and state_partitions must
-    restore the session's shuffle-partition conf."""
-    import os
-    from meta_frame_spark.streaming.ops import (
-        dedup_events,
-        read_event_stream,
-        run_to_memory,
-    )
+_HARNESS_CONFS = (
+    "spark.sql.shuffle.partitions",
+    "spark.sql.streaming.noDataMicroBatches.enabled",
+    "spark.sql.streaming.checkpointFileManagerClass",
+)
 
+
+def _event_stream_dir(tmp_path, sf_dir):
     d = tmp_path / "ev"
     d.mkdir()
-    sf_dir = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
     (d / "events.parquet").symlink_to(f"{sf_dir}/events.parquet")
+    return str(d)
 
-    before = spark.conf.get("spark.sql.shuffle.partitions")
+
+def test_run_to_memory_rerun_same_name_and_conf_restore(spark, sf_dir, tmp_path):
+    """Registry queries reuse memory-sink names across runs in one
+    session (bench + correctness both call them); a second availableNow
+    run under the same queryName must work, and every conf the harness
+    scopes to the run (state partitions, no-data batches, checkpoint
+    manager) must be restored afterwards, also when the query raises."""
+    from meta_frame_spark.streaming.ops import dedup_events
+
+    d = _event_stream_dir(tmp_path, sf_dir)
+    before = {k: spark.conf.get(k, None) for k in _HARNESS_CONFS}
     for _ in range(2):
-        stream = read_event_stream(spark, str(d))
+        stream = read_event_stream(spark, d)
         out = run_to_memory(
             dedup_events(stream, keys=["user_id", "event_type"]),
             "mem_rerun_test", output_mode="append", state_partitions=4,
+            no_data_batches=False,
         )
         n = out.count()
         assert n > 0
-    assert spark.conf.get("spark.sql.shuffle.partitions") == before
+        assert {k: spark.conf.get(k, None) for k in _HARNESS_CONFS} == before
+
+    failing = read_event_stream(spark, d).select(
+        F.when(F.col("event_id") >= 0, F.raise_error(F.lit("boom"))).alias("x")
+    )
+    with pytest.raises(Exception, match="boom"):
+        run_to_memory(failing, "mem_raise_test", output_mode="append",
+                      state_partitions=2, no_data_batches=False)
+    assert {k: spark.conf.get(k, None) for k in _HARNESS_CONFS} == before
+
+
+def test_run_to_memory_durable_checkpoint_keeps_default_manager(spark, sf_dir, tmp_path, monkeypatch):
+    """Only the throwaway checkpoint gets the rename-only file manager:
+    with a session-wide checkpointLocation the checkpoint is durable,
+    and the harness must leave the manager conf alone."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    manager = "spark.sql.streaming.checkpointFileManagerClass"
+    d = _event_stream_dir(tmp_path, sf_dir)
+    conf_set = []
+    real_set = RuntimeConfig.set
+
+    def recording_set(self, key, value):
+        conf_set.append(key)
+        real_set(self, key, value)
+
+    monkeypatch.setattr(RuntimeConfig, "set", recording_set)
+
+    run_to_memory(read_event_stream(spark, d), "mem_tmp_ckpt", output_mode="append")
+    assert manager in conf_set  # the temporary checkpoint does switch it
+
+    ckpt = tmp_path / "ckpt"
+    spark.conf.set("spark.sql.streaming.checkpointLocation", str(ckpt))
+    conf_set.clear()
+    try:
+        out = run_to_memory(read_event_stream(spark, d), "mem_durable_ckpt",
+                            output_mode="append")
+        assert out.count() > 0
+    finally:
+        spark.conf.unset("spark.sql.streaming.checkpointLocation")
+    assert manager not in conf_set
+    assert (ckpt / "mem_durable_ckpt" / "offsets").is_dir()
+
+
+def test_run_to_memory_clamps_state_partitions_to_local_slots(spark, sf_dir, tmp_path):
+    """On a local[N] master the state partitions are clamped to N: a
+    state_partitions=8 run must report at most defaultParallelism
+    shuffle partitions for its stateful operator."""
+    import time
+
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    from meta_frame_spark.streaming.ops import dedup_events
+
+    class Progress(StreamingQueryListener):
+        def __init__(self):
+            self.partitions, self.done = [], False
+
+        def onQueryStarted(self, event):
+            pass
+
+        def onQueryProgress(self, event):
+            if event.progress.name == "mem_clamp_test":
+                self.partitions += [s.numShufflePartitions for s in event.progress.stateOperators]
+
+        def onQueryIdle(self, event):
+            pass
+
+        def onQueryTerminated(self, event):
+            self.done = True
+
+    listener = Progress()
+    spark.streams.addListener(listener)
+    try:
+        run_to_memory(
+            dedup_events(read_event_stream(spark, _event_stream_dir(tmp_path, sf_dir))),
+            "mem_clamp_test", output_mode="append", state_partitions=8,
+        )
+        deadline = time.time() + 60
+        while not (listener.done and listener.partitions) and time.time() < deadline:
+            time.sleep(0.2)
+    finally:
+        spark.streams.removeListener(listener)
+    slots = spark.sparkContext.defaultParallelism
+    assert listener.partitions
+    assert max(listener.partitions) <= min(8, slots)
 
 
 def test_streaming_incremental_ingest_dedups_against_static_corpus(spark, tmp_path):
