@@ -2004,51 +2004,14 @@ def q_dup_cluster_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
     only ~0.64 there and depend on the corpus' bimodal pair-Jaccard
     distribution); the exact-Jaccard verify step drops the extra false
     candidates, so the all-pairs oracle stays a true oracle."""
-    from meta_frame_spark.operators.bounded import bounded_collect
-    from meta_frame_spark.operators.dedup import dup_clusters, minhash_lsh_dedup
+    from meta_frame_spark.operators.dedup import dup_cluster_sizes, minhash_lsh_dedup
 
     docs = _t(spark, sf_dir, "documents")
     pairs = minhash_lsh_dedup(
         docs, threshold=0.5, num_hashes=64, num_bands=32, shingle_n=3,
         restrict_to_candidates=False,
     )
-    # Bounded driver rollup (r15, same gate as dup_clusters/VERDICT #8):
-    # below the 100k-pair bound the cluster labels are already a driver
-    # dict, so the per-cluster size census is a Counter over union-find
-    # roots — the distributed groupBy over the tiny local label frame
-    # (one more scheduled exchange job) disappears. Larger graphs take
-    # dup_clusters' distributed loop + groupBy unchanged.
-    local = bounded_collect(pairs.select("id_a", "id_b"), 100_000, "dup_cluster_sizes")
-    if local is not None:
-        parent: dict = {}
-
-        def find(x):
-            while parent[x] != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
-
-        for a, b in zip(local.column(0).to_pylist(), local.column(1).to_pylist()):
-            parent.setdefault(a, a)
-            parent.setdefault(b, b)
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                lo, hi = (ra, rb) if ra < rb else (rb, ra)
-                parent[hi] = lo
-        from collections import Counter
-
-        sizes = Counter(find(n) for n in parent)
-        schema = T.StructType([
-            pairs.select(F.col("id_a").alias("cluster")).schema.fields[0],
-            T.StructField("n_nodes", T.LongType(), False),
-        ])
-        return spark.createDataFrame(
-            [(c, n) for c, n in sizes.items()], schema
-        )
-    clusters = dup_clusters(pairs, driver_threshold=0)
-    return clusters.groupBy("cluster").agg(
-        F.count(F.lit(1)).alias("n_nodes")
-    )
+    return dup_cluster_sizes(pairs)
 
 
 def q_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2177,7 +2140,8 @@ def _stream_dir(sf_dir: str, table: str) -> str:
     import os
     import tempfile
 
-    src = f"{sf_dir.rstrip('/')}/{table}.parquet"
+    # absolute: the link lives in the temp directory, not under the cwd
+    src = os.path.join(os.path.abspath(sf_dir), f"{table}.parquet")
     tag = hashlib.md5(src.encode()).hexdigest()[:8]
     d = os.path.join(tempfile.gettempdir(), f"mfs_{table}_stream_{tag}")
     os.makedirs(d, exist_ok=True)
@@ -6218,100 +6182,61 @@ def entry(spark: SparkSession) -> DataFrame:
     return q_a_cascade(spark, "/root/testdata/sf0.001")
 
 
-# Ordering contract: the driver checks only the FIRST 50 queries()
-# entries per round. DRIVER_WINDOW is the single source of truth for
-# that window — queries() derives its ordering from it, and
-# tests/test_cli.py pins the window against this constant, so the
-# rotation plan and the pin can never diverge (VERDICT r6 "Next
-# round" #5).
-#
-# Round-15 window (VERDICT r14 "Next round" #9 and the capacity note
-# below): the rotation is at capacity, so this window is FORCED to be
-# the decay-edge tier — the 48 rows whose latest driver green is r10
-# (they sit at staleness 4 with the r14 records in the tree and would
-# cross the bound when r15 records land). r15 is an optimization
-# round and adds NO new queries, so the 2 free slots go to the
-# alphabetical head of the 49 r11-green rows (r16's forced window),
-# getting ahead of next round's capacity squeeze.
-# Together window ∪ queue covers every decay-edge row, which
-# tools/check_correctness.py --staleness enforces mechanically.
-# Every entry has an oracle_sql() twin.
-DRIVER_WINDOW: tuple[str, ...] = (
-    # (1) the pinned r14 queue backbone, verbatim — the r10-green
-    # alphabetical tail (25 rows)
-    "key_skew", "kll_quantiles", "mm_frame_dedup", "near_dedup_against",
-    "negative_pairs", "novelty_score", "part_pairs",
-    "quality_classifier", "quantile_match_grid", "rolling_distinct",
-    "script_profile", "sentences", "session_pairs", "sketch_rollup",
-    "stream_anomaly", "stream_score", "text_normalize", "tfidf_keywords",
-    "theta_matrix", "theta_overlap", "top_mass", "trend_hourly",
-    "trending_events", "vocab_drift", "zipf_slope",
-    # (2) the 23 r10-green rows displaced from the r14 window by that
-    # round's new ops — queued then, due now
-    "k_anonymity", "join_cardest", "incremental_agg", "heavy_hitters",
-    "funnel_latency", "ewma_hourly", "event_pagerank", "epoch_shuffle",
-    "emb_outliers", "doremi_mix", "dedup_safe_split",
-    "curation_cleanup", "curation_budget", "count_anomalies",
-    "corr_signals", "containment", "cms_freq", "char_entropy",
-    "bucket_spine", "bloom_decontam", "b_q4_priority", "b_q10_returns",
-    "ann_topk_rp",
-    # (3) alphabetical head of the 49 r11-green rows (no new r15
-    # queries — optimization round)
-    "a_cascade", "agg_approx",
-)
+# Ordering contract: the driver checks only the first WINDOW_SLOTS
+# queries() entries per round and records them in
+# CORRECTNESS_r<round>.json next to this file. queries() orders the
+# registry from those records, so each round re-checks the rows whose
+# evidence is oldest.
 
-# The planned r15 window backbone. Pinned constant per VERDICT r8 #7
-# so the queue cannot silently drift from the plan; tests/test_cli.py
-# checks it stays disjoint from DRIVER_WINDOW, registered, and
-# oracle-backed, and the --staleness gate checks the union covers
-# every stale row.
-#
-# CAPACITY NOTE FOR r15+ (structural, do the math before adding
-# queries): the registry now holds 247 queries across five ~50-row
-# freshness tiers (r10:48, r11:49, r12:50, r13:50, r14:50) against a
-# 50-slot driver window and a 4-round staleness bound — the rotation
-# is at capacity. Each round's window MUST be the tier that is 4
-# rounds old (r15 -> the 48 r10 rows below; r16 -> the 49 r11 rows;
-# ...), leaving only (50 - tier size) slots for NEW queries: ~2 in
-# r15, ~1 in r16, ~0 after. Future rounds therefore shift from
-# breadth to depth (perf, scale hardening, examples, robustness) —
-# a new query beyond the free slots would orphan a tier row past the
-# bound, and the in-suite gate will say so. A mid-round local
-# full-registry run (the per-round receipt) keeps correctness
-# evidence fresh for every queued row regardless.
-NEXT_WINDOW_QUEUE: tuple[str, ...] = (
-    # the 49 r11-green rows minus the two already promoted into the
-    # r15 window head — they reach the decay edge the moment the
-    # driver's r15 records land (newest becomes 15), so they are
-    # r16's forced window. Planning them here NOW keeps the freshness
-    # gate green across the round boundary instead of red-flagging
-    # the start of r16.
-    "ann_topk_ivf", "ann_topk_lsh",
-    "b_join_tree", "b_q3_shipping", "blocklist_score", "bp_grandchild",
-    "c4_clean", "cohort_retention", "corpus_mix_temperature",
-    "dedup_minhash", "dedup_simhash", "distinct_sketch",
-    "dup_cluster_sizes", "emb_decontam", "emb_near_dup", "event_funnel",
-    "events_asof", "events_enriched", "events_hourly",
-    "events_interval", "events_json", "events_sessions",
-    "events_sliding", "fix_encoding", "gopher_repetition",
-    "gopher_rules", "hard_negatives", "hash_split", "int8_quantize",
-    "int8_topk", "k_anonymity_report", "kcenter_coverage",
-    "label_centroids", "mm_phash", "mm_pixel_stats", "mmr_select",
-    "oov_rate", "pack_sequences", "passage_chunks", "rolling_1h",
-    "scd2_versions", "semantic_dedup", "sessionize", "set_ops",
-    "soft_dedup", "split_leakage", "stream_gate",
-)
+#: queries the driver checks per round: the first WINDOW_SLOTS entries
+#: of queries()
+WINDOW_SLOTS = 50
+
+def _latest_green(records_dir: str | None = None) -> tuple[int, dict[str, int]]:
+    """``(newest round, {query: latest green round})`` from the
+    ``CORRECTNESS_r<round>.json`` records in ``records_dir`` (default:
+    this file's directory). A row is green when rows, schema and hash
+    matched and it carries no error; ``hash_match`` must be positively
+    true, so a record without hash evidence refreshes nothing."""
+    import glob
+    import json
+    import os
+    import re
+
+    records_dir = records_dir or os.path.dirname(os.path.abspath(__file__))
+    newest, latest = 0, {}
+    for path in glob.glob(os.path.join(records_dir, "CORRECTNESS_r*.json")):
+        m = re.match(r"CORRECTNESS_r(\d+)", os.path.basename(path))
+        if m is None:
+            continue
+        rnd = int(m.group(1))
+        newest = max(newest, rnd)
+        with open(path) as fh:
+            for q, row in json.load(fh).items():
+                if (
+                    row.get("rows_match")
+                    and row.get("schema_match")
+                    and row.get("hash_match") is True
+                    and not row.get("err")
+                ):
+                    latest[q] = max(latest.get(q, 0), rnd)
+    return newest, latest
+
+
+def _driver_order(names, latest: dict[str, int]) -> list[str]:
+    """``names`` in driver-window order: never green first, then by
+    latest green round, oldest first, then by name."""
+    return sorted(names, key=lambda q: (q in latest, latest.get(q, 0), q))
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    """Every registered query, in :func:`_driver_order` over the
+    correctness records next to this file (name order without any)."""
     full = _all_queries()
-    ordered = {name: full[name] for name in DRIVER_WINDOW}
-    ordered.update((n, f) for n, f in full.items() if n not in ordered)
-    return ordered
+    return {q: full[q] for q in _driver_order(full, _latest_green()[1])}
 
 
 def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    # Full registry; window ordering is imposed by DRIVER_WINDOW above.
     return {
         "dedup_keep_best": q_dedup_keep_best,
         "dup_graph_stats": q_dup_graph_stats,

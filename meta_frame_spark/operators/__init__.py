@@ -25,6 +25,7 @@ from meta_frame_spark.operators.dedup import (
     dedup_against,
     drop_exact_duplicates,
     drop_near_duplicates,
+    dup_cluster_sizes,
     dup_clusters,
     exact_dedup,
     hashed_jaccard_pairs,
@@ -378,6 +379,7 @@ __all__ = [
     "cube_aggregate",
     "drop_exact_duplicates",
     "drop_near_duplicates",
+    "dup_cluster_sizes",
     "dup_clusters",
     "embedding_near_dup_pairs",
     "embedding_outliers",

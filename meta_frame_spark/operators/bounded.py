@@ -67,7 +67,8 @@ boilerplate (3.0M band pairs, distributed: 7.47 s instead of 6.43 s).
 
 Dual-path operators and their default caps:
 
-* ``dedup.dup_clusters`` — 100,000 pairs (union-find);
+* ``dedup.dup_clusters`` and ``dedup.dup_cluster_sizes`` — 100,000
+  pairs (:func:`union_find`);
 * ``similarity.embedding_near_dup_pairs`` — ``row_cap(4 * (5 * dim +
   4 * n_planes))`` vectors: 29,127 at dim 64 with 64 planes (float64
   vectors and their normalized copy, the float32 collected copy,
@@ -150,3 +151,30 @@ def bounded_collect(
         return None
     log.info("%s: driver path, %d rows <= %d", op, table.num_rows, cap)
     return table
+
+
+def union_find(a_ids, b_ids, op: str) -> dict:
+    """Connected components of the edges ``zip(a_ids, b_ids)`` on the
+    driver: ``{node: root}`` where the root is the minimum id reachable
+    from the node, the label the distributed min-label propagation
+    converges to. Path halving, union by min id. A null id raises
+    ``ValueError`` naming ``op``."""
+    parent: dict = {}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]  # path halving
+            x = parent[x]
+        return x
+
+    for a, b in zip(a_ids, b_ids):
+        if a is None or b is None:
+            raise ValueError(f"{op}: null id in dup pair ({a!r}, {b!r})")
+        parent.setdefault(a, a)
+        parent.setdefault(b, b)
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            # union by MIN id so the root IS the cluster label
+            lo, hi = (ra, rb) if ra < rb else (rb, ra)
+            parent[hi] = lo
+    return {n: find(n) for n in parent}

@@ -28,6 +28,8 @@ unchanged. Tests pin both branches equal.
 
 from __future__ import annotations
 
+from collections import Counter
+
 import numpy as np
 import pandas as pd
 import pyarrow as pa
@@ -37,7 +39,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from meta_frame_spark.operators.bounded import bounded_collect, row_cap
+from meta_frame_spark.operators.bounded import bounded_collect, row_cap, union_find
 from meta_frame_spark.operators.bounded import log as bounded_log
 from meta_frame_spark.operators.cache import track
 from meta_frame_spark.operators.skew import ensure_min_partitions
@@ -820,28 +822,14 @@ def dup_clusters(
         pairs.select("id_a", "id_b"), driver_threshold, "dup_clusters"
     )
     if local is not None:
-        parent: dict = {}
-
-        def find(x):
-            while parent[x] != x:
-                parent[x] = parent[parent[x]]  # path halving
-                x = parent[x]
-            return x
-
-        for a, b in zip(local.column(0).to_pylist(), local.column(1).to_pylist()):
-            parent.setdefault(a, a)
-            parent.setdefault(b, b)
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                # union by MIN id so the root IS the cluster label
-                lo, hi = (ra, rb) if ra < rb else (rb, ra)
-                parent[hi] = lo
-        out = [(n, find(n)) for n in parent]
+        roots = union_find(
+            local.column(0).to_pylist(), local.column(1).to_pylist(), "dup_clusters"
+        )
         spark = pairs.sparkSession
         schema = pairs.select(
             F.col("id_a").alias("node"), F.col("id_a").alias("cluster")
         ).schema
-        return spark.createDataFrame(out, schema)
+        return spark.createDataFrame(list(roots.items()), schema)
 
     converged = False
     edges = (
@@ -891,6 +879,31 @@ def dup_clusters(
             "a duplicate chain is longer than max_iter — raise max_iter"
         )
     return labels.select(F.col("node"), F.col("label").alias("cluster"))
+
+
+def dup_cluster_sizes(pairs: DataFrame, driver_threshold: int = 100_000) -> DataFrame:
+    """Node count per :func:`dup_clusters` cluster: ``(cluster,
+    n_nodes)``. Below ``driver_threshold`` pairs the census is a counter
+    over the driver union-find's roots, with no distributed groupBy over
+    the small label frame; above it (or at 0) it is the distributed
+    clustering loop plus a groupBy."""
+    local = bounded_collect(
+        pairs.select("id_a", "id_b"), driver_threshold, "dup_cluster_sizes"
+    )
+    if local is not None:
+        roots = union_find(
+            local.column(0).to_pylist(), local.column(1).to_pylist(), "dup_cluster_sizes"
+        )
+        schema = T.StructType([
+            pairs.select(F.col("id_a").alias("cluster")).schema.fields[0],
+            T.StructField("n_nodes", T.LongType(), False),
+        ])
+        return pairs.sparkSession.createDataFrame(
+            list(Counter(roots.values()).items()), schema
+        )
+    return dup_clusters(pairs, driver_threshold=0).groupBy("cluster").agg(
+        F.count(F.lit(1)).alias("n_nodes")
+    )
 
 
 def drop_near_duplicates(df: DataFrame, pairs: DataFrame, id_col: str = "doc_id") -> DataFrame:

@@ -639,9 +639,11 @@ def _op_cache(df: DataFrame) -> DataFrame:
 
     So: ``spark.meta_frame.curation.checkpoint`` = ``always`` /
     ``never`` / ``auto`` (default). ``auto`` checkpoints exactly when
-    the master is ``local[*]`` — a single process has no executor to
+    the master is single-JVM (``session.local_task_slots``: ``local``,
+    ``local[N]``, ``local[*]``) — a single process has no executor to
     lose, so the truncation is free of the failure mode — and persists
-    on a real cluster, where a lost executor must be able to recompute.
+    on any other master, ``local-cluster`` included, where a lost
+    executor must be able to recompute.
     (An r15 plan-size probe that switched small LOCAL pipelines back
     to persist was measured and rejected: reading the analyzed plan to
     size it costs ~0.3s even on curation_budget — more than the ~0.1s
@@ -649,15 +651,12 @@ def _op_cache(df: DataFrame) -> DataFrame:
     registered with ``release_tracked_caches()``; the checkpoint
     branch is not, since unpersist is a no-op on checkpointed plans."""
     from meta_frame_spark.operators.cache import track
+    from meta_frame_spark.session import local_task_slots
 
     spark = df.sparkSession
     mode = spark.conf.get("spark.meta_frame.curation.checkpoint", "auto")
     if mode == "auto":
-        mode = (
-            "always"
-            if spark.sparkContext.master.startswith("local")
-            else "never"
-        )
+        mode = "always" if local_task_slots(spark) is not None else "never"
     if mode == "always":
         return df.localCheckpoint(eager=False)
     return track(df.persist())

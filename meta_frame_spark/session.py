@@ -10,6 +10,7 @@ cluster, pass ``master=None`` so spark-submit's conf wins.
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
 
@@ -71,3 +72,22 @@ def get_session(
     for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+_LOCAL_MASTER = re.compile(r"local(?:\[(\*|\d+)(?:\s*,\s*\d+)?\])?")
+
+
+def local_task_slots(spark: SparkSession) -> int | None:
+    """Task slots of a single-JVM master (``local``, ``local[N]``,
+    ``local[*]``, ``local[N, F]``: every task runs in the driver JVM), or
+    ``None`` for any other master. ``local-cluster`` is not single-JVM:
+    its executors are separate processes that can be lost."""
+    m = _LOCAL_MASTER.fullmatch(spark.sparkContext.master)
+    if m is None:
+        return None
+    if m.group(1) is None:
+        return 1
+    if m.group(1) == "*":
+        # what Spark itself sizes local[*] by
+        return spark.sparkContext._jvm.java.lang.Runtime.getRuntime().availableProcessors()
+    return int(m.group(1))

@@ -17,7 +17,6 @@ Scale design:
 
 from __future__ import annotations
 
-import re
 from collections.abc import Iterator
 from typing import TYPE_CHECKING
 
@@ -25,6 +24,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from meta_frame_spark.session import local_task_slots
 
 if TYPE_CHECKING:  # pragma: no cover - typing only
     import pandas as pd
@@ -272,22 +273,6 @@ _FS_CHECKPOINT_MANAGER = (
     "org.apache.spark.sql.execution.streaming.checkpointing."
     "FileSystemBasedCheckpointFileManager"
 )
-_LOCAL_MASTER = re.compile(r"local(?:\[(\*|\d+)(?:\s*,\s*\d+)?\])?")
-
-
-def _local_task_slots(spark: SparkSession) -> int | None:
-    """Task slots of a ``local`` / ``local[N]`` / ``local[*]`` /
-    ``local[N, F]`` master (every task runs in the one driver JVM), or
-    ``None`` for any other master, ``local-cluster`` included."""
-    m = _LOCAL_MASTER.fullmatch(spark.sparkContext.master)
-    if m is None:
-        return None
-    if m.group(1) is None:
-        return 1
-    if m.group(1) == "*":
-        # what Spark itself sizes local[*] by
-        return spark.sparkContext._jvm.java.lang.Runtime.getRuntime().availableProcessors()
-    return int(m.group(1))
 
 
 def run_to_memory(
@@ -358,7 +343,7 @@ def run_to_memory(
     spark = stream_df.sparkSession
     confs: dict[str, str] = {}
     partitions = state_partitions
-    slots = _local_task_slots(spark)
+    slots = local_task_slots(spark)
     if slots is not None:
         if partitions is None:
             partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))

@@ -239,3 +239,36 @@ def test_band_keys_match_spark_hash(spark):
                                "i int, band array<bigint>")
     want = [r[0] for r in df.orderBy("i").select(F.hash("band")).collect()]
     assert dedup._spark_hash_rows(m).tolist() == want
+
+
+#: (case id, pairs, the expected (cluster, n_nodes) census)
+CENSUS_CASES = [
+    ("chain", [(4, 3), (3, 2), (1, 2)], [(1, 4)]),
+    ("star", [(10, 11), (10, 12), (13, 10), (10, 14)], [(10, 5)]),
+    ("single", [(6, 5)], [(5, 2)]),
+]
+
+
+@pytest.mark.parametrize(
+    "pairs,want", [c[1:] for c in CENSUS_CASES], ids=[c[0] for c in CENSUS_CASES]
+)
+def test_dup_cluster_sizes_driver_rollup_equals_distributed_census(spark, caplog, pairs, want):
+    """The driver rollup equals the distributed branch, which is
+    ``dup_clusters(pairs, driver_threshold=0).groupBy("cluster")`` plus
+    a count."""
+    df = spark.createDataFrame(pairs, PAIR_SCHEMA)
+    with caplog.at_level(logging.INFO, logger="meta_frame_spark.operators.bounded"):
+        got = sorted(tuple(r) for r in dedup.dup_cluster_sizes(df).collect())
+        census = dedup.dup_cluster_sizes(df, driver_threshold=0)
+        dist = sorted(tuple(r) for r in census.collect())
+    assert "dup_cluster_sizes: driver path, %d rows <= 100000" % len(pairs) in caplog.messages
+    assert "dup_cluster_sizes: distributed path, driver_threshold=0" in caplog.messages
+    assert census.columns == ["cluster", "n_nodes"]
+    assert got == dist == want
+
+
+@pytest.mark.parametrize("op", [dup_clusters, dedup.dup_cluster_sizes])
+def test_union_find_null_id_names_the_operator(spark, op):
+    df = spark.createDataFrame([(1, 2), (2, None)], PAIR_SCHEMA)
+    with pytest.raises(ValueError, match=f"^{op.__name__}: null id"):
+        op(df)

@@ -346,6 +346,49 @@ def test_curation_cache_step_materializes_and_validates(spark):
         validate_curation_config({"steps": [{"op": "cache", "eager": True}]})
 
 
+class _MasterStub:
+    """The slice of a DataFrame ``_op_cache`` touches, on a given master
+    (conf ``auto``), recording which materialization it asked for."""
+
+    def __init__(self, master):
+        from types import SimpleNamespace
+
+        self.sparkSession = SimpleNamespace(
+            conf=SimpleNamespace(get=lambda key, default=None: default),
+            sparkContext=SimpleNamespace(master=master),
+        )
+        self.calls = []
+
+    def localCheckpoint(self, eager):
+        self.calls.append("checkpoint")
+        return self
+
+    def persist(self):
+        self.calls.append("persist")
+        return self
+
+
+@pytest.mark.parametrize("master,mechanism", [
+    ("local", "checkpoint"),
+    ("local[4]", "checkpoint"),
+    ("local[2, 3]", "checkpoint"),
+    # executors in their own JVMs: a lost one makes a local checkpoint fatal
+    ("local-cluster[2,1,1024]", "persist"),
+    ("spark://h:7077", "persist"),
+])
+def test_op_cache_checkpoints_only_on_a_single_jvm_master(master, mechanism):
+    from meta_frame_spark.operators.cache import _TRACKED
+    from meta_frame_spark.plans.curation import _op_cache
+
+    df = _MasterStub(master)
+    try:
+        assert _op_cache(df) is df
+    finally:
+        if df in _TRACKED:
+            _TRACKED.remove(df)
+    assert df.calls == [mechanism]
+
+
 def test_curation_budget_and_sample_ops(spark):
     """The round-10 registry additions (budget_select /
     sample_per_group) run as config steps — a pipeline can END in the

@@ -505,3 +505,31 @@ def test_stream_dir_prunes_stale_links(tmp_path, monkeypatch):
         assert os.path.exists(os.path.join(d2, "part-abcd.parquet"))
     finally:
         tempfile.tempdir = None
+
+
+def test_stream_dir_links_a_relative_data_dir(tmp_path, monkeypatch):
+    """A data directory given relative to the cwd must still be linked
+    by absolute path: the link lives in the temp directory, where a
+    relative target would dangle."""
+    import os
+    import sys
+    import tempfile
+
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    from __spark_entry__ import _stream_dir
+
+    (tmp_path / "work" / "sfR").mkdir(parents=True)
+    (tmp_path / "work" / "sfR" / "events.parquet").write_bytes(b"e")
+    (tmp_path / "tmp").mkdir()
+    monkeypatch.setenv("TMPDIR", str(tmp_path / "tmp"))
+    monkeypatch.chdir(tmp_path / "work")
+    tempfile.tempdir = None  # re-read TMPDIR
+    try:
+        d = _stream_dir("sfR", "events")
+        link = os.path.join(d, "events.parquet")
+        assert os.path.islink(link)
+        assert os.path.isabs(os.readlink(link))
+        with open(link, "rb") as fh:
+            assert fh.read() == b"e"
+    finally:
+        tempfile.tempdir = None

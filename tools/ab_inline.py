@@ -156,31 +156,6 @@ def _v_ann_summary_r14():
     return apply, undo
 
 
-def _v_kn_join_r14():
-    """Restore the r14 join-shaped self-fit branch of both KN fits by
-    forcing the general (non self-fit) branch OFF... not equivalent;
-    instead swap the module functions for copies using the join shape."""
-    from meta_frame_spark.operators import scoring
-    from meta_frame_spark.operators.cache import track
-    from pyspark.sql import functions as F
-
-    new2, new3 = scoring.kneser_ney_logprob, scoring.kneser_ney3_logprob
-    src = open("/tmp/kn_r14_scoring.py").read()
-    ns: dict = {}
-    exec(compile(src, "/tmp/kn_r14_scoring.py", "exec"), ns)
-    old2, old3 = ns["kneser_ney_logprob"], ns["kneser_ney3_logprob"]
-
-    def apply():
-        scoring.kneser_ney_logprob = old2
-        scoring.kneser_ney3_logprob = old3
-
-    def undo():
-        scoring.kneser_ney_logprob = new2
-        scoring.kneser_ney3_logprob = new3
-
-    return apply, undo
-
-
 def _v_dup_driver_r14():
     """Restore the r14 distributed shapes of the dup-family queries:
     keep_best window path, graph census/triangles operators, cluster-
@@ -252,7 +227,6 @@ def _v_dup_driver_r14():
 
 VARIANTS = {
     "ann_summary_r14": _v_ann_summary_r14,
-    "kn_join_r14": _v_kn_join_r14,
     "dup_driver_r14": _v_dup_driver_r14,
 }
 
