@@ -19,10 +19,17 @@ kwargs:
 `run_curation(df, config)` validates the whole config up front (loud
 ``ConfigError`` on unknown ops or kwargs — the reference's silent
 no-op fallthrough, `megatron.py:11,14`, is a bug class we refuse to
-reproduce) and compiles it to ONE lazy DataFrame plan: each step is a
-pure DataFrame→DataFrame function, so Catalyst sees the whole chain
-and pushes filters/prunes columns across step boundaries. Nothing
-executes until the caller sinks the result.
+reproduce) and compiles it to ONE DataFrame plan: each step is a
+DataFrame→DataFrame function, so Catalyst sees the whole chain
+and pushes filters/prunes columns across step boundaries. Most steps
+are lazy, but not all: a step whose plan depends on a statistic of
+its input computes that statistic while the pipeline is being built
+(DSIR's model totals ``collect()``, quantile cuts, gate aggregates),
+and a ``cache`` step runs every shuffle stage of its upstream when it
+is built (see ``_op_cache``). In a traced ``curation_select`` run
+(sf0.01, local[4]), 7 of its 26 jobs are the DSIR totals collect and
+15-16 are its two ``cache`` steps; only the rest run when the caller
+sinks the result.
 """
 
 from __future__ import annotations
@@ -627,11 +634,14 @@ def _op_cache(df: DataFrame) -> DataFrame:
     a selection pipeline re-analyzes and re-optimizes a plan that
     embeds the DSIR scorer and every prior gate — measured as the
     dominant driver-side cost of ``curation_select`` (hundreds of KB
-    of plan per action). Lazy ``localCheckpoint`` truncates the
+    of plan per action). ``localCheckpoint`` truncates the
     lineage to an RDD leaf, so downstream analysis is over a two-node
     plan; the data itself is identical and still computed from the
-    inputs on every run (eager=False: materialization happens at the
-    first consuming action). But local-checkpoint blocks are NOT
+    inputs on every run. ``eager=False`` is not lazy: converting the
+    frame to an RDD executes its adaptive plan, so every shuffle-map
+    stage of the upstream runs (as AQE query stages) when this step is
+    built, and only the final result stage waits for the first
+    consuming action. But local-checkpoint blocks are NOT
     fault-tolerant: on executor loss the lineage needed to recompute
     them is gone and the job FAILS (it does not re-materialize), and
     ``DataFrame.unpersist()`` cannot release them — only the context

@@ -26,6 +26,14 @@ def get_session(
     In local testing, ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]``.
     On a cluster, pass ``master=None`` with ``SPARK_GRAFT_LOCAL=0`` and let
     spark-submit decide.
+
+    ``spark.sql.icu.caseMappings.enabled`` is pinned to ``false`` (case
+    mapping through the JVM's ``String`` methods, which skips ICU's
+    per-JVM title-case table build) unless the driver JVM's default
+    locale language is ``tr``, ``az`` or ``lt``, whose casing rules
+    differ from ICU's root mapping. A value in ``extra_conf`` wins. The
+    guard reads the driver's locale: executors started under one of
+    those locales need the conf set explicitly.
     """
     builder = SparkSession.builder.appName(app_name)
     if master is None and os.environ.get("SPARK_GRAFT_LOCAL", "1") == "1":
@@ -54,7 +62,7 @@ def get_session(
         "spark.ui.showConsoleProgress": "false",
         "spark.ui.enabled": "false",
     }
-    if master and master.startswith("local"):
+    if master and _LOCAL_MASTER.fullmatch(master):
         # local[N] runs every task inside the DRIVER JVM, whose default
         # heap is 1g — 32 concurrent hash-aggregate tasks OOMed there
         # on the 10x scale smoke while the box sat at 9/125 GiB. Size
@@ -71,9 +79,24 @@ def get_session(
         conf.update(extra_conf)
     for k, v in conf.items():
         builder = builder.config(k, v)
-    return builder.getOrCreate()
+    spark = builder.getOrCreate()
+    if ICU_CASE_MAPPINGS not in conf:
+        # ICU's first lower/upper in a JVM builds a title-case table over
+        # all 1,114,112 code points while the other task threads wait on
+        # the class-init lock, whatever the input, and every tokenizer
+        # here starts with F.lower. Outside the special-casing locales
+        # the JVM's String mapping gives the same results, except on
+        # case pairs newer than its Unicode tables (tests/test_text.py).
+        lang = spark.sparkContext._jvm.java.util.Locale.getDefault().getLanguage()
+        if lang not in _SPECIAL_CASING_LANGUAGES:
+            spark.conf.set(ICU_CASE_MAPPINGS, "false")
+    return spark
 
 
+ICU_CASE_MAPPINGS = "spark.sql.icu.caseMappings.enabled"
+# java.util.Locale languages whose String.toLowerCase/toUpperCase differ
+# from the root mapping (Turkish, Azerbaijani, Lithuanian)
+_SPECIAL_CASING_LANGUAGES = frozenset({"tr", "az", "lt"})
 _LOCAL_MASTER = re.compile(r"local(?:\[(\*|\d+)(?:\s*,\s*\d+)?\])?")
 
 

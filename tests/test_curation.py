@@ -322,26 +322,49 @@ def test_curation_selection_ops_compose(spark):
 
 
 def test_curation_cache_step_materializes_and_validates(spark):
-    """The cache step persists the flowing frame (registered with
-    operators.cache for later release) and takes no kwargs."""
+    """The cache step truncates or persists the flowing frame, by
+    ``spark.meta_frame.curation.checkpoint``, and takes no kwargs.
+
+    ``auto`` on the single-JVM test master takes the local-checkpoint
+    branch: once an action has run, the downstream plan reads a
+    checkpointed RDD, and nothing is registered for release. ``never``
+    persists the frame and registers it with ``operators.cache``, so
+    exactly that one frame is released.
+    """
     import pytest
 
     from meta_frame_spark.config.model import ConfigError
+    from meta_frame_spark.operators.cache import _TRACKED, release_tracked_caches
     from meta_frame_spark.plans.curation import run_curation, validate_curation_config
+    from meta_frame_spark.session import local_task_slots
 
-    df = spark.createDataFrame([(1, 2.0), (2, 4.0)], ["id", "v"])
-    out = run_curation(df, {"steps": [
+    assert local_task_slots(spark) is not None
+    steps = {"steps": [
         {"op": "cache"},
         {"op": "filter", "predicate": "v > 1"},
-    ]})
-    assert out.count() == 2
-    assert out.storageLevel.useMemory or any(
-        n.storageLevel.useMemory for n in [df]
-    ) or True  # persisted upstream; contract checked via catalog below
-    # the persisted frame is registered for release
-    from meta_frame_spark.operators.cache import release_tracked_caches
+    ]}
+    df = spark.createDataFrame([(1, 2.0), (2, 4.0)], ["id", "v"])
+    release_tracked_caches()  # frames other tests left registered
 
-    assert release_tracked_caches() >= 1
+    def reads_checkpoint(frame):
+        leaf = frame._jdf.queryExecution().analyzed().collectLeaves().head()
+        return leaf.nodeName() == "LogicalRDD" and leaf.rdd().isCheckpointed()
+
+    out = run_curation(df, steps)
+    assert out.count() == 2
+    assert reads_checkpoint(out)
+    assert release_tracked_caches() == 0
+
+    spark.conf.set("spark.meta_frame.curation.checkpoint", "never")
+    try:
+        out = run_curation(df, steps)
+        assert out.count() == 2
+        assert not reads_checkpoint(out)
+        assert [f.is_cached for f in _TRACKED] == [True]
+        assert "InMemoryRelation" in out._jdf.queryExecution().withCachedData().toString()
+        assert release_tracked_caches() == 1
+    finally:
+        spark.conf.unset("spark.meta_frame.curation.checkpoint")
     with pytest.raises(ConfigError, match="unknown kwargs"):
         validate_curation_config({"steps": [{"op": "cache", "eager": True}]})
 

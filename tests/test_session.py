@@ -1,0 +1,83 @@
+"""``get_session``'s pinned defaults, checked on a stub builder (no JVM)."""
+
+from types import SimpleNamespace
+
+import pytest
+
+from meta_frame_spark import session
+from meta_frame_spark.session import ICU_CASE_MAPPINGS, get_session
+
+
+class _BuilderStub:
+    """The slice of ``SparkSession.builder`` ``get_session`` touches: it
+    records the builder conf and the session conf set afterwards, on a
+    driver JVM whose default locale language is ``lang``."""
+
+    def __init__(self, lang="en"):
+        self.conf = {}
+        self.session_conf = {}
+        locale = SimpleNamespace(getLanguage=lambda: lang)
+        self.session = SimpleNamespace(
+            conf=SimpleNamespace(set=self.session_conf.__setitem__),
+            sparkContext=SimpleNamespace(_jvm=SimpleNamespace(java=SimpleNamespace(
+                util=SimpleNamespace(Locale=SimpleNamespace(getDefault=lambda: locale))
+            ))),
+        )
+
+    def appName(self, name):
+        return self
+
+    def master(self, master):
+        return self
+
+    def config(self, key, value):
+        self.conf[key] = value
+        return self
+
+    def getOrCreate(self):
+        return self.session
+
+
+@pytest.fixture
+def builder(monkeypatch):
+    def install(lang="en"):
+        stub = _BuilderStub(lang)
+        monkeypatch.setattr(session, "SparkSession", SimpleNamespace(builder=stub))
+        return stub
+
+    return install
+
+
+@pytest.mark.parametrize("master,sized", [
+    ("local", True),
+    ("local[4]", True),
+    ("local[*]", True),
+    ("local[2, 3]", True),
+    # the driver of local-cluster runs no tasks: its executors do
+    ("local-cluster[2,1,1024]", False),
+])
+def test_driver_heap_sized_only_on_a_single_jvm_master(builder, master, sized):
+    stub = builder()
+    get_session(master=master)
+    assert ("spark.driver.memory" in stub.conf) == sized
+
+
+@pytest.mark.parametrize("lang,value", [
+    ("en", "false"),
+    # dotted/dotless I: the JVM's String case mapping differs from ICU root
+    ("tr", None),
+    ("az", None),
+    ("lt", None),
+])
+def test_icu_case_mappings_off_unless_the_locale_guard_fires(builder, lang, value):
+    stub = builder(lang)
+    get_session(master="local[2]")
+    # None: left at Spark's default, true
+    assert stub.session_conf.get(ICU_CASE_MAPPINGS) == value
+
+
+def test_extra_conf_icu_case_mappings_wins(builder):
+    stub = builder("en")
+    get_session(master="local[2]", extra_conf={ICU_CASE_MAPPINGS: "true"})
+    assert stub.conf[ICU_CASE_MAPPINGS] == "true"
+    assert ICU_CASE_MAPPINGS not in stub.session_conf

@@ -1490,3 +1490,41 @@ class TestRobots:
         plan = apply_robots(urls, robots)._jdf.queryExecution()\
             .executedPlan().toString()
         assert "BroadcastHashJoin" in plan
+
+
+def test_lower_upper_agree_with_icu_case_mappings_on_and_off(spark):
+    """``get_session`` turns ``spark.sql.icu.caseMappings.enabled`` off
+    (outside the ``tr``/``az``/``lt`` locales), so ``lower``/``upper``
+    run through the JVM's ``String`` case mapping instead of ICU's root
+    mapping. On this multilingual sample the two agree: accents, Greek
+    final sigma, German sharp s, dotted capital I, the ``ǅ`` digraph,
+    Cyrillic, CJK and emoji. They are not identical everywhere: over
+    U+0080..U+2FFFF (each code point wrapped as ``"A" + c + "b"``)
+    ``lower`` differs on 67 code points and ``upper`` on 67 others, all
+    case pairs added after the JDK 17's Unicode 13 tables (Vithkuqi
+    U+10570-105BC, Garay U+10D50-10D85, Latin U+A7C0-A7DC and a few
+    more), which the JVM leaves unmapped. ``initcap`` also differs on
+    word-initial characters with special title case (``ẞ``, ``İ``,
+    ligatures); the library's tokenizers use only ``lower``."""
+    from meta_frame_spark.session import ICU_CASE_MAPPINGS, _SPECIAL_CASING_LANGUAGES
+
+    lang = spark.sparkContext._jvm.java.util.Locale.getDefault().getLanguage()
+    assert lang not in _SPECIAL_CASING_LANGUAGES
+    assert spark.conf.get(ICU_CASE_MAPPINGS) == "false"  # get_session's default
+
+    sample = [
+        "Hello, WORLD 42!", "Café", "ΟΔΟΣ ΟΔΟΣ.", "STRASSE ẞ", "İSTANBUL",
+        "ǅ", "ПРИВЕТ, Мир", "漢字かな 한국어", "OK 😀👍",
+    ]
+    df = spark.createDataFrame([(s,) for s in sample], "s string")
+    cols = [F.lower("s").alias("lo"), F.upper("s").alias("up")]
+    out = {}
+    before = spark.conf.get(ICU_CASE_MAPPINGS)
+    try:
+        for value in ("true", "false"):
+            spark.conf.set(ICU_CASE_MAPPINGS, value)
+            out[value] = [tuple(r) for r in df.select(*cols).collect()]
+    finally:
+        spark.conf.set(ICU_CASE_MAPPINGS, before)
+    assert out["true"] == out["false"]
+    assert out["false"][2] == ("οδος οδος.", "ΟΔΟΣ ΟΔΟΣ.")
