@@ -1922,8 +1922,9 @@ def q_distinct_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_dup_graph_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Graph census + triangle count over the verified near-dup pair
-    graph (operators/graph.py degree_stats / triangle_count — the
-    wedge-close two-join plan; triangles measure how clique-like the
+    graph (operators/graph.py pair_graph_stats: degree_stats and
+    triangle_count, the wedge-close two-join plan, or their driver
+    census on a small pair graph; triangles measure how clique-like the
     duplicate neighborhoods are, which predicts how safely a cluster
     can collapse to one keeper). Same banding-matched pair derivation
     and all-pairs DuckDB oracle as q_dup_cluster_sizes; the oracle
@@ -1932,63 +1933,15 @@ def q_dup_graph_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     (12.5M list_intersect pairs at sf0.1 take DuckDB ~10+ min), so
     local sf-sweeps treat this as sf0.01-bounded; the Spark side runs
     fine at every SF and its sf1 pair graph is smoke-checked."""
-    from meta_frame_spark.operators.bounded import bounded_collect
     from meta_frame_spark.operators.dedup import minhash_lsh_dedup
-    from meta_frame_spark.operators.graph import degree_stats, triangle_count
+    from meta_frame_spark.operators.graph import pair_graph_stats
 
     docs = _t(spark, sf_dir, "documents")
     pairs = minhash_lsh_dedup(
         docs, threshold=0.5, num_hashes=64, num_bands=32, shingle_n=3,
         restrict_to_candidates=False,
     )
-    # Bounded driver census (r15, VERDICT r14 "Next round" #8 — the
-    # dup_clusters / pagerank pattern, guide §1.2/§5): the verified
-    # pair graph is tiny relative to the corpus (LSH banding bounds
-    # degree), so at or below the same 100k-pair bound dup_clusters
-    # uses, ONE bounded collect replaces the distinct+groupBy census
-    # and the two wedge-close shuffle joins with a dict/set pass on
-    # the driver; the derived columns go through the SAME Spark
-    # expressions (sum/2 cast, round(avg, 6)) so every value is
-    # bit-identical to the operators'. Larger graphs take the
-    # distributed operators unchanged.
-    local = bounded_collect(pairs.select("id_a", "id_b"), 100_000, "dup_graph_stats")
-    if local is not None:
-        from collections import defaultdict
-
-        adj: dict = defaultdict(set)
-        for a, b in zip(local.column(0).to_pylist(), local.column(1).to_pylist()):
-            if a != b:
-                lo, hi = (a, b) if a < b else (b, a)
-                adj[lo].add(hi)
-                adj[hi].add(lo)
-        if adj:
-            tri = 0
-            for a, nbrs in adj.items():
-                for b in nbrs:
-                    if b > a:
-                        na, nb = nbrs, adj[b]
-                        if len(nb) < len(na):
-                            na, nb = nb, na
-                        tri += sum(1 for c in na if c > b and c in nb)
-            base = spark.createDataFrame(
-                [(
-                    len(adj),
-                    sum(len(s) for s in adj.values()),
-                    max(len(s) for s in adj.values()),
-                    tri,
-                )],
-                "n_nodes long, _sumdeg long, max_degree long, n_triangles long",
-            )
-            return base.select(
-                "n_nodes",
-                (F.col("_sumdeg") / 2).cast("long").alias("n_edges"),
-                "max_degree",
-                F.round(F.col("_sumdeg") / F.col("n_nodes"), 6).alias("avg_degree"),
-                "n_triangles",
-            )
-    pairs = pairs.persist()  # census + triangles both consume it
-    e = pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-    return degree_stats(e).crossJoin(triangle_count(e))
+    return pair_graph_stats(pairs)
 
 
 def q_dup_cluster_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -33,6 +33,28 @@ import pandas as pd
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 
+#: Queries pre-run at sf0.001, untimed, before the timed loop (bench.py
+#: and tools/bench_sliced.py): each owns plan shapes no earlier query
+#: compiles, and the sf0.001 run generates identical code, so the timed
+#: run measures the engine, not first-call codegen/JIT.
+#:
+#: * ann_topk_ivfpq: the structurally slowest query (multi-stage probe
+#:   join + two UDF families) runs alphabetically BEFORE ann_topk_pq, so
+#:   it cannot inherit a warm fit cache (VERDICT r6 "Next round" #3).
+#: * event_pagerank: the first pagerank call's shapes; the sf0.001
+#:   transition graph is the same 5-node graph (VERDICT r6 #3).
+#: * quality_classifier: its literal-array logit and map-only scoring
+#:   shapes (VERDICT r6 #3).
+#: * stream_rouge: the streaming micro-batch harness compiles its own
+#:   codegen for the rouge clip HOFs, not shared with rouge_eval's batch
+#:   shape; cold first call 10.8s at sf0.1 and 10.1s at sf0.001, warmed
+#:   sf0.1 2.2s / 1.8s (receipts in OPTIMIZATION_r14.md).
+WARM_QUERIES = (
+    "bm25_search", "dedup_minhash", "ann_topk_ivfpq", "event_pagerank",
+    "quality_classifier", "stream_rouge",
+)
+
+
 def main() -> None:
     # warn (stderr, non-fatal) if the working-tree BENCH_FULL.json is a
     # contended driver record that must not be committed
@@ -76,33 +98,7 @@ def main() -> None:
     warm_sf = "/root/testdata/sf0.001"
     if os.path.isdir(warm_sf):
         all_queries = entrymod.queries()
-        # ann_topk_ivfpq: the structurally slowest query (multi-stage
-        # probe join + two UDF families) runs alphabetically BEFORE
-        # ann_topk_pq, so it cannot inherit a warm fit cache — warm its
-        # unique plan shapes (encode UDF, ADC pair scoring, probe
-        # broadcast join) here instead (VERDICT r6 "Next round" #3)
-        # event_pagerank: first call pays ~6s of one-time cost (the
-        # localCheckpoint RDD-scan path, iterated-join codegen) that
-        # no earlier alphabetical query warms — the sf0.001 graph is
-        # the same 5-node transition graph, so the warm run compiles
-        # identical shapes
-        # quality_classifier: its literal-array logit/gradient shapes
-        # (GD training + map-only scoring) are unique to it and pay
-        # ~6s of first-call codegen no earlier query warms — same
-        # rationale as the ivfpq/pagerank entries (VERDICT r6 #3)
-        # stream_rouge (r14): the STREAMING micro-batch harness
-        # compiles its own codegen for the rouge clip HOFs — the
-        # batch shape warmed by rouge_eval does not share it. The
-        # one-time cost is scale-INDEPENDENT, i.e. a measurement
-        # artifact, not engine work: cold first call 10.8s at sf0.1
-        # AND 10.1s at sf0.001 (same machine, same session shape),
-        # warmed sf0.1 wall 2.2s / 1.8s on repeats (receipts in
-        # OPTIMIZATION_r14.md). Same measurement-bug rationale as the
-        # entries above: the sf0.001 run generates identical code, so
-        # the timed run measures the engine, not first-call JIT.
-        for wname in ("bm25_search", "dedup_minhash", "ann_topk_ivfpq",
-                      "event_pagerank", "quality_classifier",
-                      "stream_rouge"):
+        for wname in WARM_QUERIES:
             try:
                 all_queries[wname](spark, warm_sf).write.format("noop").mode(
                     "overwrite"

@@ -233,7 +233,12 @@ from meta_frame_spark.operators.basket import basket_sizes, co_occurrence
 from meta_frame_spark.operators.bloom import bloom_build, bloom_probe
 from meta_frame_spark.operators.cardest import join_cardinality_estimate
 from meta_frame_spark.operators.cms import cms_build, cms_lookup, cms_merge
-from meta_frame_spark.operators.graph import degree_stats, pagerank, triangle_count
+from meta_frame_spark.operators.graph import (
+    degree_stats,
+    pagerank,
+    pair_graph_stats,
+    triangle_count,
+)
 from meta_frame_spark.operators.rp import rp_project, rp_rescore_topk, rp_topk
 from meta_frame_spark.operators.skew import (
     key_skew_report,
@@ -265,6 +270,7 @@ __all__ = [
     "degree_stats",
     "join_cardinality_estimate",
     "pagerank",
+    "pair_graph_stats",
     "triangle_count",
     "rp_project",
     "rp_rescore_topk",

@@ -67,8 +67,10 @@ boilerplate (3.0M band pairs, distributed: 7.47 s instead of 6.43 s).
 
 Dual-path operators and their default caps:
 
-* ``dedup.dup_clusters`` and ``dedup.dup_cluster_sizes`` — 100,000
-  pairs (:func:`union_find`);
+* ``dedup.dup_clusters`` and ``dedup.dup_cluster_sizes`` —
+  ``dedup.UNION_FIND_CAP`` = 100,000 pairs (:func:`union_find`);
+  ``graph.pair_graph_stats`` gates on the same cap, with no
+  ``driver_threshold``;
 * ``similarity.embedding_near_dup_pairs`` — ``row_cap(4 * (5 * dim +
   4 * n_planes))`` vectors: 29,127 at dim 64 with 64 planes (float64
   vectors and their normalized copy, the float32 collected copy,
@@ -79,10 +81,22 @@ Dual-path operators and their default caps:
   the count at which documents of the fixtures' mean length fill
   ``DRIVER_BYTES``, and at most ``DRIVER_BYTES`` of working set (16
   bytes a token plus 8 a signature value and a fixed 136) and
-  ``dedup.PAIR_CAP`` = 2,097,152 summed band pairs.
+  ``dedup.PAIR_CAP`` = 2,097,152 summed band pairs;
+* ``graph.pagerank`` — ``row_cap(256)`` = 262,144 edges (collected ids
+  and weight, node lookup, index and rank arrays); string or binary
+  ids add twice their bytes, passed as ``row_bytes``;
+* ``logreg.train_text_classifier`` — ``row_cap(80 + 40 * 54)`` =
+  29,959 labeled documents of the fixtures' mean length, and at most
+  ``DRIVER_BYTES`` of working set (40 bytes a bucket instance plus 80 a
+  document, passed as ``row_bytes``);
+* ``decontaminate.embedding_contamination`` — ``row_cap(32 * dim)``
+  benchmark vectors: 32,768 at dim 64 (the collected, float64,
+  normalized and task-shipped copies); wrong-length vectors are nulled
+  before the collect.
 
-Every operator takes the cap as ``driver_threshold``; 0 forces the
-distributed branch without running a gate job. Each decision is
+Every operator but ``pair_graph_stats`` takes the cap as
+``driver_threshold``; 0 forces the distributed branch without running
+a gate job. Each decision is
 logged at INFO on this module's logger, one line naming the operator,
 the branch and the measured size against the cap.
 """

@@ -23,9 +23,13 @@ Scale design (100 TB corpus vs ~MB-scale benchmark set):
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from meta_frame_spark.operators.bounded import bounded_collect, row_cap
 from meta_frame_spark.operators.dedup import _shingles
 from meta_frame_spark.operators.skew import ensure_min_partitions
 
@@ -176,7 +180,7 @@ def embedding_contamination(
     planes_per_band: int = 6,
     num_bands: int = 32,
     seed: int = 42,
-    max_exact_bench: int = 100_000,
+    driver_threshold: int | None = None,
 ) -> DataFrame:
     """Per-corpus-row contamination report against an eval set in
     EMBEDDING space (VERDICT r10 "Next round" #8): ``(id_col,
@@ -186,10 +190,15 @@ def embedding_contamination(
     paraphrased eval question shares no 13-gram but sits at
     cosine ~1 of its source).
 
-    Scale design, exact arm (benchmark row count <= ``max_exact_bench``
-    — the common case; an eval set is small by definition): the
-    normalized benchmark matrix ships to every task as a closure
-    (nb x dim float64, ~50 MB at the 100k default cap) and ONE Arrow
+    Dual path (see :mod:`.bounded`): the benchmark decides the arm.
+
+    Exact arm (benchmark row count <= ``driver_threshold`` — the common
+    case; an eval set is small by definition; default: as many as fit
+    ``bounded.DRIVER_BYTES`` at 32 bytes a value, 32,768 vectors at dim
+    64): one bounded Arrow collect of the benchmark, wrong-length
+    vectors nulled JVM-side; the normalized benchmark matrix, built
+    from the flattened column, ships to every task as a closure
+    (nb x dim float64, 16 MiB at the default cap) and ONE Arrow
     ``mapInPandas`` over the corpus scores each batch against ALL
     benchmark vectors in a single BLAS matmul — recall exactly 1.0 by
     construction, zero joins, zero shuffles, O(N·nb·dim) flops that
@@ -201,7 +210,8 @@ def embedding_contamination(
     interpreted ``zip_with``+``aggregate`` dot (HOFs are
     CodegenFallback), strictly more work than one exact matmul.
 
-    LSH arm (benchmark larger than ``max_exact_bench``): vectors are
+    LSH arm (benchmark larger than ``driver_threshold``, or
+    ``driver_threshold=0``): vectors are
     NORMALIZED map-side FIRST (SRP sign bits are invariant under
     positive scaling, so buckets are unchanged and each candidate
     pair costs ONE dot instead of a dot plus two norms), then both
@@ -219,7 +229,7 @@ def embedding_contamination(
     convention — below any sane threshold).
 
     Two exact-arm contract notes (ADVICE r14): (1) the arm is EAGER —
-    ``benchmark.limit(cap+1).collect()`` runs at CALL time to pick the
+    the bounded benchmark collect runs at CALL time to pick the
     arm and freeze the benchmark matrix, so the benchmark plan
     executes even if the returned report is never consumed, and the
     report scores against benchmark data as of the call (the LSH arm
@@ -243,72 +253,63 @@ def embedding_contamination(
             ).alias(vec_col),
         ).filter(F.col(vec_col).isNotNull())
 
-    if max_exact_bench > 0:
-        bench_rows = (
-            benchmark.select(id_col, vec_col)
-            .limit(max_exact_bench + 1)
-            .collect()
+    if driver_threshold is None:
+        # the float32 collected copy, the float64 copy, its normalized
+        # copy and the pickled copy shipped to tasks: 28 bytes a value
+        driver_threshold = row_cap(32 * dim)
+    # wrong-length vectors match nothing: null them JVM-side so every
+    # collected row is at most ``dim`` floats wide
+    fixed = F.when(F.size(vec_col) == dim, F.col(vec_col)).alias(vec_col)
+    local = bounded_collect(
+        benchmark.select(id_col, fixed), driver_threshold,
+        "embedding_contamination",
+    )
+    if local is not None:
+        vecs = local.column(1).combine_chunks()
+        B = (
+            pc.drop_null(vecs).flatten()
+            .to_numpy(zero_copy_only=False).astype(np.float64).reshape(-1, dim)
         )
-        if len(bench_rows) <= max_exact_bench:
-            import numpy as np
-            import pandas as pd
+        nrm = np.linalg.norm(B, axis=1)
+        bmat_t = (B[nrm > 0] / nrm[nrm > 0, None]).T  # (dim, nb)
 
-            vecs = []
-            for r in bench_rows:
-                v = r[1]
-                if v is None or len(v) != dim:
+        def _score(batches):
+            for pdf in batches:
+                vs = pdf[vec_col]
+                valid = np.flatnonzero(vs.notna().to_numpy())
+                if not len(valid) or bmat_t.shape[1] == 0:
                     continue
-                a = np.asarray(v, dtype=np.float64)
-                n = float(np.linalg.norm(a))
-                if n > 0:
-                    vecs.append(a / n)
-            bmat_t = (
-                np.stack(vecs).T if vecs else np.zeros((dim, 0))
-            )  # (dim, nb)
+                X = np.stack(vs.iloc[valid].to_list()).astype(np.float64)
+                nrm = np.linalg.norm(X, axis=1)
+                ok = nrm > 0
+                if not ok.any():
+                    continue
+                S = (X[ok] / nrm[ok, None]) @ bmat_t  # (nx, nb)
+                hit = S >= threshold
+                nh = hit.sum(1)
+                any_hit = nh > 0
+                if not any_hit.any():
+                    continue
+                idx = valid[ok][any_hit]
+                yield pd.DataFrame({
+                    "_id": pdf[id_col].iloc[idx].values,
+                    "n_bench_hits": nh[any_hit].astype(np.int64),
+                    "_mc": np.where(hit, S, -np.inf).max(1)[any_hit],
+                })
 
-            def _score(batches):
-                for pdf in batches:
-                    vs = pdf[vec_col]
-                    valid = [
-                        i for i, v in enumerate(vs)
-                        if v is not None and len(v) == dim
-                    ]
-                    if not valid or bmat_t.shape[1] == 0:
-                        continue
-                    X = np.stack(
-                        [np.asarray(vs.iloc[i], dtype=np.float64)
-                         for i in valid]
-                    )
-                    nrm = np.linalg.norm(X, axis=1)
-                    ok = nrm > 0
-                    if not ok.any():
-                        continue
-                    S = (X[ok] / nrm[ok, None]) @ bmat_t  # (nx, nb)
-                    hit = S >= threshold
-                    nh = hit.sum(1)
-                    any_hit = nh > 0
-                    if not any_hit.any():
-                        continue
-                    idx = np.asarray(valid)[ok][any_hit]
-                    yield pd.DataFrame({
-                        "_id": pdf[id_col].iloc[idx].values,
-                        "n_bench_hits": nh[any_hit].astype(np.int64),
-                        "_mc": np.where(hit, S, -np.inf).max(1)[any_hit],
-                    })
-
-            id_type = corpus.schema[id_col].dataType.simpleString()
-            return (
-                corpus.select(id_col, vec_col)
-                .mapInPandas(
-                    _score,
-                    f"_id {id_type}, n_bench_hits long, _mc double",
-                )
-                .select(
-                    F.col("_id").alias(id_col),
-                    "n_bench_hits",
-                    F.round("_mc", 4).alias("max_cosine"),
-                )
+        id_type = corpus.schema[id_col].dataType.simpleString()
+        return (
+            corpus.select(id_col, fixed)
+            .mapInPandas(
+                _score,
+                f"_id {id_type}, n_bench_hits long not null, _mc double",
             )
+            .select(
+                F.col("_id").alias(id_col),
+                "n_bench_hits",
+                F.round("_mc", 4).alias("max_cosine"),
+            )
+        )
 
     planes = _srp_planes(dim, planes_per_band * num_bands, seed)
     cb = _bucketize(_unit(corpus), id_col, vec_col, planes,

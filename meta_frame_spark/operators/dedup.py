@@ -130,20 +130,30 @@ _MERSENNE = (1 << 31) - 1
 #: before they are collected.
 _DOC_OVERHEAD = 136
 
+#: Mean document length of the fixtures, in whitespace tokens: the
+#: length the document operators' default driver caps assume.
+MEAN_TOKENS = 54
+
 #: Default driver cap of :func:`minhash_lsh_dedup`, in documents: as
-#: many as fill ``bounded.DRIVER_BYTES`` at the fixtures' mean length of
-#: 54 tokens and 64 hashes (44,384). The driver branch won up to the
+#: many as fill ``bounded.DRIVER_BYTES`` at :data:`MEAN_TOKENS` tokens
+#: and 64 hashes (44,384). The driver branch won up to the
 #: 80,000 documents measured unless a mega-bucket outgrew
 #: :data:`PAIR_CAP` (crossover table in :mod:`.bounded`), so memory
 #: sets it; longer documents are stopped earlier by the gate's byte
 #: total.
-DOC_CAP = row_cap(16 * 54 + 8 * 64 + _DOC_OVERHEAD)
+DOC_CAP = row_cap(16 * MEAN_TOKENS + 8 * 64 + _DOC_OVERHEAD)
 
 #: Candidate pairs, summed over bands, the driver branch of
 #: :func:`minhash_lsh_dedup` may build: 32 bytes each (the pair's rows
 #: while a band is expanded and its key through the final unique), so
 #: the candidates stay within ``bounded.DRIVER_BYTES`` too.
 PAIR_CAP = row_cap(32)
+
+#: Dup pairs the driver branches of :func:`dup_clusters`,
+#: :func:`dup_cluster_sizes` and ``graph.pair_graph_stats`` collect at
+#: most: a dict pass (union-find, or adjacency sets) over at most this
+#: many pairs finishes in well under a second.
+UNION_FIND_CAP = 100_000
 
 
 def _shingles(text_col, n: int = 5):
@@ -789,7 +799,7 @@ def near_dedup_against(
 # --------------------------------------------------------------------------
 
 def dup_clusters(
-    pairs: DataFrame, max_iter: int = 50, driver_threshold: int = 100_000
+    pairs: DataFrame, max_iter: int = 50, driver_threshold: int = UNION_FIND_CAP
 ) -> DataFrame:
     """Connected components over near-dup pairs: (node, cluster) where
     ``cluster`` is the minimum id reachable through dup edges.
@@ -881,7 +891,9 @@ def dup_clusters(
     return labels.select(F.col("node"), F.col("label").alias("cluster"))
 
 
-def dup_cluster_sizes(pairs: DataFrame, driver_threshold: int = 100_000) -> DataFrame:
+def dup_cluster_sizes(
+    pairs: DataFrame, driver_threshold: int = UNION_FIND_CAP
+) -> DataFrame:
     """Node count per :func:`dup_clusters` cluster: ``(cluster,
     n_nodes)``. Below ``driver_threshold`` pairs the census is a counter
     over the driver union-find's roots, with no distributed groupBy over

@@ -33,14 +33,40 @@ Scale design (billion-edge graphs):
 * Total work: O(n_iter * |E|) — linear per round, fixed rounds; at
   100 TB the edge list partitions on the join key once up front and
   every round reuses that layout.
+
+``pagerank`` and ``pair_graph_stats`` are dual-path (:mod:`.bounded`):
+a graph whose edge list fits the driver runs the same arithmetic in
+numpy on one bounded Arrow collect, with no per-round jobs.
 """
 
 from __future__ import annotations
 
 import math
+from collections import defaultdict
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_type
+
+from meta_frame_spark.operators.bounded import bounded_collect, row_cap
+from meta_frame_spark.operators.cache import track
+from meta_frame_spark.operators.dedup import UNION_FIND_CAP
+
+#: Driver bytes of one edge in :func:`pagerank`'s driver branch: the
+#: collected ids and weight, the node lookup and the two index arrays,
+#: the per-edge share and its per-round products, and the rank vectors
+#: of the at most two nodes an edge adds. String or binary ids add
+#: twice their bytes (the collected copy and the node list).
+_EDGE_BYTES = 256
+
+_NO_SEED = (
+    "teleport_to: no seed matches any graph node; "
+    "personalized PageRank needs at least one in-graph seed"
+)
 
 
 def pagerank(
@@ -52,12 +78,22 @@ def pagerank(
     weight_col: str | None = None,
     teleport_to: list | None = None,
     eps: float | None = None,
+    driver_threshold: int = row_cap(_EDGE_BYTES),
 ) -> DataFrame:
     """``(node, rank)`` after ``n_iter`` damped power-iteration rounds.
     With ``weight_col`` each edge passes rank in proportion to its
     weight share of the source's outgoing total (the weighted random
     surfer); without it, multi-edges contribute multiply — pass a
-    ``.distinct()`` edge list for an unweighted graph.
+    ``.distinct()`` edge list for an unweighted graph. An edge with a
+    null endpoint or a null weight is dropped: a null id is no node.
+
+    Dual path (see :mod:`.bounded`). Edge lists of at most
+    ``driver_threshold`` edges (default: as many as fit
+    ``bounded.DRIVER_BYTES`` at ``_EDGE_BYTES`` each; string ids are
+    bounded by their bytes too) run on the driver: one bounded Arrow
+    collect (two for string ids), then the same float64 recurrence in
+    numpy (:func:`_pagerank_driver`). ``driver_threshold=0`` forces
+    the distributed loop below.
 
     ``eps`` turns on convergence early-stop and makes ``n_iter`` a MAX:
     the loop stops once the L1 delta between successive rank vectors
@@ -105,51 +141,42 @@ def pagerank(
     )
     # every round re-joins the edge list — persist it once up front so
     # an expensive upstream derivation (e.g. a window over raw events)
-    # doesn't re-execute n_iter times
-    e = edges.select(
-        F.col(src_col).alias("src"), F.col(dst_col).alias("dst"), w.alias("w")
-    ).persist()
+    # doesn't re-execute n_iter times (or twice for a two-job gate)
+    e = (
+        edges.select(
+            F.col(src_col).alias("src"), F.col(dst_col).alias("dst"), w.alias("w")
+        )
+        .filter(
+            F.col("src").isNotNull() & F.col("dst").isNotNull() & F.col("w").isNotNull()
+        )
+        .persist()
+    )
     nodes = (
         e.select(F.col("src").alias("node"))
         .union(e.select(F.col("dst").alias("node")))
         .distinct()
-        .persist()
     )
+    row_bytes = None
+    if any(
+        isinstance(e.schema[c].dataType, (T.StringType, T.BinaryType))
+        for c in ("src", "dst")
+    ):
+        row_bytes = (
+            2 * (F.octet_length("src") + F.octet_length("dst")) + _EDGE_BYTES
+        )
+    local = bounded_collect(e, driver_threshold, "pagerank", row_bytes)
+    if local is not None:
+        e.unpersist()
+        return _pagerank_driver(
+            edges.sparkSession, local, nodes.schema.fields[0],
+            damping, n_iter, teleport_to, eps,
+        )
+    nodes = nodes.persist()
     n = nodes.count()  # bounded driver scalar: |V|
     if n == 0:
         nodes.unpersist()
         e.unpersist()
         return nodes.select(F.col("node"), F.lit(0.0).alias("rank"))
-    # Small-graph driver fast path (r14 optimization, guide §1.2 "the
-    # distributed algorithm" + §5 "the driver"): each distributed
-    # round is a join + aggregate + localCheckpoint materialization —
-    # pure scheduling latency on a graph that fits in one task. When
-    # the graph is MODEL-sized (vocabulary co-occurrence, host graphs,
-    # event-transition graphs — the same bounded class as the k-means
-    # codebook collects elsewhere in this repo), collect the
-    # normalized edge list once and run the identical float64 power
-    # iteration in numpy: same formula, same eps-check schedule, same
-    # stop rule, so results agree to summation-reorder noise (below
-    # the 6dp presentation rounding, exactly like any distributed
-    # re-partitioning). Thresholds are conf-parameterised; a
-    # billion-edge graph takes the distributed loop unchanged.
-    spark = edges.sparkSession
-    max_n = int(
-        spark.conf.get("spark.meta_frame.pagerank.driverMaxNodes", "20000")
-    )
-    max_m = int(
-        spark.conf.get("spark.meta_frame.pagerank.driverMaxEdges", "500000")
-    )
-    if n <= max_n:
-        m = e.count()  # bounded: counts the persisted edge frame
-        if m <= max_m:
-            try:
-                return _pagerank_driver(
-                    spark, e, nodes, n, damping, n_iter, teleport_to, eps
-                )
-            finally:
-                nodes.unpersist()
-                e.unpersist()
     # Size the per-round rank frame to the GRAPH, not the session
     # default: a 5-node transition graph spread over 32 shuffle
     # partitions pays 10 rounds x 32 near-empty tasks of pure
@@ -184,10 +211,7 @@ def pagerank(
             nodes.unpersist()
             deg.unpersist()
             e.unpersist()
-            raise ValueError(
-                "teleport_to: no seed matches any graph node; "
-                "personalized PageRank needs at least one in-graph seed"
-            )
+            raise ValueError(_NO_SEED)
         # weight mass only on seeds that exist in the graph — absent
         # seeds get nothing (their 1/present share would leak out of
         # the walk) rather than silently shrinking everyone's share
@@ -291,34 +315,31 @@ def pagerank(
 
 def _pagerank_driver(
     spark,
-    e: DataFrame,
-    nodes: DataFrame,
-    n: int,
+    local: pa.Table,
+    node_field: T.StructField,
     damping: float,
     n_iter: int,
     teleport_to: list | None,
     eps: float | None,
 ) -> DataFrame:
-    """Driver-side power iteration for MODEL-sized graphs (see the
-    dispatch comment in :func:`pagerank`): one bounded collect of the
-    node list + edge list, then the identical float64 recurrence in
-    numpy. Checks the convergence delta every round (free here), which
-    can only stop at or before the distributed schedule — any
-    difference is inside the eps contraction bound and invisible at
-    the repo's 6dp presentation rounding."""
-    import numpy as np
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
-    node_rows = [r[0] for r in nodes.collect()]
-    node_rows.sort(key=lambda v: (v is None, v))
-    idx = {v: i for i, v in enumerate(node_rows)}
-    edges = e.collect()
-    si = np.fromiter((idx[r.src] for r in edges), dtype=np.int64,
-                     count=len(edges))
-    di = np.fromiter((idx[r.dst] for r in edges), dtype=np.int64,
-                     count=len(edges))
-    w = np.fromiter((r.w for r in edges), dtype=np.float64,
-                    count=len(edges))
+    """Driver branch of :func:`pagerank` on the collected ``(src, dst,
+    w)`` edges: the node set is the distinct endpoints, and the same
+    float64 recurrence as the distributed loop runs in numpy. It checks
+    the convergence delta every round (free here), so it stops at or
+    before the distributed schedule; any difference is inside the eps
+    contraction bound and invisible at the repo's 6dp presentation
+    rounding."""
+    node_type = to_arrow_type(node_field.dataType)
+    src = local.column("src").cast(node_type)
+    dst = local.column("dst").cast(node_type)
+    ids = pc.unique(pa.chunked_array(src.chunks + dst.chunks, type=node_type))
+    n = len(ids)
+    schema = T.StructType([node_field, T.StructField("rank", T.DoubleType(), False)])
+    if n == 0:
+        return spark.createDataFrame([], schema)
+    si = pc.index_in(src, value_set=ids).to_numpy()
+    di = pc.index_in(dst, value_set=ids).to_numpy()
+    w = local.column("w").to_numpy()
     out_w = np.zeros(n, dtype=np.float64)
     np.add.at(out_w, si, w)
     p = w / out_w[si]
@@ -328,15 +349,12 @@ def _pagerank_driver(
     else:
         # normalize over the DISTINCT IN-GRAPH seeds (same contract as
         # the distributed branch: duplicates and absent seeds are inert)
-        seeds = {s for s in set(teleport_to) if s in idx}
-        if not seeds:
-            raise ValueError(
-                "teleport_to: no seed matches any graph node; "
-                "personalized PageRank needs at least one in-graph seed"
-            )
-        t = np.zeros(n, dtype=np.float64)
-        for s in seeds:
-            t[idx[s]] = 1.0 / len(seeds)
+        seeds = pc.is_in(
+            ids, value_set=pa.array(sorted(set(teleport_to)), type=node_type)
+        ).to_numpy(zero_copy_only=False)
+        if not seeds.any():
+            raise ValueError(_NO_SEED)
+        t = np.where(seeds, 1.0 / int(seeds.sum()), 0.0)
     rank = t.copy()
     for _ in range(n_iter):
         contrib = np.zeros(n, dtype=np.float64)
@@ -347,11 +365,54 @@ def _pagerank_driver(
         rank = new_rank
         if eps is not None and delta < eps:
             break
-    schema = StructType(
-        [nodes.schema.fields[0], StructField("rank", DoubleType(), True)]
+    return spark.createDataFrame(pa.table({"node": ids, "rank": rank}), schema)
+
+
+def pair_graph_stats(pairs: DataFrame) -> DataFrame:
+    """:func:`degree_stats` and :func:`triangle_count` of the undirected
+    graph over dup pairs ``(id_a, id_b)``, in one row: ``(n_nodes,
+    n_edges, max_degree, avg_degree, n_triangles)``.
+
+    Dual path (see :mod:`.bounded`). At most ``dedup.UNION_FIND_CAP``
+    pairs are collected and counted on the driver (adjacency sets, then
+    each triangle once from its lowest edge), the derived columns going
+    through the same Spark expressions as the operators', so every
+    value is bit-identical to theirs. Larger pair lists run both
+    operators over one persisted pair frame."""
+    local = bounded_collect(
+        pairs.select("id_a", "id_b"), UNION_FIND_CAP, "pair_graph_stats"
     )
-    return spark.createDataFrame(
-        [(v, float(rank[i])) for i, v in enumerate(node_rows)], schema
+    if local is None:
+        e = track(pairs.persist()).select(
+            F.col("id_a").alias("src"), F.col("id_b").alias("dst")
+        )
+        return degree_stats(e).crossJoin(triangle_count(e))
+    adj: dict = defaultdict(set)
+    for a, b in zip(local.column(0).to_pylist(), local.column(1).to_pylist()):
+        # least/greatest skip a null, so the distributed census sees a
+        # pair with a null end as a self-loop and drops it
+        if a is not None and b is not None and a != b:
+            adj[a].add(b)
+            adj[b].add(a)
+    tri = 0
+    for a, nbrs in adj.items():
+        for b in nbrs:
+            if b > a:
+                na, nb = nbrs, adj[b]
+                if len(nb) < len(na):
+                    na, nb = nb, na
+                tri += sum(1 for c in na if c > b and c in nb)
+    degs = [len(s) for s in adj.values()]
+    base = pairs.sparkSession.createDataFrame(
+        [(len(adj), sum(degs) if degs else None, max(degs, default=None), tri)],
+        "n_nodes long, _sumdeg long, max_degree long, n_triangles long",
+    )
+    return base.select(
+        "n_nodes",
+        (F.col("_sumdeg") / 2).cast("long").alias("n_edges"),
+        "max_degree",
+        F.round(F.col("_sumdeg") / F.col("n_nodes"), 6).alias("avg_degree"),
+        "n_triangles",
     )
 
 

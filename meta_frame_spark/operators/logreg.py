@@ -26,7 +26,8 @@ Scale design (the same bounded-state discipline as kmeans/pq fits):
   shuffle), and reduces the gradient with one groupBy whose output
   is bounded by V rows (map-side partials make the exchange
   kilobytes at any corpus size). Driver state per step: V + 1
-  doubles — never data rows.
+  doubles — never data rows. A labeled set that fits the driver runs
+  the same GD in numpy on one bounded collect (:mod:`.bounded`).
 * Full-batch (not stochastic) on purpose: the fit is a pure
   function of the input set, so the same weights come out on any
   cluster, partitioning, or engine — which is what makes the DuckDB
@@ -42,11 +43,27 @@ from __future__ import annotations
 
 import math
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from meta_frame_spark.operators.bounded import bounded_collect, row_cap
 from meta_frame_spark.operators.cache import track
-from meta_frame_spark.operators.dedup import _shingles
+from meta_frame_spark.operators.dedup import MEAN_TOKENS, _shingles
+
+#: Driver bytes of one n-gram instance in :func:`_train_driver`: the
+#: collected int32 bucket, its int64 copy, its weight, the weights'
+#: prefix sum and the repeated residual.
+_GRAM_BYTES = 40
+#: Driver bytes of one document beyond its n-grams: the collected label
+#: and list offset, and the per-document length, end, logit and
+#: residual arrays.
+_DOC_BYTES = 80
+
+
+_NO_ROWS = "train_text_classifier: no non-null text and label rows"
 
 
 def _bucket_array(text_col: str, n: int, hex_chars: int) -> Column:
@@ -80,10 +97,12 @@ def train_text_classifier(
     hex_chars: int = 2,
     iters: int = 3,
     learning_rate: float = 1.0,
+    driver_threshold: int = row_cap(_DOC_BYTES + _GRAM_BYTES * MEAN_TOKENS),
 ) -> list[float]:
     """Fit the classifier on rows labeled 0/1 in ``label_col``;
     returns ``[bias, w_0 .. w_{V-1}]`` (V + 1 floats — bounded driver
-    state, the kmeans-centroid contract). Null-text rows are ignored.
+    state, the kmeans-centroid contract). Rows with a null text or a
+    null label are ignored.
 
     Update rule (plain full-batch GD from w = 0, which makes step 1's
     probabilities exactly 0.5 — handy for oracle replay)::
@@ -99,6 +118,17 @@ def train_text_classifier(
     separate count() job, and round 1 needs no N up front because the
     update applies AFTER the gradients land. Everything the driver
     ever holds is V + 1 doubles and the row count.
+
+    Dual path (see :mod:`.bounded`). Labeled sets of at most
+    ``driver_threshold`` documents (default: as many as fill
+    ``bounded.DRIVER_BYTES`` at ``dedup.MEAN_TOKENS`` tokens) whose
+    n-grams fit ``bounded.DRIVER_BYTES`` run the same full-batch GD in
+    numpy on one bounded Arrow collect of the bucket arrays
+    (:func:`_train_driver`): a labeled exemplar set is model-sized by
+    construction, and each distributed round is one job of scheduling
+    latency. Gradient sums differ from the distributed partial
+    aggregation only in summation order (tests pin 1e-9).
+    ``driver_threshold=0`` forces the distributed loop.
     """
     if iters < 1:
         raise ValueError(f"iters must be >= 1, got {iters}")
@@ -110,42 +140,19 @@ def train_text_classifier(
     v = 16 ** hex_chars
     y = F.col(label_col).cast("double")
     doc_arr = track(
-        df.filter(F.col(text_col).isNotNull())
+        df.filter(F.col(text_col).isNotNull() & F.col(label_col).isNotNull())
         .select(y.alias("_y"), _bucket_array(text_col, n, hex_chars).alias("_ba"))
         .persist()
     )
-    # Small-corpus driver fast path (r15 optimization, guide §1.2 "the
-    # distributed algorithm" + §5 "the driver" — the _pagerank_driver
-    # pattern): each distributed GD round is a cached scan + explode +
-    # groupBy + collect, i.e. one full Spark job of scheduling latency
-    # per iteration for a model whose sufficient statistics (the
-    # per-doc bucket arrays) fit in one task when the labeled exemplar
-    # set is MODEL-sized — which a quality-classifier training set is
-    # by construction (CCNet/GPT-3 train on a bounded exemplar corpus,
-    # not the pool). Collect the bucket arrays ONCE (bounded by the
-    # conf'd doc cap — the dup_clusters limit-collect shape, and the
-    # limit scan warms the persist the distributed loop reuses if the
-    # cap is exceeded) and run the identical float64 full-batch GD in
-    # numpy: same update rule, same N scaling, same iteration count;
-    # per-doc logits fold the same per-instance weights, and gradient
-    # sums differ from the distributed partial-aggregation order only
-    # in summation-reorder ulps (the documented tolerance of this fit
-    # — test_train_deterministic_under_partitioning pins 1e-9, and
-    # every consumer rounds to 6dp). A 10^9-doc labeled set takes the
-    # distributed loop unchanged.
-    max_docs = int(
-        df.sparkSession.conf.get(
-            "spark.meta_frame.logreg.driverMaxDocs", "50000"
-        )
+    local = bounded_collect(
+        doc_arr, driver_threshold, "train_text_classifier",
+        row_bytes=_GRAM_BYTES * F.size("_ba") + _DOC_BYTES,
     )
-    if max_docs > 0:
-        rows = doc_arr.limit(max_docs + 1).collect()
-        if len(rows) <= max_docs:
-            if not rows:
-                raise ValueError(
-                    "train_text_classifier: no non-null-text rows"
-                )
-            return _train_driver(rows, v, iters, learning_rate)
+    if local is not None:
+        doc_arr.unpersist()
+        if not local.num_rows:
+            raise ValueError(_NO_ROWS)
+        return _train_driver(local, v, iters, learning_rate)
     n_rows = None
     weights = [0.0] * (v + 1)
     for _ in range(iters):
@@ -178,9 +185,7 @@ def train_text_classifier(
                 int(row._n) for row in grad_rows if row._b == -1
             )
             if n_rows == 0:
-                raise ValueError(
-                    "train_text_classifier: no non-null-text rows"
-                )
+                raise ValueError(_NO_ROWS)
         step = learning_rate / n_rows
         for row in grad_rows:
             idx = 0 if row._b == -1 else row._b + 1
@@ -188,32 +193,26 @@ def train_text_classifier(
     return weights
 
 
-def _train_driver(rows, v: int, iters: int, learning_rate: float) -> list[float]:
-    """Driver-side full-batch GD over collected ``(_y, _ba)`` rows —
+def _train_driver(
+    local: pa.Table, v: int, iters: int, learning_rate: float
+) -> list[float]:
+    """Driver-side full-batch GD over the collected ``(_y, _ba)`` table,
+    read through the bucket arrays' list offsets and flattened values —
     identical arithmetic to the distributed loop (float64, same update
     rule, same N scaling; summation order differs only the way any
-    re-partitioning of the distributed loop would). Bounded by the
-    caller's conf'd collect cap."""
-    import numpy as np
-
-    lens = np.array([len(r._ba) for r in rows], dtype=np.int64)
-    yv = np.array([float(r._y) for r in rows])
-    n_rows = len(rows)
-    flat = (
-        np.concatenate([np.asarray(r._ba, dtype=np.int64) for r in rows])
-        if int(lens.sum()) else np.empty(0, dtype=np.int64)
-    )
+    re-partitioning of the distributed loop would)."""
+    ba = local.column("_ba").combine_chunks()
+    lens = pc.list_value_length(ba).to_numpy().astype(np.int64)
+    flat = ba.flatten().to_numpy().astype(np.int64)
+    yv = local.column("_y").to_numpy()
     ends = np.cumsum(lens)
+    step = learning_rate / local.num_rows
     w = np.zeros(v + 1)
     for _ in range(iters):
-        per = w[1:][flat] if flat.size else flat.astype(np.float64)
-        cs = np.concatenate(([0.0], np.cumsum(per)))
+        cs = np.concatenate(([0.0], np.cumsum(w[1:][flat])))
         z = w[0] + (cs[ends] - cs[ends - lens])
         resid = 1.0 / (1.0 + np.exp(-z)) - yv
-        step = learning_rate / n_rows
-        gw = np.bincount(
-            flat, weights=np.repeat(resid, lens), minlength=v
-        ) if flat.size else np.zeros(v)
+        gw = np.bincount(flat, weights=np.repeat(resid, lens), minlength=v)
         w[0] -= step * float(resid.sum())
         w[1:] -= step * gw
     return [float(x) for x in w]

@@ -1,24 +1,37 @@
 """Bounded driver path (meta_frame_spark.operators.bounded) and the
 dual-path operators built on it: each operator's driver branch must
 return exactly what its distributed branch (``driver_threshold=0``)
-returns, schema included."""
+returns, schema included; the iterative fits (pagerank, logistic
+regression) within a stated float tolerance, and
+``embedding_contamination``'s exact driver arm every row of its LSH
+arm."""
 
+import ast
 import logging
 from itertools import combinations
+from pathlib import Path
 
 import numpy as np
 import pyarrow as pa
 import pytest
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from meta_frame_spark.operators import bounded, dedup, similarity
+from meta_frame_spark.operators import bounded, dedup, graph, similarity
 from meta_frame_spark.operators.bounded import bounded_collect
+from meta_frame_spark.operators.decontaminate import embedding_contamination
 from meta_frame_spark.operators.dedup import dup_clusters, minhash_lsh_dedup
+from meta_frame_spark.operators.graph import (
+    degree_stats, pagerank, pair_graph_stats, triangle_count,
+)
+from meta_frame_spark.operators.logreg import train_text_classifier
 from meta_frame_spark.operators.similarity import embedding_near_dup_pairs
 
 DOC_SCHEMA = "doc_id bigint, text string"
 VEC_SCHEMA = "vec_id bigint, embedding array<float>"
 PAIR_SCHEMA = "id_a bigint, id_b bigint"
+EDGE_SCHEMA = "src string, dst string, w double"
+LABELED_SCHEMA = "id bigint, text string, y int"
 
 #: Edge rows per input kind. Documents: null and empty texts (the empty
 #: pair is a Jaccard-1 duplicate), leading whitespace, texts shorter
@@ -37,6 +50,28 @@ EDGE_VECS = [
     (7, [0.0, 1.0, 0.0, 0.0]), (8, [-1.0, 0.0, 0.5, 0.0]),
 ]
 EDGE_PAIRS = [(1, 2), (2, 3), (5, 4), (7, 7), (8, 9), (9, 10), (10, 11)]
+#: Weighted graph (string ids): a multi-edge (a, b), a dangling sink
+#: e, and an edge from and an edge to a null id and one of null
+#: weight, which drop.
+EDGE_GRAPH = [
+    ("a", "b", 2.0), ("a", "c", 1.0), ("b", "c", 1.0), ("c", "a", 3.0),
+    ("c", "d", 1.0), ("d", "e", 1.0), (None, "a", 1.0), ("b", None, 1.0),
+    ("a", "b", 1.0), ("d", "a", None),
+]
+#: Integer ids (the fixed-width gate, one collect): a cycle, a
+#: self-loop, and a null id at either end.
+INT_GRAPH = [(1, 2), (2, 3), (3, 1), (3, None), (None, 4), (4, 4), (4, 1)]
+#: Labeled documents: null text, null label, an empty text and texts
+#: shorter than the bigram size.
+EDGE_LABELED = [
+    (1, "good clean prose here", 1), (2, "spam junk noise", 0),
+    (3, None, 1), (4, "good prose", None), (5, "", 0), (6, "good", 1),
+    (7, "junk", 0), (8, "good junk prose spam", 1),
+]
+#: 80 documents over a small vocabulary.
+MANY_LABELED = [
+    (i, "tok%d tok%d tok%d" % (i % 7, i % 3, i % 5), i % 2) for i in range(80)
+]
 #: 60 identical documents: one bucket of 1,770 pairs in every band.
 MEGA_DOCS = [(i, "same boilerplate footer text") for i in range(60)] + EDGE_DOCS[8:]
 #: 60 copies of one vector: 1,770 pairs at cosine 1.
@@ -64,6 +99,38 @@ def _emb_fixture(df, **kw):
     )
 
 
+def _pagerank(n_iter=10, **opts):
+    def run(df, **kw):
+        return pagerank(df, 0.85, n_iter, **opts, **kw)
+    return run
+
+
+def _logreg(**opts):
+    """Weights as (index, weight) rows, or the error both branches raise."""
+    def run(df, **kw):
+        try:
+            w = train_text_classifier(df, "y", **opts, **kw)
+        except ValueError as e:
+            return [(str(e),)]
+        return list(enumerate(w))
+    return run
+
+
+def _contamination(bench: str, threshold, **opts):
+    """Benchmark: the rows of the corpus matching the SQL ``bench``."""
+    def run(df, **kw):
+        return embedding_contamination(
+            df, df.filter(bench), threshold=threshold, **opts, **kw
+        )
+    return run
+
+
+def _contam_edge(df, **kw):
+    return _contamination(
+        "vec_id IN (1, 4, 8)", 0.6, dim=4, planes_per_band=1, num_bands=8,
+    )(df, **kw)
+
+
 def _fixture(name):
     def load(spark, sf_dir):
         return spark.read.parquet(f"{sf_dir}/{name}.parquet")
@@ -78,40 +145,104 @@ def _rows(rows, schema):
     return lambda spark, sf_dir: spark.createDataFrame(rows, schema)
 
 
-#: (case id, input builder, operator run(df, **kw), a row
-#: the output must hold — proof the edge case is exercised — or None)
+def _exact(got, want):
+    assert got == want
+
+
+def _close(tol):
+    """Rows equal but for the last value, which may differ by ``tol``."""
+    def check(got, want):
+        assert len(got) == len(want)
+        for g, w in zip(got, want):
+            assert g[:-1] == w[:-1] and abs(g[-1] - w[-1]) <= tol, (g, w)
+    return check
+
+
+def _within(got, want):
+    """Every distributed (LSH) row is in the exact driver result."""
+    assert set(want) <= set(got), set(want) - set(got)
+
+
+#: Summation-order noise between numpy and Spark aggregates.
+FLOAT_TOL = 1e-9
+#: pagerank's eps for the early-stop case (the edge graph's delta
+#: falls below it in round 19 of 50). Both branches run one recurrence
+#: and stop on different schedules; the earlier stop is at a round
+#: whose L1 delta is below eps, and the rounds after it move the ranks
+#: by at most eps * d / (1 - d) in L1 (the walk contracts by d a round).
+PR_EPS = 1e-4
+PR_EPS_TOL = PR_EPS * 0.85 / 0.15 + FLOAT_TOL
+ERR_NO_ROWS = ("train_text_classifier: no non-null text and label rows",)
+
+
+def case(cid, build, run, must_hold=None, compare=_exact):
+    """A row the output must hold proves the edge case is exercised."""
+    return pytest.param(build, run, must_hold, compare, id=cid)
+
+
 CASES = [
-    ("minhash-edge", _rows(EDGE_DOCS, DOC_SCHEMA), _minhash(False), (9, 10, 0.5)),
-    ("minhash-restrict-edge", _rows(EDGE_DOCS, DOC_SCHEMA), _minhash(True), (3, 4, 1.0)),
-    ("minhash-single", _rows(EDGE_DOCS[4:5], DOC_SCHEMA), _minhash(False), None),
-    ("minhash-empty", _rows([], DOC_SCHEMA), _minhash(False), None),
-    ("minhash-fixture", _fixture("documents"), _minhash(False), None),
-    ("minhash-mega-bucket", _rows(MEGA_DOCS, DOC_SCHEMA), _minhash(False), (0, 59, 1.0)),
-    ("emb-edge", _rows(EDGE_VECS, VEC_SCHEMA), _emb_edge, (1, 2, 0.6)),
-    ("emb-single", _rows(EDGE_VECS[:1], VEC_SCHEMA), _emb_edge, None),
-    ("emb-empty", _rows([], VEC_SCHEMA), _emb_edge, None),
-    ("emb-fixture", _fixture("embeddings"), _emb_fixture, None),
-    ("emb-mega-cluster", _rows(MEGA_VECS, VEC_SCHEMA), _emb_edge, (100, 159, 1.0)),
-    ("clusters-edge", _rows(EDGE_PAIRS, PAIR_SCHEMA), dup_clusters, (7, 7)),
-    ("clusters-single", _rows(EDGE_PAIRS[:1], PAIR_SCHEMA), dup_clusters, (2, 1)),
-    ("clusters-empty", _rows([], PAIR_SCHEMA), dup_clusters, None),
-    ("clusters-fixture", _fixture_pairs, dup_clusters, None),
+    case("minhash-edge", _rows(EDGE_DOCS, DOC_SCHEMA), _minhash(False), (9, 10, 0.5)),
+    case("minhash-restrict-edge", _rows(EDGE_DOCS, DOC_SCHEMA), _minhash(True), (3, 4, 1.0)),
+    case("minhash-single", _rows(EDGE_DOCS[4:5], DOC_SCHEMA), _minhash(False)),
+    case("minhash-empty", _rows([], DOC_SCHEMA), _minhash(False)),
+    case("minhash-fixture", _fixture("documents"), _minhash(False)),
+    case("minhash-mega-bucket", _rows(MEGA_DOCS, DOC_SCHEMA), _minhash(False), (0, 59, 1.0)),
+    case("emb-edge", _rows(EDGE_VECS, VEC_SCHEMA), _emb_edge, (1, 2, 0.6)),
+    case("emb-single", _rows(EDGE_VECS[:1], VEC_SCHEMA), _emb_edge),
+    case("emb-empty", _rows([], VEC_SCHEMA), _emb_edge),
+    case("emb-fixture", _fixture("embeddings"), _emb_fixture),
+    case("emb-mega-cluster", _rows(MEGA_VECS, VEC_SCHEMA), _emb_edge, (100, 159, 1.0)),
+    case("clusters-edge", _rows(EDGE_PAIRS, PAIR_SCHEMA), dup_clusters, (7, 7)),
+    case("clusters-single", _rows(EDGE_PAIRS[:1], PAIR_SCHEMA), dup_clusters, (2, 1)),
+    case("clusters-empty", _rows([], PAIR_SCHEMA), dup_clusters),
+    case("clusters-fixture", _fixture_pairs, dup_clusters),
+    case("pagerank-weighted", _rows(EDGE_GRAPH, EDGE_SCHEMA),
+         _pagerank(weight_col="w"), compare=_close(FLOAT_TOL)),
+    case("pagerank-multi-edge", _rows(EDGE_GRAPH, EDGE_SCHEMA), _pagerank(),
+         compare=_close(FLOAT_TOL)),
+    case("pagerank-teleport", _rows(EDGE_GRAPH, EDGE_SCHEMA),
+         _pagerank(weight_col="w", teleport_to=["c", "c", "not-a-node"]),
+         compare=_close(FLOAT_TOL)),
+    case("pagerank-eps", _rows(EDGE_GRAPH, EDGE_SCHEMA),
+         _pagerank(50, weight_col="w", eps=PR_EPS), compare=_close(PR_EPS_TOL)),
+    case("pagerank-int-ids", _rows(INT_GRAPH, "src bigint, dst bigint"),
+         _pagerank(teleport_to=[4]), compare=_close(FLOAT_TOL)),
+    case("pagerank-single", _rows(EDGE_GRAPH[:1], EDGE_SCHEMA), _pagerank(),
+         compare=_close(FLOAT_TOL)),
+    case("pagerank-empty", _rows([], EDGE_SCHEMA), _pagerank()),
+    case("logreg-edge", _rows(EDGE_LABELED, LABELED_SCHEMA),
+         _logreg(n=2, hex_chars=1, iters=3), compare=_close(FLOAT_TOL)),
+    case("logreg-80-docs", _rows(MANY_LABELED, LABELED_SCHEMA),
+         _logreg(n=2, hex_chars=2, iters=2), compare=_close(FLOAT_TOL)),
+    case("logreg-empty", _rows([], LABELED_SCHEMA), _logreg(), ERR_NO_ROWS),
+    case("logreg-all-null", _rows(EDGE_LABELED[2:4], LABELED_SCHEMA), _logreg(),
+         ERR_NO_ROWS),
+    case("contamination-edge", _rows(EDGE_VECS + [(None, [1.0, 0.0, 0.0, 0.0])], VEC_SCHEMA),
+         _contam_edge, (None, 1, 1.0), _within),
+    case("contamination-empty", _rows([], VEC_SCHEMA), _contam_edge),
+    case("contamination-fixture", _fixture("embeddings"),
+         _contamination("vec_id % 37 = 0", 0.9)),
 ]
 
 
-@pytest.mark.parametrize(
-    "build,run,must_hold", [c[1:] for c in CASES], ids=[c[0] for c in CASES]
-)
-def test_driver_branch_equals_distributed(spark, sf_dir, caplog, build, run, must_hold):
+def _sorted_rows(out):
+    rows = out.collect() if isinstance(out, DataFrame) else out
+    return sorted((tuple(r) for r in rows), key=lambda r: [(v is None, v) for v in r])
+
+
+@pytest.mark.parametrize("build,run,must_hold,compare", CASES)
+def test_driver_branch_equals_distributed(
+    spark, sf_dir, caplog, build, run, must_hold, compare
+):
     df = build(spark, sf_dir)
     with caplog.at_level(logging.INFO, logger="meta_frame_spark.operators.bounded"):
         driver = run(df)
     assert any(": driver path," in m for m in caplog.messages), caplog.messages
     distributed = run(df, driver_threshold=0)
-    assert driver.schema == distributed.schema
-    got = sorted(tuple(r) for r in driver.collect())
-    want = sorted(tuple(r) for r in distributed.collect())
-    assert got == want
+    if isinstance(driver, DataFrame):
+        assert driver.schema == distributed.schema
+    got, want = _sorted_rows(driver), _sorted_rows(distributed)
+    compare(got, want)
     if must_hold is not None:
         assert must_hold in got
 
@@ -272,3 +403,52 @@ def test_union_find_null_id_names_the_operator(spark, op):
     df = spark.createDataFrame([(1, 2), (2, None)], PAIR_SCHEMA)
     with pytest.raises(ValueError, match=f"^{op.__name__}: null id"):
         op(df)
+
+
+#: (case id, pairs) for the pair-graph census: reversed and repeated
+#: pairs, a self-loop, a null end, a K4 (four triangles), empty.
+GRAPH_STATS_CASES = [
+    ("k4-plus-tail", [(1, 2), (1, 3), (1, 4), (2, 3), (2, 4), (3, 4), (4, 5)]),
+    ("reversed-and-self", [(1, 2), (2, 1), (2, 3), (3, 1), (3, 3), (1, 2)]),
+    ("null-ends", [(1, 2), (2, None), (None, None), (None, 3)]),
+    ("empty", []),
+]
+
+
+@pytest.mark.parametrize(
+    "pairs", [c[1] for c in GRAPH_STATS_CASES], ids=[c[0] for c in GRAPH_STATS_CASES]
+)
+def test_pair_graph_stats_equals_graph_operators(spark, caplog, monkeypatch, pairs):
+    """Both branches of the census equal ``degree_stats`` crossed with
+    ``triangle_count`` on the same edges."""
+    df = spark.createDataFrame(pairs, PAIR_SCHEMA)
+    e = df.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
+    want = [tuple(r) for r in degree_stats(e).crossJoin(triangle_count(e)).collect()]
+    with caplog.at_level(logging.INFO, logger="meta_frame_spark.operators.bounded"):
+        driver = pair_graph_stats(df)
+        monkeypatch.setattr(graph, "UNION_FIND_CAP", 0)
+        distributed = pair_graph_stats(df)
+    assert caplog.messages == [
+        f"pair_graph_stats: driver path, {len(pairs)} rows <= {dedup.UNION_FIND_CAP}",
+        "pair_graph_stats: distributed path, driver_threshold=0",
+    ]
+    assert driver.columns == distributed.columns == [
+        "n_nodes", "n_edges", "max_degree", "avg_degree", "n_triangles"
+    ]
+    assert [tuple(r) for r in driver.collect()] == want
+    assert [tuple(r) for r in distributed.collect()] == want
+
+
+def test_registry_collects_nothing():
+    """The query registry composes operators: every driver collect goes
+    through an operator's bounded gate."""
+    entry = Path(__file__).resolve().parent.parent / "__spark_entry__.py"
+    banned = {"collect", "toArrow", "toPandas", "bounded_collect"}
+    calls = [
+        (node.lineno, name)
+        for node in ast.walk(ast.parse(entry.read_text()))
+        if isinstance(node, ast.Call)
+        for name in [getattr(node.func, "attr", getattr(node.func, "id", None))]
+        if name in banned
+    ]
+    assert calls == []

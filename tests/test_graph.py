@@ -183,8 +183,8 @@ def test_triangle_count_direction_insensitive(spark):
 
 
 def test_dup_graph_stats_driver_census_matches_operators(spark, sf_dir):
-    """The r15 bounded driver census in q_dup_graph_stats equals the
-    distributed degree_stats x triangle_count on the same pair set."""
+    """q_dup_graph_stats (pair_graph_stats' driver census on the
+    fixture's pair set) equals degree_stats x triangle_count on it."""
     import __spark_entry__ as entrymod
     from meta_frame_spark.operators.dedup import minhash_lsh_dedup
     from pyspark.sql import functions as F

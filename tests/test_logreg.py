@@ -66,35 +66,6 @@ def test_train_deterministic_under_partitioning(spark):
     assert all(abs(x - y) < 1e-9 for x, y in zip(a, b))
 
 
-def test_driver_fast_path_matches_distributed_loop(spark):
-    """The conf-gated driver GD (r15) must produce the same weights as
-    the distributed loop within the documented summation-reorder
-    tolerance, and driverMaxDocs=0 must force the distributed path."""
-    from meta_frame_spark.operators.logreg import train_text_classifier
-
-    rows = [
-        (i, "tok%d tok%d tok%d" % (i % 7, i % 3, i % 5), i % 2)
-        for i in range(80)
-    ]
-    df = spark.createDataFrame(rows, ["id", "text", "y"])
-    a = train_text_classifier(df, "y", n=2, hex_chars=2, iters=2)  # driver
-    prev = spark.conf.get("spark.meta_frame.logreg.driverMaxDocs", "50000")
-    spark.conf.set("spark.meta_frame.logreg.driverMaxDocs", "0")
-    try:
-        b = train_text_classifier(df, "y", n=2, hex_chars=2, iters=2)
-    finally:
-        spark.conf.set("spark.meta_frame.logreg.driverMaxDocs", prev)
-    assert len(a) == len(b) == 257
-    assert all(abs(x - y) < 1e-9 for x, y in zip(a, b))
-    # over-cap corpora take the distributed loop and still agree
-    spark.conf.set("spark.meta_frame.logreg.driverMaxDocs", "10")
-    try:
-        c = train_text_classifier(df, "y", n=2, hex_chars=2, iters=2)
-    finally:
-        spark.conf.set("spark.meta_frame.logreg.driverMaxDocs", prev)
-    assert all(abs(x - y) < 1e-9 for x, y in zip(a, c))
-
-
 def test_score_separates_and_is_map_only(spark):
     from pyspark.sql import functions as F
 

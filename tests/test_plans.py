@@ -570,7 +570,7 @@ def test_embedding_contamination_broadcasts_benchmark(spark, sf_dir):
         assert op not in exact, op
 
     lsh = _plan(embedding_contamination(
-        emb, bench, threshold=0.9, max_exact_bench=0))
+        emb, bench, threshold=0.9, driver_threshold=0))
     assert "BroadcastHashJoin" in lsh
     assert "CartesianProduct" not in lsh
     assert "SortMergeJoin" not in lsh

@@ -29,10 +29,9 @@ between them:
   clean slice; the record's `record_contended` is true unless every
   query got a clean bracket.
 
-Output: the full bench.py-shaped payload written to --out (default
-/tmp/bench_sliced.json) — inspect it and copy over BENCH_FULL.json
-only if `record_contended` is false. Never writes into the repo
-itself.
+Output: the full bench.py-shaped payload written to --out (required)
+— inspect it and copy over BENCH_FULL.json only if `record_contended`
+is false.
 """
 
 from __future__ import annotations
@@ -60,7 +59,7 @@ def main() -> int:
     ap.add_argument("--slice-budget", type=float, default=12.0)
     ap.add_argument("--gap", type=float, default=45.0)
     ap.add_argument("--passes", type=int, default=4)
-    ap.add_argument("--out", default="/tmp/bench_sliced.json")
+    ap.add_argument("--out", required=True)
     ap.add_argument("--expected", default=None,
                     help="clean record JSON for slice packing "
                          "(default: repo BENCH_FULL.json)")
@@ -101,6 +100,7 @@ def main() -> int:
         pass
 
     import __spark_entry__ as entrymod
+    from bench import WARM_QUERIES
     from meta_frame_spark.session import get_session
 
     spark = get_session(app_name="meta_frame_spark-bench-sliced")
@@ -120,8 +120,7 @@ def main() -> int:
     all_queries = dict(sorted(entrymod.queries().items()))
     warm_sf = "/root/testdata/sf0.001"
     if os.path.isdir(warm_sf):
-        for wname in ("bm25_search", "dedup_minhash", "ann_topk_ivfpq",
-                      "event_pagerank", "quality_classifier"):
+        for wname in WARM_QUERIES:
             try:
                 all_queries[wname](spark, warm_sf).write.format("noop").mode(
                     "overwrite").save()
