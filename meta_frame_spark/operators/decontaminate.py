@@ -200,7 +200,10 @@ def embedding_contamination(
     from the flattened column, ships to every task as a closure
     (nb x dim float64, 16 MiB at the default cap) and ONE Arrow
     ``mapInPandas`` over the corpus scores each batch against ALL
-    benchmark vectors in a single BLAS matmul — recall exactly 1.0 by
+    benchmark vectors in BLAS matmuls, blocked over the batch rows so
+    one block holds at most ``similarity._GRAM_BLOCK`` similarities
+    (8 MiB; unblocked, one 10,000-row Arrow batch against the default
+    cap took 5.6 GB with its masked copy) — recall exactly 1.0 by
     construction, zero joins, zero shuffles, O(N·nb·dim) flops that
     BLAS sustains at memory bandwidth. This replaced the SRP-LSH
     candidate join on the 6-plane/32-band default after measurement:
@@ -238,7 +241,9 @@ def embedding_contamination(
     in the LSH arm — identical when benchmark ids are unique (the
     normal eval-set shape); a benchmark with duplicated ids or
     repeated vectors counts duplicates only in the exact arm."""
-    from meta_frame_spark.operators.similarity import _bucketize, _srp_planes
+    from meta_frame_spark.operators.similarity import (
+        _GRAM_BLOCK, _bucketize, _srp_planes,
+    )
 
     def _unit(df: DataFrame) -> DataFrame:
         v = F.col(vec_col).cast("array<double>")
@@ -272,6 +277,7 @@ def embedding_contamination(
         )
         nrm = np.linalg.norm(B, axis=1)
         bmat_t = (B[nrm > 0] / nrm[nrm > 0, None]).T  # (dim, nb)
+        step = max(1, _GRAM_BLOCK // max(bmat_t.shape[1], 1))
 
         def _score(batches):
             for pdf in batches:
@@ -284,17 +290,23 @@ def embedding_contamination(
                 ok = nrm > 0
                 if not ok.any():
                     continue
-                S = (X[ok] / nrm[ok, None]) @ bmat_t  # (nx, nb)
-                hit = S >= threshold
-                nh = hit.sum(1)
+                X = X[ok] / nrm[ok, None]
+                nh = np.empty(len(X), dtype=np.int64)
+                mc = np.empty(len(X))
+                for lo in range(0, len(X), step):
+                    S = X[lo:lo + step] @ bmat_t  # (<= step, nb)
+                    nh[lo:lo + step] = (S >= threshold).sum(1)
+                    # a row with a hit has its max among its hits; fmax
+                    # skips the NaN an infinite component leaves
+                    mc[lo:lo + step] = np.fmax.reduce(S, axis=1)
                 any_hit = nh > 0
                 if not any_hit.any():
                     continue
                 idx = valid[ok][any_hit]
                 yield pd.DataFrame({
                     "_id": pdf[id_col].iloc[idx].values,
-                    "n_bench_hits": nh[any_hit].astype(np.int64),
-                    "_mc": np.where(hit, S, -np.inf).max(1)[any_hit],
+                    "n_bench_hits": nh[any_hit],
+                    "_mc": mc[any_hit],
                 })
 
         id_type = corpus.schema[id_col].dataType.simpleString()

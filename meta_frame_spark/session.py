@@ -34,6 +34,12 @@ def get_session(
     differ from ICU's root mapping. A value in ``extra_conf`` wins. The
     guard reads the driver's locale: executors started under one of
     those locales need the conf set explicitly.
+
+    On a single-JVM master the driver heap (``spark.driver.memory``) and
+    the JIT compiler threads (``spark.driver.defaultJavaOptions``, see
+    ``LOCAL_JIT_OPTIONS``) are sized for the JVM that runs every task.
+    Both take effect only when the JVM is launched, and a value in
+    ``extra_conf`` wins.
     """
     builder = SparkSession.builder.appName(app_name)
     if master is None and os.environ.get("SPARK_GRAFT_LOCAL", "1") == "1":
@@ -75,6 +81,9 @@ def get_session(
         conf["spark.driver.memory"] = os.environ.get(
             "SPARK_GRAFT_DRIVER_MEM", "16g"
         )
+        # Spark puts spark.driver.extraJavaOptions after these, so a
+        # caller's own JVM options still apply
+        conf["spark.driver.defaultJavaOptions"] = LOCAL_JIT_OPTIONS
     if extra_conf:
         conf.update(extra_conf)
     for k, v in conf.items():
@@ -98,6 +107,28 @@ ICU_CASE_MAPPINGS = "spark.sql.icu.caseMappings.enabled"
 # from the root mapping (Turkish, Azerbaijani, Lithuanian)
 _SPECIAL_CASING_LANGUAGES = frozenset({"tr", "az", "lt"})
 _LOCAL_MASTER = re.compile(r"local(?:\[(\*|\d+)(?:\s*,\s*\d+)?\])?")
+# One C1 and one C2 compiler thread, HotSpot's tiered minimum (its own
+# default is 3 on 4 vCPUs and grows with the core count). A fresh local
+# JVM spends its C2 time on code that is hot only while plans are built
+# and tasks serialized: a JFR jdk.Compilation breakdown of one
+# config_pipelines session found 41.6 s of C2 compiles, 13.7 s of them
+# JDK core, 8.4 s Janino, 4.7 s java.io.Object{Input,Output}Stream,
+# 3.7 s Scala collections, 2.1 s Catalyst, 1.9 s xbean ASM, 1.8 s ANTLR
+# and 0.7 s Spark's generated stage classes. With one C2 thread the
+# tiered policy compiles the hottest methods first and drops stale
+# requests; long loops still reach C2. Measured on 4 vCPUs, local[4],
+# medians of alternating pairs of perfbench/run.py --seconds 10
+# --trace 0: config_pipelines cpu_s 48.1 -> 37.6 s (10 pairs),
+# corpus_operators 11.0 -> 9.8 s, stream_events 35.3 -> 28.9 s (6
+# each), driver RSS flat. Over the five config_pipelines pipelines
+# (tools/jvm_process_starts.py, 5 sessions a side) C2 thread CPU went
+# 24.1 -> 15.0 s and executor task threads 6.7 -> 7.6 s. Steady state
+# is flat: the 247 bench.py queries at sf0.1 in one long-lived session,
+# min of 4 runs a side (tools/bench_ab.py), 228.2 -> 227.2 s.
+# Rejected: C1 only (-XX:TieredStopAtLevel=1) halves the fresh-JVM CPU
+# but loses steady state: five sf0.1 queries run twice in one session
+# went 67.1 -> 88.4 s, a warm kneser_ney3 13.1 -> 19.0 s.
+LOCAL_JIT_OPTIONS = "-XX:CICompilerCount=2"
 
 
 def local_task_slots(spark: SparkSession) -> int | None:

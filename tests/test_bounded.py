@@ -125,6 +125,10 @@ def _contamination(bench: str, threshold, **opts):
     return run
 
 
+#: The edge vectors plus a null-id copy of vector 1.
+CONTAM_EDGE_VECS = EDGE_VECS + [(None, [1.0, 0.0, 0.0, 0.0])]
+
+
 def _contam_edge(df, **kw):
     return _contamination(
         "vec_id IN (1, 4, 8)", 0.6, dim=4, planes_per_band=1, num_bands=8,
@@ -217,7 +221,7 @@ CASES = [
     case("logreg-empty", _rows([], LABELED_SCHEMA), _logreg(), ERR_NO_ROWS),
     case("logreg-all-null", _rows(EDGE_LABELED[2:4], LABELED_SCHEMA), _logreg(),
          ERR_NO_ROWS),
-    case("contamination-edge", _rows(EDGE_VECS + [(None, [1.0, 0.0, 0.0, 0.0])], VEC_SCHEMA),
+    case("contamination-edge", _rows(CONTAM_EDGE_VECS, VEC_SCHEMA),
          _contam_edge, (None, 1, 1.0), _within),
     case("contamination-empty", _rows([], VEC_SCHEMA), _contam_edge),
     case("contamination-fixture", _fixture("embeddings"),
@@ -245,6 +249,24 @@ def test_driver_branch_equals_distributed(
     compare(got, want)
     if must_hold is not None:
         assert must_hold in got
+
+
+@pytest.mark.parametrize("build,run,must_hold", [
+    # (2, 1, 0.6): cosine exactly at the threshold
+    (_rows(CONTAM_EDGE_VECS, VEC_SCHEMA), _contam_edge, [(None, 1, 1.0), (2, 1, 0.6)]),
+    (_fixture("embeddings"), _contamination("vec_id % 37 = 0", 0.9), []),
+], ids=["edge", "fixture"])
+def test_contamination_exact_arm_blocks_batch_rows(
+    spark, sf_dir, monkeypatch, build, run, must_hold
+):
+    """Blocks of one row each (two similarities a block) score every
+    Arrow batch as the default single block does."""
+    df = build(spark, sf_dir)
+    want = _sorted_rows(run(df))
+    monkeypatch.setattr(similarity, "_GRAM_BLOCK", 2)
+    got = _sorted_rows(run(df))
+    assert got == want
+    assert len(got) > 1 and all(r in got for r in must_hold)
 
 
 def test_bounded_collect_logs_each_branch(spark, caplog, monkeypatch):

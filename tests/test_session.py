@@ -1,11 +1,14 @@
-"""``get_session``'s pinned defaults, checked on a stub builder (no JVM)."""
+"""``get_session``'s pinned defaults, checked on a stub builder (no JVM)
+and, for the JVM launch options, on the live test session."""
 
 from types import SimpleNamespace
 
 import pytest
 
 from meta_frame_spark import session
-from meta_frame_spark.session import ICU_CASE_MAPPINGS, get_session
+from meta_frame_spark.session import ICU_CASE_MAPPINGS, LOCAL_JIT_OPTIONS, get_session
+
+JAVA_OPTIONS = "spark.driver.defaultJavaOptions"
 
 
 class _BuilderStub:
@@ -53,6 +56,7 @@ def builder(monkeypatch):
     ("local[4]", True),
     ("local[*]", True),
     ("local[2, 3]", True),
+    ("local[*,2]", True),
     # the driver of local-cluster runs no tasks: its executors do
     ("local-cluster[2,1,1024]", False),
 ])
@@ -60,6 +64,27 @@ def test_driver_heap_sized_only_on_a_single_jvm_master(builder, master, sized):
     stub = builder()
     get_session(master=master)
     assert ("spark.driver.memory" in stub.conf) == sized
+    assert stub.conf.get(JAVA_OPTIONS) == (LOCAL_JIT_OPTIONS if sized else None)
+
+
+def test_extra_conf_java_options_win_or_compose(builder):
+    stub = builder()
+    get_session(master="local[2]", extra_conf={JAVA_OPTIONS: "-Xss4m"})
+    assert stub.conf[JAVA_OPTIONS] == "-Xss4m"
+    stub = builder()
+    get_session(master="local[2]", extra_conf={"spark.driver.extraJavaOptions": "-Dfoo=1"})
+    # Spark appends the extra options to the default ones at launch
+    assert stub.conf[JAVA_OPTIONS] == LOCAL_JIT_OPTIONS
+    assert stub.conf["spark.driver.extraJavaOptions"] == "-Dfoo=1"
+
+
+def test_local_jvm_runs_two_compiler_threads(spark):
+    """The option reaches the JVM at launch, through the builder conf."""
+    jvm = spark.sparkContext._jvm
+    bean = jvm.java.lang.management.ManagementFactory.getPlatformMXBean(
+        jvm.java.lang.Class.forName("com.sun.management.HotSpotDiagnosticMXBean")
+    )
+    assert bean.getVMOption("CICompilerCount").getValue() == "2"
 
 
 @pytest.mark.parametrize("lang,value", [
