@@ -4,11 +4,12 @@ $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
 local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
 
     {"metric": "total_query_sec", "value": N, "unit": "sec",
-     "queries": {...per-query sec...}, "sf": 0.1}
+     "queries": {...per-query sec...}, "sf": 0.1, "cpus": 4, ...}
 
-Each query is forced with a noop-sink write (evaluates EVERY column of
-the full plan; count() would let Catalyst prune map-only projection
-work entirely — see run_one below and BASELINE.md's forcing note).
+Each query is forced with a noop-sink write (see run_one below and
+BASELINE.md's forcing note). The module-level functions are the
+measurement core that tools/bench_sliced.py and tools/bench_ab.py
+import.
 """
 
 from __future__ import annotations
@@ -30,7 +31,8 @@ for _v in ("OPENBLAS_NUM_THREADS", "OMP_NUM_THREADS", "MKL_NUM_THREADS"):
 
 import pandas as pd
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+HERE = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, HERE)
 
 
 #: Queries pre-run at sf0.001, untimed, before the timed loop (bench.py
@@ -53,29 +55,49 @@ WARM_QUERIES = (
     "bm25_search", "dedup_minhash", "ann_topk_ivfpq", "event_pagerank",
     "quality_classifier", "stream_rouge",
 )
+WARM_SF = "/root/testdata/sf0.001"
+
+#: A probe over DIRTY_RATIO x the clean value marks its bracket dirty
+#: (the r7 d*/e* contended block sat under a 1.73x probe — 2x missed
+#: it; queries amplify contention more than the pure-codegen probe).
+DIRTY_RATIO = 1.5
 
 
-def main() -> None:
-    # warn (stderr, non-fatal) if the working-tree BENCH_FULL.json is a
-    # contended driver record that must not be committed
+def warn_record() -> None:
+    """Warn (stderr, non-fatal) if the working-tree BENCH_FULL.json is
+    a contended record that must not be committed."""
     try:
-        from tools.check_bench_record import warn as _bench_record_warn
+        from tools.check_bench_record import warn
 
-        _bench_record_warn()
+        warn()
     except Exception:
         pass
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else -1.0
 
-    import __spark_entry__ as entrymod
-    from meta_frame_spark.session import get_session
 
-    spark = get_session(app_name="meta_frame_spark-bench")
-    spark.sparkContext.setLogLevel("ERROR")
+def sf_of(sf_dir: str) -> float:
+    """Scale factor a data directory names (``.../sf0.1`` -> 0.1)."""
+    return float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else -1.0
 
-    # Warm the JVM/codegen path and the Python UDF workers once so
-    # per-query times measure the engine, not first-call JIT or the
-    # one-time spawn of the Arrow worker pool.
+
+def prewarm(spark, queries: dict, names) -> None:
+    """Run ``names`` once at sf0.001, untimed: codegen is cached per
+    generated source and identical operators and literals generate
+    identical code, so the timed runs measure the engine, not janino."""
+    if not os.path.isdir(WARM_SF):
+        return
+    for name in names:
+        try:
+            queries[name](spark, WARM_SF).write.format("noop").mode("overwrite").save()
+        except Exception:
+            pass  # warm-up must never fail the bench
+    spark.catalog.clearCache()
+
+
+def warm_session(spark, queries: dict) -> None:
+    """Warm the JVM/codegen path, the Python UDF workers and the
+    local-relation path (~1.5s one-off) once, then pre-run
+    WARM_QUERIES (the first regexp_extract_all alone loads ~3.4s of
+    classes: bm25_search read 3.4s in the r3 record, 0.95s warm)."""
     spark.range(1_000_000).selectExpr("sum(id)").collect()
     from pyspark.sql.functions import pandas_udf
 
@@ -84,209 +106,206 @@ def main() -> None:
         return s
 
     spark.range(1_000_000).select(_warm("id").alias("id")).selectExpr("max(id)").collect()
-    # first createDataFrame initializes the Python local-relation path
-    # (~1.5s one-off) — warm it so no single query carries that cost
     spark.createDataFrame([(1, "x")], "a long, b string").collect()
-    # Whole-stage-codegen compile is cached per generated source, and
-    # the first regexp_extract_all call alone loads ~3.4s of classes —
-    # so the first text-tokenizing query in the timed loop used to
-    # absorb several seconds of one-time JIT (bm25_search 3.4s in the
-    # r3 record vs 0.95s steady-state). Pre-run the two heaviest
-    # distinct plan shapes at sf0.001: identical operators and literals
-    # generate identical code, so the timed sf runs hit the compile
-    # cache and measure the engine, not janino.
-    warm_sf = "/root/testdata/sf0.001"
-    if os.path.isdir(warm_sf):
-        all_queries = entrymod.queries()
-        for wname in WARM_QUERIES:
-            try:
-                all_queries[wname](spark, warm_sf).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-            except Exception:
-                pass  # warm-up must never fail the bench
-        spark.catalog.clearCache()
+    prewarm(spark, queries, WARM_QUERIES)
 
-    # Contention marker (VERDICT r4 "Next round" #5): the r4 driver
-    # bench landed on a contended slot and recorded 4-15x slot-noise
-    # artifacts that read as regressions. Time a fixed CPU-bound probe
-    # (32-way parallel codegen sum — saturates the same cores the
-    # queries use) before and after the timed loop and emit it next to
-    # PROBE_CLEAN_SEC, its frozen clean-slot value on the reference
-    # machine. probe/clean >> 1 (either probe) = the slot was stolen;
-    # numbers in that record are noise-suspect and machine-detectably
-    # so. getloadavg is the corroborating signal (clean ~ n_cpus
-    # while the bench itself runs; >> n_cpus = external load).
-    PROBE_CLEAN_SEC = 0.2  # measured steady-state on the clean slot
 
-    def _probe() -> float:
-        t0 = time.perf_counter()
-        spark.range(200_000_000, numPartitions=32).selectExpr(
-            "count(if(id % 7 = 0, 1, null)) as n"
-        ).collect()
-        return round(time.perf_counter() - t0, 3)
+def probe(spark) -> float:
+    """Seconds of a fixed CPU-bound job (32-way parallel codegen sum)
+    on the cores the queries use: a stolen slot reads slow. Call it once
+    untimed first, so timed probes measure execution, not codegen."""
+    t0 = time.perf_counter()
+    spark.range(200_000_000, numPartitions=32).selectExpr(
+        "count(if(id % 7 = 0, 1, null)) as n"
+    ).collect()
+    return round(time.perf_counter() - t0, 3)
 
-    _probe()  # untimed: compile the probe plan so all timed probes
-    probe_start = _probe()  # measure execution, not first-call codegen
 
-    # Interleaved probes (VERDICT r6 "Next round" #2): the r4 and r6
-    # records both carried mid-run contended windows — contiguous
-    # blocks of 3-5x entries on untouched code — that a start/end-only
-    # probe cannot see. A probe every PROBE_EVERY queries (~0.2s clean
-    # each, ~4s total) brackets every query with a contention
-    # measurement; queries whose bracketing probes exceed 2x clean are
-    # noise-suspect and get ONE rerun at the end (min of the two
-    # times), so a stolen slot mid-run can no longer fake a regression.
-    PROBE_EVERY = 8
-    probes: list[list] = []  # [query_index, probe_sec] checkpoints
+def run_one(spark, fn, sf_dir: str) -> float:
+    t0 = time.perf_counter()
+    # noop sink: evaluates EVERY column of the full plan (count()
+    # would let Catalyst prune map-only projection work entirely)
+    fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+    sec = round(time.perf_counter() - t0, 3)
+    # operators persist() self-join inputs; drop them so cached
+    # blocks don't accumulate across the suite
+    spark.catalog.clearCache()
+    return sec
 
-    def run_one(fn) -> float:
-        t0 = time.perf_counter()
-        # noop sink: evaluates EVERY column of the full plan (count()
-        # would let Catalyst prune map-only projection work entirely)
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        sec = round(time.perf_counter() - t0, 3)
-        # operators persist() self-join inputs; drop them so cached
-        # blocks don't accumulate across the 40+ queries
-        spark.catalog.clearCache()
-        return sec
 
-    per_query: dict[str, float] = {}
-    # Canonical (sorted) execution order, decoupled from the queries()
-    # dict order: the dict is reordered every round to steer the
-    # driver's 50-entry correctness window, and each reorder moves
-    # which query absorbs first-compile/JIT warm-up onto a different
-    # victim, making per-query times incomparable across rounds. A
-    # fixed name order keeps the warm-up attribution stable.
-    all_queries = sorted(entrymod.queries().items())
-    probes.append([0, probe_start])
-    for i, (name, fn) in enumerate(all_queries):
-        per_query[name] = run_one(fn)
-        if (i + 1) % PROBE_EVERY == 0 and i + 1 < len(all_queries):
-            probes.append([i + 1, _probe()])
+def merge_min(into: dict[str, float], new: dict[str, float]) -> None:
+    """Keep each query's minimum. External contention can only ADD time
+    to a CPU-bound noop sink, so every attempt is an upper bound and the
+    min over attempts of the same code is sound."""
+    for k, v in new.items():
+        if k not in into or v < into[k]:
+            into[k] = v
 
-    probe_end = _probe()
-    probes.append([len(all_queries), probe_end])
 
-    # A query is noise-suspect ONLY if a bracketing probe ran >1.5x
-    # the clean value (the r7 d*/e* contended block sat under a 1.73x
-    # probe — 2x missed it; queries amplify contention more than the
-    # pure-codegen probe does). The old unconditional >2.5s trigger is
-    # gone (ADVICE r7): it reran every slow-tail query on every record
-    # run, and the warm second run systematically biased exactly the
-    # headline entries low; now a rerun happens only when the probes
-    # PROVE the first measurement was contaminated.
-    #
-    # Rerun protocol (VERDICT r7 "Next round" #3 — the [16.0, 48.1]
-    # doubly-poisoned case): each rerun is itself probe-bracketed.
-    # External contention can only ever ADD time to a CPU-bound noop
-    # sink, so every measurement is an UPPER bound on the true time
-    # and the recorded value is the MIN over all attempts — a slower
-    # rerun never displaces a faster first value (an r8 dry run showed
-    # exactly that failure: end-of-run contention made "clean"-probed
-    # reruns slower than their dirty-probed originals). A rerun stops
-    # early once an attempt lands clean-bracketed AND <= the flagged
-    # first value. If NO attempt (rerun, or retry) ever got a clean
-    # bracket, the name goes in probe.contended: its min is still
-    # recorded but explicitly marked as a contended upper bound, never
-    # presented as a clean measurement.
-    dirty = {
+def load_1m() -> float:
+    try:
+        return round(os.getloadavg()[0], 1)
+    except OSError:
+        return -1.0
+
+
+def load_record(path: str) -> dict | None:
+    try:
+        with open(path) as f:
+            return json.load(f)
+    except (OSError, ValueError):
+        return None
+
+
+def same_cpus(rec: dict | None, cpus: int | None) -> bool:
+    """Whether ``rec`` ran on ``cpus`` task slots. Seconds do not carry
+    across core counts, so a record without ``cpus`` matches no run."""
+    return rec is not None and cpus is not None and rec.get("cpus") == cpus
+
+
+def reference(
+    incumbent: dict | None, sf: float, cpus: int | None
+) -> tuple[dict[str, float], float | None]:
+    """What the incumbent record lends a run: its per-query seconds
+    (same sf, uncontended) and its ``probe.clean_sec`` — nothing when
+    it ran on other cpus."""
+    if not same_cpus(incumbent, cpus):
+        return {}, None
+    rec_probe = incumbent.get("probe", {})
+    if abs(incumbent.get("sf", -1.0) - sf) > 1e-9 or rec_probe.get("record_contended", True):
+        return {}, rec_probe.get("clean_sec")
+    return dict(incumbent["queries"]), rec_probe.get("clean_sec")
+
+
+def clean_sec(probe_secs, lent_clean: float | None = None) -> float:
+    """The clean probe value: the fastest probe this run timed, or the
+    incumbent's when faster. Contention only adds time, so the minimum
+    is the tightest bound on an unloaded probe, on any core count; the
+    incumbent's value still flags a run throttled from end to end."""
+    return min([*probe_secs, *([lent_clean] if lent_clean else [])], default=-1.0)
+
+
+def bracket_clean(pre: float, post: float, clean: float) -> bool:
+    return max(pre, post) <= DIRTY_RATIO * clean
+
+
+def dirty_windows(probes: list[list], clean: float) -> list[int]:
+    """Indices of the queries between two ``[query_index, probe_sec]``
+    checkpoints of which either is dirty."""
+    return sorted({
         idx
         for (a_idx, a_sec), (b_idx, b_sec) in zip(probes, probes[1:])
-        if a_sec > 1.5 * PROBE_CLEAN_SEC or b_sec > 1.5 * PROBE_CLEAN_SEC
+        if not bracket_clean(a_sec, b_sec, clean)
         for idx in range(a_idx, b_idx)
-    }
-    suspects = [all_queries[i][0] for i in sorted(dirty)]
-    # Adaptive rerun budget (VERDICT r14 "Next round" #2): the r14
-    # driver record had 160/247 queries in dirty probe windows but only
-    # a fixed top-20 rerun budget, so the record could not self-heal
-    # and the whole round's PERF was noise. Self-healing, in order:
+    })
+
+
+def may_promote(payload: dict, incumbent: dict | None) -> bool:
+    """A run replaces BENCH_FULL.json only at sf0.1, uncontended, and on
+    the incumbent's ``cpus`` (or with no incumbent): a committed record
+    without ``cpus`` is never replaced automatically."""
+    return (
+        abs(payload["sf"] - 0.1) < 1e-9
+        and not payload["probe"]["record_contended"]
+        and (incumbent is None or same_cpus(incumbent, payload["cpus"]))
+    )
+
+
+def main() -> None:
+    warn_record()
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    sf = sf_of(sf_dir)
+
+    import __spark_entry__ as entrymod
+    from meta_frame_spark.session import get_session, local_task_slots
+
+    spark = get_session(app_name="meta_frame_spark-bench")
+    spark.sparkContext.setLogLevel("ERROR")
+    cpus = local_task_slots(spark)
+    # Canonical (sorted) execution order, decoupled from the queries()
+    # dict order, which changes with the correctness window: a fixed
+    # name order keeps the first-compile/JIT warm-up attribution stable
+    # across rounds.
+    all_queries = sorted(entrymod.queries().items())
+    by_name = dict(all_queries)
+    warm_session(spark, by_name)
+
+    # Interleaved probes (VERDICT r6 "Next round" #2): a start/end-only
+    # probe cannot see mid-run contended windows, so a probe every
+    # PROBE_EVERY queries brackets every query.
+    PROBE_EVERY = 8
+    probe(spark)  # untimed: compile the probe plan
+    probes: list[list] = [[0, probe(spark)]]  # [query_index, probe_sec]
+    per_query: dict[str, float] = {}
+    for i, (name, fn) in enumerate(all_queries):
+        per_query[name] = run_one(spark, fn, sf_dir)
+        if (i + 1) % PROBE_EVERY == 0 and i + 1 < len(all_queries):
+            probes.append([i + 1, probe(spark)])
+    probes.append([len(all_queries), probe(spark)])
+    probe_start, probe_end = probes[0][1], probes[-1][1]
+
+    # Queries in a dirty window are suspects; the clean value is
+    # derived from this run's probes (clean_sec), so it holds on any
+    # core count. Self-healing, in order (BASELINE.md, two-record
+    # protocol):
     #
-    # 1. REFERENCE RESOLUTION (free): external contention can only ADD
-    #    time to a CPU-bound noop sink, so a dirty-bracketed value at
-    #    or below the committed clean record's value for the same query
-    #    (same sf, non-contended record) cannot be hiding inflation —
-    #    it is an upper bound that already beats the clean reference.
-    #    Those suspects resolve without a rerun.
-    # 2. ADAPTIVE RERUNS: every remaining suspect is rerun (not just
-    #    the top 20), prioritized by deviation from the clean reference
-    #    (unknown-reference queries first — nothing vouches for them),
-    #    under a wall-clock budget; reruns stop early when the slot is
-    #    persistently stolen (8 consecutive dirty probes — no clean
-    #    bracket is obtainable, burning budget is pointless).
-    # 3. The whole-record flag is recomputed AFTER healing: the record
-    #    is contended only if >10 entries never got a clean bracket or
-    #    reference resolution. (The old flag was computed BEFORE the
-    #    reruns from the raw suspect count, so a healable record stayed
-    #    marked junk.)
-    here = os.path.dirname(os.path.abspath(__file__))
-    ref: dict[str, float] = {}
-    try:
-        with open(os.path.join(here, "BENCH_FULL.json")) as f:
-            _rec = json.load(f)
-        if (
-            abs(float(_rec.get("sf", -1.0)) - sf) < 1e-9
-            and not _rec.get("probe", {}).get("record_contended", True)
-        ):
-            ref = {k: float(v) for k, v in _rec.get("queries", {}).items()}
-    except Exception:
-        ref = {}
+    # 1. REFERENCE RESOLUTION (free): a dirty-bracketed value at or
+    #    below the incumbent clean record's value (same sf and cpus)
+    #    is an upper bound that already beats the reference.
+    # 2. ADAPTIVE RERUNS (VERDICT r14 #2): every other suspect is
+    #    rerun, unknown-reference and worst-deviation first, under a
+    #    wall-clock budget, until 8 consecutive probes are dirty. Each
+    #    attempt is probe-bracketed; the recorded value is the MIN over
+    #    attempts (a slower rerun never displaces a faster first
+    #    value), and retries stop once one lands clean-bracketed at or
+    #    below the first. A name no attempt got a clean bracket for
+    #    goes in probe.contended: a contended upper bound.
+    # 3. The record is contended only if more than MAX_CONTENDED
+    #    entries stay unhealed.
+    incumbent = load_record(os.path.join(HERE, "BENCH_FULL.json"))
+    ref, lent_clean = reference(incumbent, sf, cpus)
+    clean = clean_sec([sec for _, sec in probes], lent_clean)
+    suspects = [all_queries[i][0] for i in dirty_windows(probes, clean)]
     RERUN_BUDGET_SEC = 120.0  # hard cap on total rerun wall time
-    MAX_CONTENDED = 10        # record flag threshold after healing
-    resolved_ref = [
-        n for n in suspects if n in ref and per_query[n] <= ref[n]
-    ]
-    pending = [n for n in suspects if n not in set(resolved_ref)]
-    # priority: unknown-reference first, then worst deviation from the
-    # clean reference (most-inflated entries poison comparisons most)
-    pending.sort(
+    MAX_CONTENDED = 10
+    resolved_ref = [n for n in suspects if n in ref and per_query[n] <= ref[n]]
+    pending = sorted(
+        (n for n in suspects if n not in resolved_ref),
         key=lambda n: (
             -(per_query[n] / ref[n]) if n in ref else float("-inf"),
             -per_query[n],
-        )
+        ),
     )
     reran: dict[str, list[float]] = {}
     contended: list[str] = []
-    if pending:
-        by_name = dict(all_queries)
-        pre = probe_end  # last measured probe state
-        rerun_t0 = time.perf_counter()
-        consecutive_dirty = 0
-        for name in pending:
-            if (
-                time.perf_counter() - rerun_t0 > RERUN_BUDGET_SEC
-                or consecutive_dirty >= 8
-            ):
-                contended.append(name)  # budget/slot exhausted, unhealed
-                continue
-            first = per_query[name]
-            attempts = []
-            got_clean = False
-            for _ in range(2):
-                val = run_one(by_name[name])
-                post = _probe()
-                attempts.append(val)
-                clean = (pre <= 1.5 * PROBE_CLEAN_SEC
-                         and post <= 1.5 * PROBE_CLEAN_SEC)
-                pre = post
-                consecutive_dirty = 0 if clean else consecutive_dirty + 1
-                if clean:
-                    got_clean = True
-                    if val <= first:
-                        break
-            per_query[name] = min([first, *attempts])
-            # a rerun attempt at/below the clean reference resolves the
-            # same way a clean bracket does (rule 1 above)
-            if not got_clean and not (
-                name in ref and per_query[name] <= ref[name]
-            ):
-                contended.append(name)
-            reran[name] = [first, *attempts]
+    pre = probe_end  # last measured probe state
+    rerun_t0 = time.perf_counter()
+    consecutive_dirty = 0
+    for name in pending:
+        if time.perf_counter() - rerun_t0 > RERUN_BUDGET_SEC or consecutive_dirty >= 8:
+            contended.append(name)  # budget/slot exhausted, unhealed
+            continue
+        first = per_query[name]
+        attempts = []
+        got_clean = False
+        for _ in range(2):
+            val = run_one(spark, by_name[name], sf_dir)
+            post = probe(spark)
+            attempts.append(val)
+            ok = bracket_clean(pre, post, clean)
+            pre = post
+            consecutive_dirty = 0 if ok else consecutive_dirty + 1
+            got_clean = got_clean or ok
+            if ok and val <= first:
+                break
+        per_query[name] = min([first, *attempts])
+        # an attempt at/below the clean reference resolves like rule 1
+        if not got_clean and not (name in ref and per_query[name] <= ref[name]):
+            contended.append(name)
+        reran[name] = [first, *attempts]
+    rerun_sec = round(time.perf_counter() - rerun_t0, 3)
     record_contended = len(contended) > MAX_CONTENDED
-    try:
-        load_1m = round(os.getloadavg()[0], 1)
-    except OSError:
-        load_1m = -1.0
+    load = load_1m()
     total = round(sum(per_query.values()), 3)
     payload = {
         "metric": "total_query_sec",
@@ -294,18 +313,16 @@ def main() -> None:
         "unit": "sec",
         "queries": per_query,
         "sf": sf,
+        "cpus": cpus,
         "probe": {
             "start_sec": probe_start,
             "end_sec": probe_end,
-            "clean_sec": PROBE_CLEAN_SEC,
-            "load_1m": load_1m,
+            "clean_sec": clean,
+            "load_1m": load,
             "interleaved": probes,
-            # per-suspect [first, rerun...]: recorded value is the
-            # clean-bracketed rerun, or min + a `contended` entry when
-            # no attempt got a clean bracket
+            # per-suspect [first, rerun...]
             "suspect_reruns": reran,
-            # suspects resolved without a rerun: dirty-bracketed value
-            # at/below the committed clean record (see rule 1 above)
+            "rerun_sec": rerun_sec,
             "resolved_by_reference": resolved_ref,
             "contended": contended,
             "record_contended": record_contended,
@@ -313,21 +330,19 @@ def main() -> None:
     }
     # Full-precision record: ALWAYS written to BENCH_LAST.json
     # (gitignored scratch); promoted to the canonical BENCH_FULL.json
-    # ONLY when this run is at the canonical SF and clean-bracketed.
-    # Unconditional promotion made every contended driver run
-    # overwrite the clean record in the working tree — a recurring
-    # commit hazard three rounds running (VERDICT r10 "Next round"
-    # #1); tools/check_bench_record.py is the backstop check.
-    with open(os.path.join(here, "BENCH_LAST.json"), "w") as f:
+    # only when may_promote allows it (VERDICT r10 "Next round" #1:
+    # contended runs used to overwrite the clean record);
+    # tools/check_bench_record.py is the backstop check.
+    with open(os.path.join(HERE, "BENCH_LAST.json"), "w") as f:
         json.dump(payload, f, indent=1)
-    if abs(sf - 0.1) < 1e-9 and not record_contended:
-        with open(os.path.join(here, "BENCH_FULL.json"), "w") as f:
+    if may_promote(payload, incumbent):
+        with open(os.path.join(HERE, "BENCH_FULL.json"), "w") as f:
             json.dump(payload, f, indent=1)
     else:
         print(
-            f"[bench] record kept in BENCH_LAST.json only "
-            f"(sf={sf}, record_contended={record_contended}); "
-            "BENCH_FULL.json untouched",
+            f"[bench] record kept in BENCH_LAST.json only (sf={sf}, "
+            f"record_contended={record_contended}, cpus={cpus}, incumbent "
+            f"cpus={(incumbent or {}).get('cpus')}); BENCH_FULL.json untouched",
             file=sys.stderr,
         )
     # The driver captures only the LAST 2000 chars of stdout and parses
@@ -345,22 +360,18 @@ def main() -> None:
         "bm25_search", "dedup_simhash", "emb_near_dup",
     }
 
-    # stdout line carries a probe SUMMARY (full checkpoint list +
-    # rerun pairs live in BENCH_FULL.json): max interleaved probe, how
-    # many entries sat in a contended window, and how many were rerun
-    # to a clean min — enough for the record reader to judge noise
-    # without the ~21-element checkpoint list blowing the 2000-char cap
+    # stdout line carries a probe SUMMARY (the checkpoint list and
+    # rerun pairs live in the file records), enough to judge noise
+    # without blowing the 2000-char cap
     probe_line = {
         "start_sec": probe_start,
         "end_sec": probe_end,
-        "clean_sec": PROBE_CLEAN_SEC,
-        "load_1m": load_1m,
+        "clean_sec": clean,
+        "load_1m": load,
         "max_interleaved": max(p[1] for p in probes),
         "n_suspect": len(suspects),
         "n_reran": len(reran),
         "n_resolved_ref": len(resolved_ref),
-        # bounded: the full list lives in BENCH_FULL/LAST.json and the
-        # record flag already says whether the tail matters
         "n_contended": len(contended),
         "contended": contended[:MAX_CONTENDED],
         "record_contended": record_contended,

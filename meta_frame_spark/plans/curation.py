@@ -647,11 +647,10 @@ def _op_cache(df: DataFrame) -> DataFrame:
     ``DataFrame.unpersist()`` cannot release them — only the context
     cleaner can, when the plan is garbage-collected.
 
-    So: ``spark.meta_frame.curation.checkpoint`` = ``always`` /
-    ``never`` / ``auto`` (default). ``auto`` checkpoints exactly when
-    the master is single-JVM (``session.local_task_slots``: ``local``,
+    So the master decides: the frame is checkpointed exactly when the
+    master is single-JVM (``session.local_task_slots``: ``local``,
     ``local[N]``, ``local[*]``) — a single process has no executor to
-    lose, so the truncation is free of the failure mode — and persists
+    lose, so the truncation is free of the failure mode — and persisted
     on any other master, ``local-cluster`` included, where a lost
     executor must be able to recompute.
     (An r15 plan-size probe that switched small LOCAL pipelines back
@@ -663,11 +662,7 @@ def _op_cache(df: DataFrame) -> DataFrame:
     from meta_frame_spark.operators.cache import track
     from meta_frame_spark.session import local_task_slots
 
-    spark = df.sparkSession
-    mode = spark.conf.get("spark.meta_frame.curation.checkpoint", "auto")
-    if mode == "auto":
-        mode = "always" if local_task_slots(spark) is not None else "never"
-    if mode == "always":
+    if local_task_slots(df.sparkSession) is not None:
         return df.localCheckpoint(eager=False)
     return track(df.persist())
 

@@ -342,6 +342,100 @@ def test_bench_record_guard(tmp_path):
     assert ok
 
 
+@pytest.fixture
+def bench(monkeypatch):
+    """bench.py's measurement core, imported without leaking the BLAS
+    thread caps it sets at import into this process's environment."""
+    monkeypatch.setattr(os, "environ", os.environ.copy())
+    import bench
+
+    return bench
+
+
+def test_bench_dirty_windows_under_derived_clean_value(bench):
+    """A flat 4-core probe list is clean against its own minimum (a
+    frozen 0.2 s made all of it dirty); one window at 2x the minimum
+    flags exactly the queries it brackets."""
+    flat = [[0, 0.41], [8, 0.58], [16, 0.47], [24, 0.52], [30, 0.44]]
+    clean = bench.clean_sec([sec for _, sec in flat])
+    assert clean == 0.41
+    assert bench.dirty_windows(flat, clean) == []
+    spiked = [[0, 0.41], [8, 0.45], [16, 0.82], [24, 0.43]]
+    assert bench.dirty_windows(spiked, bench.clean_sec(
+        [sec for _, sec in spiked])) == list(range(8, 24))
+    # a same-core incumbent's clean value flags a run slow end to end
+    assert bench.dirty_windows(flat, bench.clean_sec([0.41], 0.2)) == list(range(30))
+
+
+def _record(sf=0.1, contended=False, cpus=4, **extra):
+    rec = {"sf": sf, "queries": {"q": 1.0},
+           "probe": {"record_contended": contended, "clean_sec": 0.3}}
+    if cpus is not None:
+        rec["cpus"] = cpus
+    return {**rec, **extra}
+
+
+@pytest.mark.parametrize("payload,incumbent,promote", [
+    (_record(), _record(), True),
+    (_record(), None, True),
+    (_record(sf=0.01), _record(), False),
+    (_record(sf=0.01), None, False),
+    (_record(contended=True), _record(), False),
+    (_record(contended=True), None, False),
+    (_record(cpus=4), _record(cpus=32), False),
+    (_record(cpus=4), _record(cpus=None), False),
+], ids=[
+    "same-cpus", "no-incumbent", "sf0.01", "sf0.01-no-incumbent",
+    "contended", "contended-no-incumbent", "cpus-mismatch",
+    "incumbent-without-cpus",
+])
+def test_bench_promotion_gate(bench, payload, incumbent, promote):
+    assert bench.may_promote(payload, incumbent) is promote
+
+
+def test_bench_reference_and_clean_chain_need_same_cpus(bench):
+    same = _record(cpus=4)
+    assert bench.reference(same, 0.1, 4) == ({"q": 1.0}, 0.3)
+    # another sf or a contended record lends its clean value only
+    assert bench.reference(same, 0.01, 4) == ({}, 0.3)
+    assert bench.reference(_record(contended=True), 0.1, 4) == ({}, 0.3)
+    for other in (_record(cpus=32), _record(cpus=None), None):
+        ref, lent = bench.reference(other, 0.1, 4)
+        assert ref == {} and lent is None
+        assert bench.clean_sec([0.45, 0.5], lent) == 0.45
+
+
+def test_bench_committed_record_serves_its_own_cpus_only(bench):
+    """The committed BENCH_FULL.json is a 32-core record: a 32-core run
+    takes its per-query references and its 0.2 s clean value (so a run
+    throttled end to end still reads dirty), a 4-core run takes
+    neither and never replaces it."""
+    committed = bench.load_record(os.path.join(REPO, "BENCH_FULL.json"))
+    assert committed["cpus"] == 32
+    ref, lent = bench.reference(committed, 0.1, 32)
+    assert ref == committed["queries"] and lent == 0.2
+    throttled = [[0, 0.35], [8, 0.6], [16, 0.3]]
+    assert bench.dirty_windows(throttled, bench.clean_sec(
+        [sec for _, sec in throttled], lent)) == list(range(16))
+    assert bench.reference(committed, 0.1, 4) == ({}, None)
+    assert not bench.may_promote(_record(cpus=4), committed)
+    assert bench.may_promote(_record(cpus=32), committed)
+
+
+@pytest.mark.parametrize("tool", ["bench_sliced.py", "bench_ab.py"])
+def test_bench_tools_import_the_core(tool):
+    """Both bench tools import bench.py's measurement core at start-up;
+    ``--help`` fails here, not in the next bench run, if it breaks."""
+    import subprocess
+    import sys
+
+    proc = subprocess.run(
+        [sys.executable, os.path.join(REPO, "tools", tool), "--help"],
+        cwd=REPO, capture_output=True, text=True, timeout=120,
+    )
+    assert proc.returncode == 0, proc.stderr
+
+
 def test_example_corpus_health_runs(spark, sf_dir):
     """examples/corpus_health.py: the one-scan quality audit must
     produce a consistent per-source funnel (pass_all <= each tier <=

@@ -321,15 +321,15 @@ def test_curation_selection_ops_compose(spark):
         )
 
 
-def test_curation_cache_step_materializes_and_validates(spark):
-    """The cache step truncates or persists the flowing frame, by
-    ``spark.meta_frame.curation.checkpoint``, and takes no kwargs.
+def test_curation_cache_step_materializes_and_validates(spark, monkeypatch):
+    """The cache step truncates or persists the flowing frame, by the
+    master, and takes no kwargs.
 
-    ``auto`` on the single-JVM test master takes the local-checkpoint
-    branch: once an action has run, the downstream plan reads a
-    checkpointed RDD, and nothing is registered for release. ``never``
-    persists the frame and registers it with ``operators.cache``, so
-    exactly that one frame is released.
+    The single-JVM test master takes the local-checkpoint branch: once
+    an action has run, the downstream plan reads a checkpointed RDD, and
+    nothing is registered for release. A master that is not single-JVM
+    (``local_task_slots`` is ``None``) persists the frame and registers
+    it with ``operators.cache``, so exactly that one frame is released.
     """
     import pytest
 
@@ -355,29 +355,25 @@ def test_curation_cache_step_materializes_and_validates(spark):
     assert reads_checkpoint(out)
     assert release_tracked_caches() == 0
 
-    spark.conf.set("spark.meta_frame.curation.checkpoint", "never")
-    try:
-        out = run_curation(df, steps)
-        assert out.count() == 2
-        assert not reads_checkpoint(out)
-        assert [f.is_cached for f in _TRACKED] == [True]
-        assert "InMemoryRelation" in out._jdf.queryExecution().withCachedData().toString()
-        assert release_tracked_caches() == 1
-    finally:
-        spark.conf.unset("spark.meta_frame.curation.checkpoint")
+    monkeypatch.setattr("meta_frame_spark.session.local_task_slots", lambda s: None)
+    out = run_curation(df, steps)
+    assert out.count() == 2
+    assert not reads_checkpoint(out)
+    assert [f.is_cached for f in _TRACKED] == [True]
+    assert "InMemoryRelation" in out._jdf.queryExecution().withCachedData().toString()
+    assert release_tracked_caches() == 1
     with pytest.raises(ConfigError, match="unknown kwargs"):
         validate_curation_config({"steps": [{"op": "cache", "eager": True}]})
 
 
 class _MasterStub:
-    """The slice of a DataFrame ``_op_cache`` touches, on a given master
-    (conf ``auto``), recording which materialization it asked for."""
+    """The slice of a DataFrame ``_op_cache`` touches, on a given master,
+    recording which materialization it asked for."""
 
     def __init__(self, master):
         from types import SimpleNamespace
 
         self.sparkSession = SimpleNamespace(
-            conf=SimpleNamespace(get=lambda key, default=None: default),
             sparkContext=SimpleNamespace(master=master),
         )
         self.calls = []

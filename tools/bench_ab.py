@@ -27,6 +27,8 @@ How to read the table (also documented in BASELINE.md):
   at least --min-sec on the slower side, i.e. the only entries worth
   chasing.
 * queries present on one side only are listed, never ratio'd.
+* records on different core counts (both carrying `cpus`) are never
+  compared: the tool exits 2. A record without `cpus` draws a warning.
 """
 
 from __future__ import annotations
@@ -37,14 +39,12 @@ import os
 import subprocess
 import sys
 
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-def _load(path: str) -> dict[str, float]:
-    with open(path) as f:
-        rec = json.load(f)
-    return {k: float(v) for k, v in rec["queries"].items()}
+from bench import load_record, merge_min  # noqa: E402
 
 
-def _run_side(repo_dir: str, sf_dir: str | None) -> dict[str, float]:
+def _run_side(repo_dir: str, sf_dir: str | None) -> dict:
     env = dict(os.environ)
     if sf_dir:
         env["SPARK_GRAFT_SF_DIR"] = sf_dir
@@ -61,14 +61,8 @@ def _run_side(repo_dir: str, sf_dir: str | None) -> dict[str, float]:
     )
     for p in (last, full):
         if os.path.exists(p) and os.path.getmtime(p) != before.get(p):
-            return _load(p)
+            return load_record(p)
     raise RuntimeError(f"bench.py in {repo_dir} wrote no record")
-
-
-def _merge_min(into: dict[str, float], new: dict[str, float]) -> None:
-    for k, v in new.items():
-        if k not in into or v < into[k]:
-            into[k] = v
 
 
 def report(a: dict[str, float], b: dict[str, float],
@@ -126,15 +120,31 @@ def main() -> int:
         da, db = args.run
         a: dict[str, float] = {}
         b: dict[str, float] = {}
+        cpus: dict[str, int | None] = {}
         for rep in range(args.reps):
             order = [("A", da, a), ("B", db, b), ("B", db, b), ("A", da, a)]
             for name, d, acc in order:
                 print(f"[rep {rep}] running {name} ({d}) ...", flush=True)
-                _merge_min(acc, _run_side(d, args.sf_dir))
+                rec = _run_side(d, args.sf_dir)
+                cpus[name] = rec.get("cpus")
+                print(f"[rep {rep}] {name} cpus={cpus[name]}", flush=True)
+                merge_min(acc, rec["queries"])
+        cpus_a, cpus_b = cpus["A"], cpus["B"]
     elif len(args.records) == 2:
-        a, b = _load(args.records[0]), _load(args.records[1])
+        ra, rb = (load_record(p) for p in args.records)
+        if ra is None or rb is None:
+            ap.error("unreadable record")
+        a, b = ra["queries"], rb["queries"]
+        cpus_a, cpus_b = ra.get("cpus"), rb.get("cpus")
     else:
         ap.error("give two record paths, or --run DIR_A DIR_B")
+        return 2
+    if cpus_a is None or cpus_b is None:
+        print(f"WARNING: a record without cpus (A={cpus_a}, B={cpus_b}); "
+              "check both ran on the same core count", file=sys.stderr)
+    elif cpus_a != cpus_b:
+        print(f"A ran on {cpus_a} cpus and B on {cpus_b}: seconds do not "
+              "compare across core counts", file=sys.stderr)
         return 2
     if args.out:
         with open(args.out, "w") as f:

@@ -15,8 +15,11 @@ between them:
   --slice-budget seconds (default 12), so no slice sustains load
   long enough to trip the throttle;
 * each slice is bracketed by the same CPU-bound probe bench.py uses;
-  a slice is CLEAN only if both probes are <= 1.5x the frozen 0.2 s
-  clean value;
+  a slice is CLEAN only if both probes are <= bench.DIRTY_RATIO x the
+  clean value, derived as in bench.py: the fastest probe this run
+  timed, or the clean value of the --expected record when that ran on
+  the same cpus (a slice judged clean mid-run is re-judged against
+  the final value);
 * after each slice the process sleeps --gap seconds (default 45) so
   burst credits regenerate;
 * queries whose every slice so far was dirty are re-sliced (halved
@@ -29,7 +32,11 @@ between them:
   clean slice; the record's `record_contended` is true unless every
   query got a clean bracket.
 
-Output: the full bench.py-shaped payload written to --out (required)
+The warm-ups, probe, run_one and min-merge are bench.py's own
+functions, imported from it.
+
+Output: the full bench.py-shaped payload, `cpus` included, written
+to --out (required)
 — inspect it and copy over BENCH_FULL.json only if `record_contended`
 is false.
 """
@@ -42,14 +49,9 @@ import os
 import sys
 import time
 
-for _v in ("OPENBLAS_NUM_THREADS", "OMP_NUM_THREADS", "MKL_NUM_THREADS"):
-    os.environ.setdefault(_v, "8")
-
-import pandas as pd
-
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-PROBE_CLEAN_SEC = 0.2  # frozen clean-slot probe value (bench.py)
+import bench  # noqa: E402  (caps the BLAS pools before numpy loads)
 
 
 def main() -> int:
@@ -71,7 +73,9 @@ def main() -> int:
                          "its per-query values and clean markers are "
                          "preloaded, new attempts only ever lower "
                          "values / add clean brackets (sound under "
-                         "the min rule — same code, same protocol)")
+                         "the min rule — same code, same protocol, "
+                         "same cpus: a record of another core count "
+                         "is refused, exit 2)")
     ap.add_argument("--replace", action="store_true",
                     help="with --only + --merge: discard the prior "
                          "values/clean markers of the --only queries "
@@ -80,69 +84,38 @@ def main() -> int:
                          "only sound across same-code attempts)")
     args = ap.parse_args()
 
-    try:
-        from tools.check_bench_record import warn as _bench_record_warn
-
-        _bench_record_warn()
-    except Exception:
-        pass
-
-    here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    bench.warn_record()
     sf_dir = args.sf_dir
-    sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else -1.0
-
-    expected_src = args.expected or os.path.join(here, "BENCH_FULL.json")
-    expected: dict[str, float] = {}
-    try:
-        with open(expected_src) as f:
-            expected = json.load(f).get("queries", {})
-    except OSError:
-        pass
+    sf = bench.sf_of(sf_dir)
+    incumbent = bench.load_record(
+        args.expected or os.path.join(bench.HERE, "BENCH_FULL.json")) or {}
+    expected: dict[str, float] = incumbent.get("queries", {})
+    prior = None
+    if args.merge:
+        prior = bench.load_record(args.merge)
+        if prior is None:
+            raise SystemExit(f"--merge record unreadable: {args.merge}")
 
     import __spark_entry__ as entrymod
-    from bench import WARM_QUERIES
-    from meta_frame_spark.session import get_session
+    from meta_frame_spark.session import get_session, local_task_slots
 
     spark = get_session(app_name="meta_frame_spark-bench-sliced")
     spark.sparkContext.setLogLevel("ERROR")
-
-    # --- identical warmups to bench.py ---
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("long")
-    def _warm(s: pd.Series) -> pd.Series:
-        return s
-
-    spark.range(1_000_000).select(_warm("id").alias("id")).selectExpr(
-        "max(id)").collect()
-    spark.createDataFrame([(1, "x")], "a long, b string").collect()
+    cpus = local_task_slots(spark)
+    if prior is not None and not bench.same_cpus(prior, cpus):
+        if "cpus" in prior:
+            # the min rule only holds across runs on the same cores
+            print(f"--merge record ran on {prior['cpus']} cpus, this run "
+                  f"on {cpus}: seconds do not merge across core counts",
+                  file=sys.stderr)
+            spark.stop()
+            return 2
+        print(f"WARNING: --merge record has no cpus; check it ran on "
+              f"{cpus} cpus", file=sys.stderr)
+    _, lent_clean = bench.reference(incumbent, sf, cpus)
     all_queries = dict(sorted(entrymod.queries().items()))
-    warm_sf = "/root/testdata/sf0.001"
-    if os.path.isdir(warm_sf):
-        for wname in WARM_QUERIES:
-            try:
-                all_queries[wname](spark, warm_sf).write.format("noop").mode(
-                    "overwrite").save()
-            except Exception:
-                pass
-        spark.catalog.clearCache()
-
-    def _probe() -> float:
-        t0 = time.perf_counter()
-        spark.range(200_000_000, numPartitions=32).selectExpr(
-            "count(if(id % 7 = 0, 1, null)) as n"
-        ).collect()
-        return round(time.perf_counter() - t0, 3)
-
-    def run_one(fn) -> float:
-        t0 = time.perf_counter()
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        sec = round(time.perf_counter() - t0, 3)
-        spark.catalog.clearCache()
-        return sec
-
-    _probe()  # compile the probe plan untimed
+    bench.warm_session(spark, all_queries)
+    bench.probe(spark)  # compile the probe plan untimed
 
     def pack(names: list[str], budget: float) -> list[list[str]]:
         slices, cur, cur_w = [], [], 0.0
@@ -158,16 +131,16 @@ def main() -> int:
         return slices
 
     best: dict[str, float] = {}
-    clean_ok: set[str] = set()
+    prior_clean: set[str] = set()
+    prior_slices: list[dict] = []  # kept in the log, judged by their own run
     slice_log: list[dict] = []
-    if args.merge:
-        with open(args.merge) as f:
-            prior = json.load(f)
+    all_probes: list[float] = []  # this run's, in order
+    if prior is not None:
         best.update(prior["queries"])
-        clean_ok.update(
+        prior_clean.update(
             set(prior["queries"]) - set(prior["probe"].get("contended", []))
         )
-        slice_log.extend(prior["probe"].get("slices", []))
+        prior_slices = prior["probe"].get("slices", [])
     todo = list(all_queries)
     if args.only:
         wanted = {n.strip() for n in args.only.split(",") if n.strip()}
@@ -178,7 +151,21 @@ def main() -> int:
         if args.replace:
             for n in wanted:
                 best.pop(n, None)
-                clean_ok.discard(n)
+                prior_clean.discard(n)
+    # fixed for every pass: a query whose slice a later, lower clean
+    # value re-judges dirty is measured again
+    scope = set(todo)
+
+    def judge() -> tuple[float, set[str]]:
+        """The clean value over every probe this run timed so far, and
+        the queries with a clean-bracketed attempt under it (this run's
+        slices, plus the merged record's clean queries)."""
+        clean = bench.clean_sec(all_probes, lent_clean)
+        for s in slice_log:
+            s["clean"] = bench.bracket_clean(s["probe_pre"], s["probe_post"], clean)
+        return clean, prior_clean.union(
+            *(s["queries"] for s in slice_log if s["clean"]))
+
     budget, gap = args.slice_budget, args.gap
 
     for pass_no in range(1, args.passes + 1):
@@ -197,64 +184,49 @@ def main() -> int:
             # (pmi_collocations recorded 6.2 s vs its own <= 1.9 s
             # contended driver upper bound). Warm BEFORE the probe so
             # our own warm load can't dirty the contention bracket.
-            if os.path.isdir(warm_sf):
-                for n in names:
-                    try:
-                        all_queries[n](spark, warm_sf).write.format(
-                            "noop").mode("overwrite").save()
-                    except Exception:
-                        pass
-                spark.catalog.clearCache()
+            bench.prewarm(spark, all_queries, names)
             time.sleep(gap)
-            p_pre = _probe()
-            vals = {}
-            for n in names:
-                vals[n] = run_one(all_queries[n])
-            p_post = _probe()
-            clean = (p_pre <= 1.5 * PROBE_CLEAN_SEC
-                     and p_post <= 1.5 * PROBE_CLEAN_SEC)
-            for n, v in vals.items():
-                if n not in best or v < best[n]:
-                    best[n] = v
-                if clean:
-                    clean_ok.add(n)
+            p_pre = bench.probe(spark)
+            vals = {n: bench.run_one(spark, all_queries[n], sf_dir)
+                    for n in names}
+            p_post = bench.probe(spark)
+            all_probes += [p_pre, p_post]
+            bench.merge_min(best, vals)
             slice_log.append({
                 "pass": pass_no, "slice": si, "queries": names,
                 "probe_pre": p_pre, "probe_post": p_post,
-                "clean": clean, "wall": round(sum(vals.values()), 3),
+                "wall": round(sum(vals.values()), 3),
             })
             print(f"  slice {si}: pre={p_pre} post={p_post} "
-                  f"clean={clean} wall={round(sum(vals.values()), 2)} "
+                  f"wall={round(sum(vals.values()), 2)} "
                   f"({len(names)} queries)", flush=True)
-        scope = set(todo) if args.only else set(all_queries)
-        todo = [n for n in list(all_queries)
-                if n in scope and n not in clean_ok]
+        clean, clean_ok = judge()
+        print(f"[pass {pass_no}] clean probe value {clean}s: "
+              f"{sum(s['clean'] for s in slice_log)}/{len(slice_log)} "
+              "slices clean", flush=True)
+        todo = [n for n in all_queries if n in scope and n not in clean_ok]
         budget = max(4.0, budget / 2)
         gap = min(180.0, gap * 2)
 
+    clean, clean_ok = judge()
     contended = sorted(set(all_queries) - clean_ok)
     record_contended = bool(contended)
-    try:
-        load_1m = round(os.getloadavg()[0], 1)
-    except OSError:
-        load_1m = -1.0
     total = round(sum(best.values()), 3)
-    all_probes = [p for s in slice_log for p in (s["probe_pre"],
-                                                 s["probe_post"])]
     payload = {
         "metric": "total_query_sec",
         "value": total,
         "unit": "sec",
         "queries": best,
         "sf": sf,
+        "cpus": cpus,
         "probe": {
             "protocol": "sliced",
-            "clean_sec": PROBE_CLEAN_SEC,
-            "load_1m": load_1m,
+            "clean_sec": clean,
+            "load_1m": bench.load_1m(),
             "start_sec": all_probes[0] if all_probes else -1.0,
             "end_sec": all_probes[-1] if all_probes else -1.0,
             "max_interleaved": max(all_probes) if all_probes else -1.0,
-            "slices": slice_log,
+            "slices": prior_slices + slice_log,
             "contended": contended,
             "record_contended": record_contended,
         },
@@ -263,7 +235,7 @@ def main() -> int:
         json.dump(payload, f, indent=1)
     print(json.dumps({
         "metric": "total_query_sec", "value": total,
-        "n_queries": len(best), "n_clean": len(clean_ok),
+        "n_queries": len(best), "n_clean": len(clean_ok), "cpus": cpus,
         "contended": contended, "record_contended": record_contended,
         "out": args.out,
     }), flush=True)
