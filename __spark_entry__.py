@@ -55,7 +55,7 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         target = spark.sparkContext.defaultParallelism
         files = df.inputFiles()
         if len(files) < target and \
-                _splittable_chunks(tuple(files), target) < target:
+                _parquet_footer(tuple(files))[0] < target:
             df = df.repartition(target, F.col("doc_id"))
     if name == "embeddings":
         # Same under-split hazard as documents, but the vector family
@@ -69,10 +69,10 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # an identical plan.
         target = spark.sparkContext.defaultParallelism
         files = df.inputFiles()
-        if len(files) < target and \
-                _splittable_chunks(tuple(files), target) < target and \
-                _parquet_rows(tuple(files)) >= target * _VEC_ROWS_PER_CORE:
-            df = df.repartition(target, F.col("vec_id"))
+        if len(files) < target:
+            groups, rows = _parquet_footer(tuple(files))
+            if groups < target and rows >= target * _VEC_ROWS_PER_CORE:
+                df = df.repartition(target, F.col("vec_id"))
     return df
 
 
@@ -85,50 +85,24 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 _VEC_ROWS_PER_CORE = 4096
 
 
-def _parquet_rows(files: tuple[str, ...]) -> int:
-    """Total footer row count for local parquet files (driver-side
-    metadata only, cached per file list). Unknown/remote layouts return
-    0 — the conservative no-spread answer for the embeddings gate,
-    because spreading costs a wide-row shuffle when wrong."""
-    hit = _ROWS_CACHE.get(files)
-    if hit is not None:
-        return hit
-    total = 0
-    try:
-        from urllib.parse import urlparse
+def _parquet_footer(files: tuple[str, ...]) -> tuple[int, int]:
+    """``(row_groups, rows)`` summed over the footers of local parquet
+    files (driver-side metadata only, cached per file list).
 
-        import pyarrow.parquet as pq
-
-        for f in files:
-            u = urlparse(f)
-            if u.scheme not in ("", "file"):
-                total = 0
-                break
-            total += pq.ParquetFile(u.path or f).metadata.num_rows
-    except Exception:
-        total = 0
-    _ROWS_CACHE[files] = total
-    return total
-
-
-_ROWS_CACHE: dict[tuple[str, ...], int] = {}
-
-
-def _splittable_chunks(files: tuple[str, ...], cap: int) -> int:
-    """How many non-empty scan splits these parquet files can yield.
     Parquet parallelizes at ROW-GROUP granularity: a byte-range split
     containing no row-group midpoint reads nothing, so achievable scan
-    parallelism is sum(num_row_groups) — a single LARGE file with many
+    parallelism is the row-group count — a single LARGE file with many
     row groups already fills the machine and must not be repartitioned
     (that would shuffle the wide text column for nothing, ADVICE r13),
-    while a single-row-group file genuinely under-splits. Footer reads
-    are driver-side metadata only, done once per file list (cached);
-    early-out at ``cap``. Non-local or unreadable layouts return 0 =
-    unknown, keeping the conservative spread."""
-    hit = _SPLITTABLE_CACHE.get(files)
+    while a single-row-group file genuinely under-splits. Non-local or
+    unreadable layouts return ``(0, 0)``: zero row groups keeps the
+    conservative spread for documents, and zero rows is the no-spread
+    answer for the embeddings gate, because spreading costs a wide-row
+    shuffle when wrong."""
+    hit = _FOOTER_CACHE.get(files)
     if hit is not None:
         return hit
-    total = 0
+    groups = rows = 0
     try:
         from urllib.parse import urlparse
 
@@ -137,18 +111,18 @@ def _splittable_chunks(files: tuple[str, ...], cap: int) -> int:
         for f in files:
             u = urlparse(f)
             if u.scheme not in ("", "file"):
-                total = 0
+                groups = rows = 0
                 break
-            total += pq.ParquetFile(u.path or f).metadata.num_row_groups
-            if total >= cap:
-                break
+            meta = pq.ParquetFile(u.path or f).metadata
+            groups += meta.num_row_groups
+            rows += meta.num_rows
     except Exception:
-        total = 0
-    _SPLITTABLE_CACHE[files] = total
-    return total
+        groups = rows = 0
+    _FOOTER_CACHE[files] = (groups, rows)
+    return groups, rows
 
 
-_SPLITTABLE_CACHE: dict[tuple[str, ...], int] = {}
+_FOOTER_CACHE: dict[tuple[str, ...], tuple[int, int]] = {}
 
 
 # --------------------------------------------------------------------------

@@ -33,28 +33,60 @@ Dialect B' — nested aggregate (soundwave.py:84-106)::
 
 from __future__ import annotations
 
+import operator
 from dataclasses import dataclass, field
-from typing import Any
+from typing import Any, Callable
+
+from pyspark.sql import Column
+from pyspark.sql import functions as F
 
 
 class ConfigError(ValueError):
     """Raised on any invalid metadata config (unknown op, missing key...)."""
 
 
-#: filter_op values accepted by dialect A structured filters.
+#: filter_op -> predicate builder ``(column, filter_value) -> Column``
+#: for dialect A structured filters; its keys are the accepted ops.
 #: Reference supports == > < isin (optimus.py:8-14); we add the obvious
 #: completions and keep eqNullSafe semantics for == (megatron.py:11).
-FILTER_OPS = {"==", "!=", ">", "<", ">=", "<=", "isin", "not_isin", "is_null", "not_null"}
+FILTER_BUILDERS: dict[str, Callable[[Column, Any], Column]] = {
+    "==": lambda c, v: c.eqNullSafe(F.lit(v)),
+    "!=": lambda c, v: ~c.eqNullSafe(F.lit(v)),
+    ">": operator.gt,
+    "<": operator.lt,
+    ">=": operator.ge,
+    "<=": operator.le,
+    "isin": lambda c, v: c.isin(list(v)),
+    "not_isin": lambda c, v: ~c.isin(list(v)),
+    "is_null": lambda c, v: c.isNull(),
+    "not_null": lambda c, v: c.isNotNull(),
+}
+FILTER_OPS = FILTER_BUILDERS.keys()
 
-#: agg funcs accepted everywhere. Reference exercises sum/max/min
+#: agg func -> aggregate builder ``Column -> Column``, used everywhere;
+#: its keys are the accepted funcs. Reference exercises sum/max/min
 #: (sparks/optimus.py:28-33), count (soundwave.py:102), avg
 #: (soundwave.py:90). mean is an avg alias; the rest are natural
 #: completions that stay in native Spark aggregation.
-AGG_FUNCS = {
-    "sum", "max", "min", "count", "avg", "mean", "first", "last",
-    "count_distinct", "stddev", "variance", "collect_set_size", "median",
-    "approx_count_distinct",
+AGG_BUILDERS: dict[str, Callable[[Column], Column]] = {
+    "sum": F.sum,
+    "max": F.max,
+    "min": F.min,
+    "count": F.count,
+    "avg": F.avg,
+    "mean": F.avg,
+    "first": F.first,
+    "last": F.last,
+    "count_distinct": F.countDistinct,
+    "stddev": F.stddev,
+    "variance": F.variance,
+    "collect_set_size": lambda c: F.size(F.collect_set(c)),
+    "median": F.median,
+    # HLL sketch — constant memory per group regardless of cardinality;
+    # the scale-safe default for high-cardinality distinct counts
+    "approx_count_distinct": F.approx_count_distinct,
 }
+AGG_FUNCS = AGG_BUILDERS.keys()
 
 JOIN_TYPES = {
     "inner", "left", "right", "outer", "full", "left_outer", "right_outer",

@@ -25,6 +25,8 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from meta_frame_spark.config.model import (
+    AGG_BUILDERS,
+    FILTER_BUILDERS,
     AggSpec,
     ConfigError,
     FilterSpec,
@@ -54,29 +56,7 @@ def filter_condition(spec: FilterSpec) -> Column:
     (megatron.py:11 ``eqNullSafe``); its pandas branch used plain ``==`` —
     divergence resolved in favor of the null-safe form.
     """
-    c = F.col(spec.filter_col)
-    op = spec.filter_op
-    if op == "==":
-        return c.eqNullSafe(F.lit(spec.filter_value))
-    if op == "!=":
-        return ~c.eqNullSafe(F.lit(spec.filter_value))
-    if op == ">":
-        return c > spec.filter_value
-    if op == "<":
-        return c < spec.filter_value
-    if op == ">=":
-        return c >= spec.filter_value
-    if op == "<=":
-        return c <= spec.filter_value
-    if op == "isin":
-        return c.isin(list(spec.filter_value))
-    if op == "not_isin":
-        return ~c.isin(list(spec.filter_value))
-    if op == "is_null":
-        return c.isNull()
-    if op == "not_null":
-        return c.isNotNull()
-    raise ConfigError(f"unknown filter_op {op!r}")  # unreachable post-validation
+    return FILTER_BUILDERS[spec.filter_op](F.col(spec.filter_col), spec.filter_value)
 
 
 def apply_filters(df: DataFrame, filters) -> DataFrame:
@@ -112,26 +92,6 @@ def apply_string_filters(df: DataFrame, exprs) -> DataFrame:
 # Aggregation (A1-A10)
 # --------------------------------------------------------------------------
 
-_AGG_BUILDERS: dict[str, Callable[[Column], Column]] = {
-    "sum": F.sum,
-    "max": F.max,
-    "min": F.min,
-    "count": F.count,
-    "avg": F.avg,
-    "mean": F.avg,
-    "first": F.first,
-    "last": F.last,
-    "count_distinct": F.countDistinct,
-    "stddev": F.stddev,
-    "variance": F.variance,
-    "collect_set_size": lambda c: F.size(F.collect_set(c)),
-    "median": F.median,
-    # HLL sketch — constant memory per group regardless of cardinality;
-    # the scale-safe default for high-cardinality distinct counts
-    "approx_count_distinct": F.approx_count_distinct,
-}
-
-
 def agg_expr(col: str, func: str, out_name: str, where: str | None = None) -> Column:
     """One aggregate expression, aliased at agg time (never post-hoc rename).
 
@@ -139,7 +99,7 @@ def agg_expr(col: str, func: str, out_name: str, where: str | None = None) -> Co
     ``func(CASE WHEN where THEN col END)`` — a native conditional agg, no
     extra pass over the data.
     """
-    builder = _AGG_BUILDERS.get(func)
+    builder = AGG_BUILDERS.get(func)
     if builder is None:
         raise ConfigError(f"unknown agg_func {func!r}")
     target = F.col(col)

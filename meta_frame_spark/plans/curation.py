@@ -34,6 +34,7 @@ sinks the result.
 
 from __future__ import annotations
 
+import importlib
 import inspect
 from typing import Callable
 
@@ -43,141 +44,79 @@ from pyspark.sql import functions as F
 from meta_frame_spark.config.model import ConfigError
 
 
+def _resolve(path: str) -> Callable:
+    """The function at ``"module:function"``, imported on first use."""
+    mod_name, fn_name = path.split(":")
+    return getattr(importlib.import_module(mod_name), fn_name)
+
+
+def _forwards(path: str) -> Callable[[Callable], Callable]:
+    """Mark a step that forwards its ``**kw`` to the operator at
+    ``path`` (``"module:function"``). The step's positional parameters
+    bind the operator's leading ones and its keyword-only parameters
+    are its own; every other operator parameter is a step kwarg
+    (:func:`_allowed_keys`)."""
+
+    def mark(step: Callable) -> Callable:
+        step.forwards = path
+        return step
+
+    return mark
+
+
 def _op_filter(df: DataFrame, predicate: str) -> DataFrame:
     return df.filter(F.expr(predicate))
 
 
-def _op_quality_gate(df: DataFrame, **kw) -> DataFrame:
-    from meta_frame_spark.operators.gating import quantile_band_filter
-
-    return quantile_band_filter(df, **kw)
-
-
-def _op_winsorize(df: DataFrame, **kw) -> DataFrame:
-    from meta_frame_spark.operators.gating import winsorize
-
-    return winsorize(df, **kw)
+@_forwards("meta_frame_spark.operators.dedup:dedup_against")
+def _op_dedup_against(df: DataFrame, corpus: DataFrame, **kw) -> DataFrame:
+    return _resolve(_op_dedup_against.forwards)(df, corpus, **kw)
 
 
-def _op_dedup_exact(df: DataFrame, **kw) -> DataFrame:
-    from meta_frame_spark.operators.dedup import drop_exact_duplicates
-
-    return drop_exact_duplicates(df, **kw)
-
-
-def _op_dedup_against(df: DataFrame, **kw) -> DataFrame:
-    from meta_frame_spark.operators.dedup import dedup_against
-
-    corpus = kw.pop("corpus")
-    return dedup_against(df, corpus, **kw)
+@_forwards("meta_frame_spark.operators.decontaminate:decontaminate")
+def _op_decontaminate(df: DataFrame, benchmark: DataFrame, **kw) -> DataFrame:
+    return _resolve(_op_decontaminate.forwards)(df, benchmark, **kw)
 
 
-def _op_domain_cap(df: DataFrame, **kw) -> DataFrame:
-    from meta_frame_spark.operators.quota import quota_per_group
-
-    return quota_per_group(df, **kw)
-
-
-def _op_stratified_sample(df: DataFrame, **kw) -> DataFrame:
-    from meta_frame_spark.operators.sampling import stratified_sample
-
-    return stratified_sample(df, **kw)
-
-
-def _op_hash_split(df: DataFrame, **kw) -> DataFrame:
-    from meta_frame_spark.operators.sampling import hash_split
-
-    return hash_split(df, **kw)
-
-
-def _op_mix(df: DataFrame, **kw) -> DataFrame:
-    from meta_frame_spark.operators.mixing import apply_mix
-
-    source_col = kw.pop("source_col")
-    weights = kw.pop("weights")
-    id_col = kw.pop("id_col")
-    return apply_mix(df, source_col, weights, id_col, **kw)
-
-
-def _op_decontaminate(df: DataFrame, **kw) -> DataFrame:
-    from meta_frame_spark.operators.decontaminate import decontaminate
-
-    bench = kw.pop("benchmark")
-    return decontaminate(df, bench, **kw)
-
-
-def _op_normalize_scores(df: DataFrame, **kw) -> DataFrame:
-    from meta_frame_spark.operators.ranking import normalize_scores
-
-    return normalize_scores(df, **kw)
-
-
-def _op_dsir_weights(df: DataFrame, **kw) -> DataFrame:
+@_forwards("meta_frame_spark.operators.dsir:dsir_log_weights")
+def _op_dsir_weights(df: DataFrame, target: DataFrame, **kw) -> DataFrame:
     """Attach DSIR importance weights: the flowing frame is the raw
     pool, ``target`` (a DataFrame, like dedup_against's ``corpus``)
     is the exemplar corpus, and every row gains ``log_weight``.
     Null-text rows carry no weight and are dropped by the inner join
     (dsir_log_weights scores only non-null text)."""
-    from meta_frame_spark.operators.dsir import dsir_log_weights
-
-    target = kw.pop("target")
     id_col = kw.get("id_col", "doc_id")
-    w = dsir_log_weights(df, target, **kw)
+    w = _resolve(_op_dsir_weights.forwards)(df, target, **kw)
     return df.join(w.select(id_col, "log_weight"), id_col)
 
 
+@_forwards("meta_frame_spark.operators.ranking:rrf_fuse")
 def _op_rrf_fuse(df: DataFrame, **kw) -> DataFrame:
     """Attach the reciprocal-rank-fused ``rrf`` score of the named
     score columns; the per-signal rank columns stay internal (join
     the operator directly for those)."""
-    from meta_frame_spark.operators.ranking import rrf_fuse
-
     id_col = kw.get("id_col", "doc_id")
-    fused = rrf_fuse(df, **kw)
+    fused = _resolve(_op_rrf_fuse.forwards)(df, **kw)
     return df.join(fused.select(id_col, "rrf"), id_col)
 
 
-def _op_quantile_match(df: DataFrame, **kw) -> DataFrame:
-    from meta_frame_spark.operators.ranking import quantile_match
-
-    return quantile_match(df, **kw)
-
-
-def _op_novelty_gate(df: DataFrame, **kw) -> DataFrame:
+@_forwards("meta_frame_spark.operators.decontaminate:novelty_score")
+def _op_novelty_gate(
+    df: DataFrame, reference: DataFrame, *, min_novelty: float = 0.5, **kw
+) -> DataFrame:
     """Keep rows whose n-gram novelty vs ``reference`` (a DataFrame,
     like dedup_against's ``corpus``) is at least ``min_novelty`` —
     the config-driven "don't re-ingest what the training set already
     contains" cut. One equi-join on the id against the per-doc
     novelty frame; schema passes through unchanged."""
-    from meta_frame_spark.operators.decontaminate import novelty_score
-
-    reference = kw.pop("reference")
-    min_novelty = float(kw.pop("min_novelty", 0.5))
     id_col = kw.get("id_col", "doc_id")
     # honor a caller-renamed score column instead of hard-coding
     # 'novelty' (ADVICE r10: out_col passed validation, then broke
     # the filter with an unresolved-column error)
     out_col = kw.get("out_col", "novelty")
-    nv = novelty_score(df, reference, **kw)
-    keep = nv.filter(F.col(out_col) >= min_novelty).select(id_col)
+    nv = _resolve(_op_novelty_gate.forwards)(df, reference, **kw)
+    keep = nv.filter(F.col(out_col) >= float(min_novelty)).select(id_col)
     return df.join(keep, id_col, "left_semi")
-
-
-def _op_budget_select(df: DataFrame, **kw) -> DataFrame:
-    """Config-driven token-budget cut — the terminal step of a
-    selection pipeline ("the best/first N-token subset"); grouped
-    form gives every group the same budget."""
-    from meta_frame_spark.operators.sampling import budget_select
-
-    return budget_select(df, **kw)
-
-
-def _op_sample_per_group(df: DataFrame, **kw) -> DataFrame:
-    """Deterministic hash-ordered k-per-group sample — the
-    config-driven inspection/eval-slice cut."""
-    from meta_frame_spark.operators.sampling import sample_k_per_group
-
-    return sample_k_per_group(df, **kw)
 
 
 def _op_normalize(
@@ -678,24 +617,30 @@ def _op_derive(df: DataFrame, columns: dict[str, str]) -> DataFrame:
     return out
 
 
-#: op name -> implementation. Each takes (df, **step kwargs).
-CURATION_OPS: dict[str, Callable] = {
+#: op name -> implementation: a step callable, or the ``"module:function"``
+#: path of an operator the step runs as is (imported on first use, so
+#: importing this module imports no operator). Each takes (df, **step
+#: kwargs); its accepted kwargs are read from its signature.
+CURATION_OPS: dict[str, Callable | str] = {
     "filter": _op_filter,
-    "quality_gate": _op_quality_gate,
-    "winsorize": _op_winsorize,
-    "dedup_exact": _op_dedup_exact,
+    "quality_gate": "meta_frame_spark.operators.gating:quantile_band_filter",
+    "winsorize": "meta_frame_spark.operators.gating:winsorize",
+    "dedup_exact": "meta_frame_spark.operators.dedup:drop_exact_duplicates",
     "dedup_against": _op_dedup_against,
-    "domain_cap": _op_domain_cap,
-    "stratified_sample": _op_stratified_sample,
-    "hash_split": _op_hash_split,
-    "mix": _op_mix,
+    "domain_cap": "meta_frame_spark.operators.quota:quota_per_group",
+    "stratified_sample": "meta_frame_spark.operators.sampling:stratified_sample",
+    "hash_split": "meta_frame_spark.operators.sampling:hash_split",
+    "mix": "meta_frame_spark.operators.mixing:apply_mix",
     "decontaminate": _op_decontaminate,
-    "normalize_scores": _op_normalize_scores,
+    "normalize_scores": "meta_frame_spark.operators.ranking:normalize_scores",
     "dsir_weights": _op_dsir_weights,
     "rrf_fuse": _op_rrf_fuse,
-    "quantile_match": _op_quantile_match,
-    "budget_select": _op_budget_select,
-    "sample_per_group": _op_sample_per_group,
+    "quantile_match": "meta_frame_spark.operators.ranking:quantile_match",
+    # config-driven token-budget cut: the terminal step of a selection
+    # pipeline ("the best/first N-token subset")
+    "budget_select": "meta_frame_spark.operators.sampling:budget_select",
+    # deterministic hash-ordered k-per-group inspection/eval slice
+    "sample_per_group": "meta_frame_spark.operators.sampling:sample_k_per_group",
     "novelty_gate": _op_novelty_gate,
     "normalize": _op_normalize,
     "redact_pii": _op_redact_pii,
@@ -718,70 +663,32 @@ CURATION_OPS: dict[str, Callable] = {
     "cache": _op_cache,
 }
 
-#: ops whose underlying callable hides kwargs behind **kw — validated
-#: against the real operator signature instead
-_SIG_TARGETS = {
-    "quality_gate": "meta_frame_spark.operators.gating:quantile_band_filter",
-    "winsorize": "meta_frame_spark.operators.gating:winsorize",
-    "dedup_exact": "meta_frame_spark.operators.dedup:drop_exact_duplicates",
-    "dedup_against": "meta_frame_spark.operators.dedup:dedup_against",
-    "domain_cap": "meta_frame_spark.operators.quota:quota_per_group",
-    "stratified_sample": "meta_frame_spark.operators.sampling:stratified_sample",
-    "hash_split": "meta_frame_spark.operators.sampling:hash_split",
-    "normalize_scores": "meta_frame_spark.operators.ranking:normalize_scores",
-    "dsir_weights": "meta_frame_spark.operators.dsir:dsir_log_weights",
-    "rrf_fuse": "meta_frame_spark.operators.ranking:rrf_fuse",
-    "quantile_match": "meta_frame_spark.operators.ranking:quantile_match",
-    "budget_select": "meta_frame_spark.operators.sampling:budget_select",
-    "sample_per_group": "meta_frame_spark.operators.sampling:sample_k_per_group",
-    "novelty_gate": "meta_frame_spark.operators.decontaminate:novelty_score",
-}
 
-#: config-level kwargs that are remapped before reaching the operator
-_EXTRA_KEYS = {
-    "mix": {"source_col", "weights", "id_col", "size_col", "salt"},
-    "dedup_against": {"corpus"},
-    "novelty_gate": {"min_novelty"},
-    "decontaminate": {"benchmark"},
-    "filter": {"predicate"},
-    "select": {"columns"},
-    "derive": {"columns"},
-    "normalize": {"text_col", "out_col", "html"},
-    "redact_pii": {"text_col", "out_col", "kinds"},
-    "entropy_gate": {"text_col", "min_entropy"},
-    "lang_gate": {"text_col", "langs", "min_margin"},
-    "quality_score_gate": {"text_col", "min_score"},
-    "gopher_gate": {"text_col", "rules"},
-    "repetition_gate": {"text_col", "rules"},
-    "c4_gate": {"text_col", "apply_line_filter"},
-    "blocklist_gate": {"text_col", "blocklist", "max_score"},
-    "url_gate": {"url_col", "max_len", "max_params", "max_depth"},
-    "robots_gate": {"robots", "url_col", "host_col", "txt_col"},
-    "soft_dedup": {"text_col", "id_col", "alpha", "weight_col"},
-    "lm_gate": {"text_col", "id_col", "model", "top_v", "max_quantile",
-                "score_col", "exact", "accuracy"},
-    "fix_encoding": {"text_col", "out_col"},
-    "cache": set(),
-}
+def _step(op: str) -> Callable:
+    """The callable that runs step ``op``."""
+    impl = CURATION_OPS[op]
+    return _resolve(impl) if isinstance(impl, str) else impl
 
 
-def _allowed_keys(op: str) -> set[str] | None:
-    """Valid kwarg names for a step, or None when free-form."""
-    extra = _EXTRA_KEYS.get(op, set())
-    if op in _SIG_TARGETS:
-        mod_name, fn_name = _SIG_TARGETS[op].split(":")
-        import importlib
+def _named_params(fn: Callable) -> list[inspect.Parameter]:
+    return [
+        p for p in inspect.signature(fn).parameters.values()
+        if p.kind in (p.POSITIONAL_OR_KEYWORD, p.KEYWORD_ONLY)
+    ]
 
-        fn = getattr(importlib.import_module(mod_name), fn_name)
-        params = [
-            p for p in inspect.signature(fn).parameters.values()
-            if p.kind in (p.POSITIONAL_OR_KEYWORD, p.KEYWORD_ONLY)
-        ]
-        # first parameter is the DataFrame itself
-        return {p.name for p in params[1:]} | extra
-    if op in _EXTRA_KEYS:
-        return extra
-    return None
+
+def _allowed_keys(op: str) -> set[str]:
+    """Valid kwarg names for a step: the named parameters of the code
+    that runs it after the frame, plus, for a step marked with
+    :func:`_forwards`, every parameter of its operator that the step's
+    positional parameters do not bind."""
+    fn = _step(op)
+    params = _named_params(fn)
+    allowed = {p.name for p in params[1:]}
+    if hasattr(fn, "forwards"):
+        bound = sum(p.kind is p.POSITIONAL_OR_KEYWORD for p in params)
+        allowed |= {p.name for p in _named_params(_resolve(fn.forwards))[bound:]}
+    return allowed
 
 
 def validate_curation_config(config: dict) -> list[dict]:
@@ -802,26 +709,26 @@ def validate_curation_config(config: dict) -> list[dict]:
             )
         kwargs = {k: v for k, v in step.items() if k != "op"}
         allowed = _allowed_keys(op)
-        if allowed is not None:
-            bad = set(kwargs) - allowed
-            if bad:
-                raise ConfigError(
-                    f"step {i} ({op}): unknown kwargs {sorted(bad)}; "
-                    f"allowed: {sorted(allowed)}"
-                )
+        bad = set(kwargs) - allowed
+        if bad:
+            raise ConfigError(
+                f"step {i} ({op}): unknown kwargs {sorted(bad)}; "
+                f"allowed: {sorted(allowed)}"
+            )
         out.append({"op": op, **kwargs})
     return out
 
 
+def _compile(df: DataFrame, steps: list[dict]) -> DataFrame:
+    for step in steps:
+        kwargs = {k: v for k, v in step.items() if k != "op"}
+        df = _step(step["op"])(df, **kwargs)
+    return df
+
+
 def run_curation(df: DataFrame, config: dict) -> DataFrame:
     """Compile a curation config into one lazy DataFrame plan."""
-    steps = validate_curation_config(config)
-    out = df
-    for step in steps:
-        op = step["op"]
-        kwargs = {k: v for k, v in step.items() if k != "op"}
-        out = CURATION_OPS[op](out, **kwargs)
-    return out
+    return _compile(df, validate_curation_config(config))
 
 
 #: Curation ops that are STATELESS and map-only — safe to compile onto
@@ -865,10 +772,4 @@ def run_curation_stream(stream_df: DataFrame, config: dict) -> DataFrame:
     with zero state. A drained stream therefore equals
     ``run_curation(batch_df, config)`` on the same data, which is the
     driver oracle for the ``stream_gate`` query."""
-    steps = validate_stream_config(config)
-    out = stream_df
-    for step in steps:
-        op = step["op"]
-        kwargs = {k: v for k, v in step.items() if k != "op"}
-        out = CURATION_OPS[op](out, **kwargs)
-    return out
+    return _compile(stream_df, validate_stream_config(config))

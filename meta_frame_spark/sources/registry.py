@@ -31,25 +31,17 @@ def _read_csv(spark: SparkSession, path: str, schema=None, header: bool = True,
     return reader.option("inferSchema", str(infer).lower()).csv(path)
 
 
-def _read_parquet(spark: SparkSession, path: str, schema=None, **options) -> DataFrame:
-    reader = spark.read.options(**options)
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.parquet(path)
+def _read_format(fmt: str) -> Callable[..., DataFrame]:
+    """Reader for a path-based format whose only setting is an
+    optional schema (``spark.read.format(fmt)``)."""
 
+    def read(spark: SparkSession, path: str, schema=None, **options) -> DataFrame:
+        reader = spark.read.format(fmt).options(**options)
+        if schema is not None:
+            reader = reader.schema(schema)
+        return reader.load(path)
 
-def _read_json(spark: SparkSession, path: str, schema=None, **options) -> DataFrame:
-    reader = spark.read.options(**options)
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.json(path)
-
-
-def _read_orc(spark: SparkSession, path: str, schema=None, **options) -> DataFrame:
-    reader = spark.read.options(**options)
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.orc(path)
+    return read
 
 
 def _read_text(spark: SparkSession, path: str, schema=None,
@@ -76,6 +68,17 @@ def _read_binary(spark: SparkSession, path: str, schema=None,
     if path_glob:
         reader = reader.option("pathGlobFilter", path_glob)
     return reader.load(path)
+
+
+#: path-based source name -> reader ``(spark, path, schema=None, **options)``
+_READERS: dict[str, Callable[..., DataFrame]] = {
+    "csv": _read_csv,
+    "parquet": _read_format("parquet"),
+    "json": _read_format("json"),
+    "orc": _read_format("orc"),
+    "text": _read_text,
+    "binary": _read_binary,
+}
 
 
 def load_data(
@@ -123,25 +126,17 @@ def load_data(
             source = "text"
         else:
             source = "parquet"
-    readers: dict[str, Callable] = {
-        "csv": _read_csv,
-        "parquet": _read_parquet,
-        "json": _read_json,
-        "orc": _read_orc,
-        "text": _read_text,
-        "binary": _read_binary,
-    }
-    reader = readers.get(source)
+    reader = _READERS.get(source)
     if reader is None:
         raise UnknownSourceError(
-            f"Unsupported source: {source!r} (allowed: {sorted(readers) + ['table', 'sql', 'auto']})"
+            f"Unsupported source: {source!r} (allowed: {sorted(_READERS) + ['table', 'sql', 'auto']})"
         )
     return reader(spark, path, schema=schema, **options)
 
 
 def load_sf_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one driver test table, e.g. ``load_sf_table(spark, sf, 'lineitem')``."""
-    return _read_parquet(spark, f"{sf_dir.rstrip('/')}/{name}.parquet")
+    return spark.read.parquet(f"{sf_dir.rstrip('/')}/{name}.parquet")
 
 
 def load_union(

@@ -422,6 +422,18 @@ def test_bench_committed_record_serves_its_own_cpus_only(bench):
     assert bench.may_promote(_record(cpus=32), committed)
 
 
+def test_bench_sliced_contended_lists_recorded_queries_only(bench):
+    """An --only run without --merge judges just the queries it
+    measured (listing every registered query made any partial run
+    contended); with --merge the prior record's queries count too."""
+    from tools.bench_sliced import contended_queries
+
+    assert contended_queries({"a": 0.5, "b": 1.0}, {"a", "b"}) == []
+    assert contended_queries({"a": 0.5, "b": 1.0}, {"a"}) == ["b"]
+    merged = {"a": 0.5, "old_clean": 2.0, "old_dirty": 3.0}
+    assert contended_queries(merged, {"a", "old_clean"}) == ["old_dirty"]
+
+
 @pytest.mark.parametrize("tool", ["bench_sliced.py", "bench_ab.py"])
 def test_bench_tools_import_the_core(tool):
     """Both bench tools import bench.py's measurement core at start-up;
@@ -532,7 +544,7 @@ def test_embeddings_reader_spread_gate(spark, sf_dir, tmp_path, monkeypatch):
     # (b) same file, threshold monkeypatched under the fixture's
     # per-core share: the spread must engage with a hash repartition
     monkeypatch.setattr(e, "_VEC_ROWS_PER_CORE", 1)
-    e._ROWS_CACHE.clear()
+    e._FOOTER_CACHE.clear()
     df2 = e._t(spark, sf_dir, "embeddings")
     plan = df2._jdf.queryExecution().executedPlan().toString()
     assert "Exchange hashpartitioning(vec_id" in plan

@@ -5,12 +5,23 @@ exact DuckDB oracles at sf0.01 via the driver contract
 (`__spark_entry__.oracle_sql`: decontaminate / quantile_gate /
 corpus_mix)."""
 
+import importlib
+import inspect
+import os
+import subprocess
+import sys
+
 import pytest
 from pyspark.sql import functions as F
 
 from meta_frame_spark.operators.decontaminate import decontaminate, ngram_overlap
 from meta_frame_spark.operators.gating import quantile_band_filter
 from meta_frame_spark.operators.mixing import apply_mix, mix_plan
+from meta_frame_spark.plans.curation import (
+    CURATION_OPS,
+    _allowed_keys,
+    validate_curation_config,
+)
 
 
 @pytest.fixture(scope="module")
@@ -133,11 +144,15 @@ class TestCurationConfig:
         from meta_frame_spark.config.model import ConfigError
         from meta_frame_spark.plans.curation import validate_curation_config
 
-        with pytest.raises(ConfigError, match="unknown kwargs"):
-            validate_curation_config(
-                {"steps": [{"op": "dedup_exact", "key_cols": ["text"],
-                            "id_col": "doc_id", "tpyo": 1}]}
-            )
+        for step in (
+            {"op": "dedup_exact", "key_cols": ["text"], "id_col": "doc_id",
+             "tpyo": 1},
+            # typos that once passed validation and failed at build
+            {"op": "html_extract", "html_cl": "x"},
+            {"op": "compression_gate", "min_ration": 0.2},
+        ):
+            with pytest.raises(ConfigError, match="unknown kwargs"):
+                validate_curation_config({"steps": [step]})
 
     def test_empty_steps_raises(self, spark):
         from meta_frame_spark.config.model import ConfigError
@@ -207,6 +222,85 @@ class TestCurationConfig:
         plan = out._jdf.queryExecution().executedPlan().toString()
         # filter + projection reach the parquet scan in one plan
         assert "PushedFilters: [" in plan and "IsNotNull(lang)" in plan
+
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def _named_params(fn):
+    return [
+        p for p in inspect.signature(fn).parameters.values()
+        if p.kind in (p.POSITIONAL_OR_KEYWORD, p.KEYWORD_ONLY)
+    ]
+
+
+def _function(path):
+    mod_name, fn_name = path.split(":")
+    return getattr(importlib.import_module(mod_name), fn_name)
+
+
+@pytest.mark.parametrize("op", sorted(CURATION_OPS))
+def test_curation_step_kwargs_are_read_from_its_code(op):
+    """A step's accepted kwargs are the parameters of the code that
+    runs it: never free-form, nothing its code lacks, and every
+    parameter of a forwarded operator the step does not bind itself."""
+    impl = CURATION_OPS[op]
+    fn = _function(impl) if isinstance(impl, str) else impl
+    allowed = _allowed_keys(op)
+    assert allowed is not None, f"{op} is free-form"
+    params = inspect.signature(fn).parameters.values()
+    own = {p.name for p in _named_params(fn)[1:]}
+    forwards = getattr(fn, "forwards", None)
+    if forwards is None:
+        assert all(p.kind is not p.VAR_KEYWORD for p in params), (
+            f"{op} takes **kw without naming the operator it forwards to")
+        assert allowed == own
+        return
+    positional = [p.name for p in params
+                  if p.kind is p.POSITIONAL_OR_KEYWORD]
+    forwarded = {p.name for p in _named_params(_function(forwards))
+                 [len(positional):]}
+    assert forwarded - own, f"{op} forwards no parameter"
+    assert allowed == own | forwarded
+
+
+def test_curation_vocabularies_are_their_implementations():
+    """Validation accepts what the code runs: decontaminate takes its
+    operator's kwargs, and the agg funcs / filter ops that validation
+    accepts (and lists in its error) are the names the builder builds."""
+    from meta_frame_spark.config.model import AggSpec, ConfigError, FilterSpec
+    from meta_frame_spark.plans.builder import AGG_BUILDERS, FILTER_BUILDERS
+
+    step = {"op": "decontaminate", "benchmark": None, "text_col": "text",
+            "n": 5}
+    assert validate_curation_config({"steps": [step]}) == [step]
+    for name in AGG_BUILDERS:
+        AggSpec.from_dict({"agg_col": "x", "agg_func": name})
+    for name in FILTER_BUILDERS:
+        FilterSpec.from_dict(
+            {"filter_col": "x", "filter_op": name, "filter_value": [1]})
+    with pytest.raises(ConfigError) as agg_err:
+        AggSpec.from_dict({"agg_col": "x", "agg_func": "nope"})
+    with pytest.raises(ConfigError) as filter_err:
+        FilterSpec.from_dict({"filter_col": "x", "filter_op": "nope"})
+    assert str(agg_err.value).endswith(f"allowed: {sorted(AGG_BUILDERS)}")
+    assert str(filter_err.value).endswith(
+        f"allowed: {sorted(FILTER_BUILDERS)}")
+
+
+def test_package_import_loads_no_curation_operator():
+    """Operator-backed steps resolve on first use, so importing the
+    package imports none of their modules."""
+    code = (
+        "import sys, meta_frame_spark; "
+        "print(sorted(m for m in sys.modules if m.startswith("
+        "'meta_frame_spark.operators.')))"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", code], capture_output=True, text=True,
+        check=True, timeout=120, cwd=REPO,
+    ).stdout
+    assert out.strip() == "[]"
 
 
 def test_cross_split_leakage_rollup(spark):

@@ -30,7 +30,7 @@ between them:
   same rule bench.py's rerun protocol uses);
 * a query is recorded as clean-bracketed if ANY attempt sat in a
   clean slice; the record's `record_contended` is true unless every
-  query got a clean bracket.
+  query it carries a value for got a clean bracket.
 
 The warm-ups, probe, run_one and min-merge are bench.py's own
 functions, imported from it.
@@ -52,6 +52,13 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import bench  # noqa: E402  (caps the BLAS pools before numpy loads)
+
+
+def contended_queries(measured: dict[str, float], clean_ok: set[str]) -> list[str]:
+    """The recorded queries no clean slice bracketed. Only queries the
+    record carries a value for count: an ``--only`` run judges what it
+    measured, plus, with ``--merge``, the whole prior record."""
+    return sorted(set(measured) - clean_ok)
 
 
 def main() -> int:
@@ -209,7 +216,7 @@ def main() -> int:
         gap = min(180.0, gap * 2)
 
     clean, clean_ok = judge()
-    contended = sorted(set(all_queries) - clean_ok)
+    contended = contended_queries(best, clean_ok)
     record_contended = bool(contended)
     total = round(sum(best.values()), 3)
     payload = {
