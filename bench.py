@@ -122,14 +122,18 @@ def probe(spark) -> float:
 
 
 def run_one(spark, fn, sf_dir: str) -> float:
+    from meta_frame_spark.operators import pq
+
     t0 = time.perf_counter()
     # noop sink: evaluates EVERY column of the full plan (count()
     # would let Catalyst prune map-only projection work entirely)
     fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
     sec = round(time.perf_counter() - t0, 3)
     # operators persist() self-join inputs; drop them so cached
-    # blocks don't accumulate across the suite
+    # blocks don't accumulate across the suite. Drop the PQ fit memo
+    # too: no query's time may depend on which ANN query ran before it
     spark.catalog.clearCache()
+    pq.clear_fit_cache()
     return sec
 
 

@@ -70,7 +70,8 @@ Dual-path operators and their default caps:
 * ``dedup.dup_clusters`` and ``dedup.dup_cluster_sizes`` —
   ``dedup.UNION_FIND_CAP`` = 100,000 pairs (:func:`union_find`);
   ``graph.pair_graph_stats`` gates on the same cap, with no
-  ``driver_threshold``;
+  ``driver_threshold``; all three gate through :func:`gate_pairs`,
+  which persists the pairs so their upstream runs once;
 * ``similarity.embedding_near_dup_pairs`` — ``row_cap(4 * (5 * dim +
   4 * n_planes))`` vectors: 29,127 at dim 64 with 64 planes (float64
   vectors and their normalized copy, the float32 collected copy,
@@ -108,6 +109,8 @@ import logging
 import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
+
+from meta_frame_spark.operators.cache import track
 
 log = logging.getLogger(__name__)
 
@@ -165,6 +168,21 @@ def bounded_collect(
         return None
     log.info("%s: driver path, %d rows <= %d", op, table.num_rows, cap)
     return table
+
+
+def gate_pairs(pairs: DataFrame, cap: int, op: str) -> tuple[DataFrame, pa.Table | None]:
+    """The gate of the pair operators: :func:`bounded_collect` over
+    ``pairs``'s ``(id_a, id_b)``. The gate's job runs every stage of the
+    pairs' upstream (the MinHash/LSH shuffles), and every distributed
+    branch reads the pairs more than once, so ``pairs`` is persisted
+    first (tracked, see :mod:`.cache`) and released again on the driver
+    branch. Returns the frame the distributed branch reads, and the
+    gate's table or ``None``."""
+    pairs = track(pairs.persist())
+    local = bounded_collect(pairs.select("id_a", "id_b"), cap, op)
+    if local is not None:
+        pairs.unpersist()
+    return pairs, local
 
 
 def union_find(a_ids, b_ids, op: str) -> dict:

@@ -39,7 +39,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from meta_frame_spark.operators.bounded import bounded_collect, row_cap, union_find
+from meta_frame_spark.operators.bounded import bounded_collect, gate_pairs, row_cap, union_find
 from meta_frame_spark.operators.bounded import log as bounded_log
 from meta_frame_spark.operators.cache import track
 from meta_frame_spark.operators.skew import ensure_min_partitions
@@ -154,6 +154,8 @@ PAIR_CAP = row_cap(32)
 #: most: a dict pass (union-find, or adjacency sets) over at most this
 #: many pairs finishes in well under a second.
 UNION_FIND_CAP = 100_000
+#: Rounds of the distributed min-label propagation before it gives up
+LABEL_ROUNDS = 50
 
 
 def _shingles(text_col, n: int = 5):
@@ -799,7 +801,7 @@ def near_dedup_against(
 # --------------------------------------------------------------------------
 
 def dup_clusters(
-    pairs: DataFrame, max_iter: int = 50, driver_threshold: int = UNION_FIND_CAP
+    pairs: DataFrame, max_iter: int = LABEL_ROUNDS, driver_threshold: int = UNION_FIND_CAP
 ) -> DataFrame:
     """Connected components over near-dup pairs: (node, cluster) where
     ``cluster`` is the minimum id reachable through dup edges.
@@ -820,7 +822,8 @@ def dup_clusters(
     single core finishes in microseconds. The collect is BOUNDED by
     the threshold — a real 10⁹-pair corpus takes the distributed loop;
     identical output either way (min-reachable-id labels), pinned by
-    test. The gate is :func:`.bounded.bounded_collect`; set
+    test. The gate is :func:`.bounded.gate_pairs`, which persists
+    ``pairs`` so their upstream runs once whichever branch is taken; set
     ``driver_threshold=0`` to force the distributed path.
 
     Raises ``RuntimeError`` if ``max_iter`` rounds pass without
@@ -828,9 +831,7 @@ def dup_clusters(
     ``drop_near_duplicates`` undetected); raise ``max_iter`` for
     corpora with very long duplicate chains.
     """
-    local = bounded_collect(
-        pairs.select("id_a", "id_b"), driver_threshold, "dup_clusters"
-    )
+    pairs, local = gate_pairs(pairs, driver_threshold, "dup_clusters")
     if local is not None:
         roots = union_find(
             local.column(0).to_pylist(), local.column(1).to_pylist(), "dup_clusters"
@@ -840,7 +841,11 @@ def dup_clusters(
             F.col("id_a").alias("node"), F.col("id_a").alias("cluster")
         ).schema
         return spark.createDataFrame(list(roots.items()), schema)
+    return _propagate_min_labels(pairs, max_iter)
 
+
+def _propagate_min_labels(pairs: DataFrame, max_iter: int = LABEL_ROUNDS) -> DataFrame:
+    """:func:`dup_clusters`' distributed branch."""
     converged = False
     edges = (
         pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
@@ -899,9 +904,7 @@ def dup_cluster_sizes(
     over the driver union-find's roots, with no distributed groupBy over
     the small label frame; above it (or at 0) it is the distributed
     clustering loop plus a groupBy."""
-    local = bounded_collect(
-        pairs.select("id_a", "id_b"), driver_threshold, "dup_cluster_sizes"
-    )
+    pairs, local = gate_pairs(pairs, driver_threshold, "dup_cluster_sizes")
     if local is not None:
         roots = union_find(
             local.column(0).to_pylist(), local.column(1).to_pylist(), "dup_cluster_sizes"
@@ -913,7 +916,7 @@ def dup_cluster_sizes(
         return pairs.sparkSession.createDataFrame(
             list(Counter(roots.values()).items()), schema
         )
-    return dup_clusters(pairs, driver_threshold=0).groupBy("cluster").agg(
+    return _propagate_min_labels(pairs).groupBy("cluster").agg(
         F.count(F.lit(1)).alias("n_nodes")
     )
 

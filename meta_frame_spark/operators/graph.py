@@ -52,8 +52,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_type
 
-from meta_frame_spark.operators.bounded import bounded_collect, row_cap
-from meta_frame_spark.operators.cache import track
+from meta_frame_spark.operators.bounded import bounded_collect, gate_pairs, row_cap
 from meta_frame_spark.operators.dedup import UNION_FIND_CAP
 
 #: Driver bytes of one edge in :func:`pagerank`'s driver branch: the
@@ -379,13 +378,9 @@ def pair_graph_stats(pairs: DataFrame) -> DataFrame:
     through the same Spark expressions as the operators', so every
     value is bit-identical to theirs. Larger pair lists run both
     operators over one persisted pair frame."""
-    local = bounded_collect(
-        pairs.select("id_a", "id_b"), UNION_FIND_CAP, "pair_graph_stats"
-    )
+    pairs, local = gate_pairs(pairs, UNION_FIND_CAP, "pair_graph_stats")
     if local is None:
-        e = track(pairs.persist()).select(
-            F.col("id_a").alias("src"), F.col("id_b").alias("dst")
-        )
+        e = pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
         return degree_stats(e).crossJoin(triangle_count(e))
     adj: dict = defaultdict(set)
     for a, b in zip(local.column(0).to_pylist(), local.column(1).to_pylist()):

@@ -461,6 +461,32 @@ def test_pair_graph_stats_equals_graph_operators(spark, caplog, monkeypatch, pai
     assert [tuple(r) for r in distributed.collect()] == want
 
 
+@pytest.mark.parametrize("op", [
+    lambda pairs: dup_clusters(pairs, driver_threshold=1),
+    lambda pairs: dedup.dup_cluster_sizes(pairs, driver_threshold=1),
+    pair_graph_stats,
+], ids=["dup_clusters", "dup_cluster_sizes", "pair_graph_stats"])
+def test_pair_gate_runs_the_upstream_once(spark, caplog, monkeypatch, op):
+    """Above the cap (not 0, which runs no gate job) the gate's job and
+    the distributed branch read one persisted pair frame: the upstream's
+    work, a Python UDF counting its rows before a shuffle, runs once."""
+    monkeypatch.setattr(graph, "UNION_FIND_CAP", 1)
+    seen = spark.sparkContext.accumulator(0)
+
+    @F.udf("bigint")
+    def tick(x):
+        seen.add(1)
+        return x
+
+    docs = spark.range(40, numPartitions=4).select(tick("id").alias("id"))
+    # 20 pairs (k, k + 20)
+    pairs = docs.groupBy((F.col("id") % 20).alias("id_a")).agg(F.max("id").alias("id_b"))
+    with caplog.at_level(logging.INFO, logger="meta_frame_spark.operators.bounded"):
+        op(pairs).collect()
+    assert any("distributed path, > 1 rows" in m for m in caplog.messages)
+    assert seen.value == 40
+
+
 def test_registry_collects_nothing():
     """The query registry composes operators: every driver collect goes
     through an operator's bounded gate."""

@@ -322,24 +322,50 @@ def test_bench_record_guard(tmp_path):
     record fails, missing record passes (nothing to mis-commit)."""
     import json
 
-    from tools.check_bench_record import record_is_clean
+    from tools.check_bench_record import committed_cpus, record_is_clean
 
+    cpus = committed_cpus()
+    assert isinstance(cpus, int)
     clean = tmp_path / "clean.json"
     clean.write_text(json.dumps({
-        "value": 1.0, "queries": {"q": 1.0},
+        "value": 1.0, "cpus": cpus, "queries": {"q": 1.0},
         "probe": {"record_contended": False, "contended": []},
     }))
     ok, _ = record_is_clean(str(clean))
     assert ok
     bad = tmp_path / "bad.json"
     bad.write_text(json.dumps({
-        "value": 2.0, "queries": {"q": 2.0},
+        "value": 2.0, "cpus": cpus, "queries": {"q": 2.0},
         "probe": {"record_contended": True, "contended": ["q"]},
     }))
     ok, msg = record_is_clean(str(bad))
     assert not ok and "git restore" in msg
     ok, _ = record_is_clean(str(tmp_path / "missing.json"))
     assert ok
+
+
+@pytest.mark.parametrize("cpus", [4, None])
+def test_bench_record_guard_rejects_another_core_count(tmp_path, cpus):
+    """A clean record of another (or no) core count than the committed
+    32-core one must not be committed over it."""
+    import json
+
+    from tools.check_bench_record import record_is_clean
+
+    rec = {
+        "value": 1.0, "queries": {"q": 1.0},
+        "probe": {"record_contended": False, "contended": []},
+    }
+    if cpus is not None:
+        rec["cpus"] = cpus
+    path = tmp_path / "BENCH_FULL.json"
+    path.write_text(json.dumps(rec))
+    ok, msg = record_is_clean(str(path), cpus=32)
+    assert not ok
+    assert f"cpus={cpus}" in msg and "cpus=32" in msg and "git restore" in msg
+    rec["cpus"] = 32
+    path.write_text(json.dumps(rec))
+    assert record_is_clean(str(path), cpus=32)[0]
 
 
 @pytest.fixture

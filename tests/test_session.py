@@ -6,9 +6,12 @@ from types import SimpleNamespace
 import pytest
 
 from meta_frame_spark import session
-from meta_frame_spark.session import ICU_CASE_MAPPINGS, LOCAL_JIT_OPTIONS, get_session
+from meta_frame_spark.session import (
+    ICU_CASE_MAPPINGS, LOCAL_JIT_OPTIONS, LOCAL_JVM_OPTIONS, get_session,
+)
 
 JAVA_OPTIONS = "spark.driver.defaultJavaOptions"
+EXTRA_OPTIONS = "spark.driver.extraJavaOptions"
 
 
 class _BuilderStub:
@@ -43,6 +46,10 @@ class _BuilderStub:
 
 @pytest.fixture
 def builder(monkeypatch):
+    # the JVM reads these at launch too: a collector in them is a caller's
+    for v in ("JDK_JAVA_OPTIONS", "JAVA_TOOL_OPTIONS"):
+        monkeypatch.delenv(v, raising=False)
+
     def install(lang="en"):
         stub = _BuilderStub(lang)
         monkeypatch.setattr(session, "SparkSession", SimpleNamespace(builder=stub))
@@ -64,7 +71,42 @@ def test_driver_heap_sized_only_on_a_single_jvm_master(builder, master, sized):
     stub = builder()
     get_session(master=master)
     assert ("spark.driver.memory" in stub.conf) == sized
-    assert stub.conf.get(JAVA_OPTIONS) == (LOCAL_JIT_OPTIONS if sized else None)
+    assert stub.conf.get(JAVA_OPTIONS) == (LOCAL_JVM_OPTIONS if sized else None)
+
+
+@pytest.mark.parametrize("master", [
+    "local-cluster[2,1,1024]", "spark://host:7077", "yarn", None,
+])
+def test_cluster_jvms_keep_their_own_defaults(builder, monkeypatch, master):
+    # master=None: spark-submit's master, when SPARK_GRAFT_LOCAL=0
+    monkeypatch.setenv("SPARK_GRAFT_LOCAL", "0")
+    stub = builder()
+    get_session(master=master)
+    assert JAVA_OPTIONS not in stub.conf
+    assert "spark.driver.memory" not in stub.conf
+
+
+@pytest.mark.parametrize("env", ["JDK_JAVA_OPTIONS", "JAVA_TOOL_OPTIONS", None])
+def test_a_callers_collector_keeps_the_thresholds(builder, monkeypatch, env):
+    """``java -XX:+UseParallelGC -XX:+UseG1GC`` refuses to start
+    ("Multiple garbage collectors selected"), so a collector the caller
+    selects drops ours and keeps the JIT options."""
+    stub = builder()
+    if env is None:
+        get_session(master="local[2]", extra_conf={EXTRA_OPTIONS: "-Dfoo=1 -XX:+UseG1GC"})
+    else:
+        monkeypatch.setenv(env, "-Xss4m -XX:+UseSerialGC")
+        get_session(master="local[2]")
+    assert stub.conf[JAVA_OPTIONS] == LOCAL_JIT_OPTIONS
+
+
+def test_only_a_selected_collector_drops_ours(builder):
+    """A disabled collector or another ``Use*`` flag selects none."""
+    stub = builder()
+    get_session(master="local[2]", extra_conf={
+        EXTRA_OPTIONS: "-XX:-UseG1GC -XX:+UseGCOverheadLimit -XX:+UseStringDeduplication"
+    })
+    assert stub.conf[JAVA_OPTIONS] == LOCAL_JVM_OPTIONS
 
 
 def test_extra_conf_java_options_win_or_compose(builder):
@@ -72,19 +114,25 @@ def test_extra_conf_java_options_win_or_compose(builder):
     get_session(master="local[2]", extra_conf={JAVA_OPTIONS: "-Xss4m"})
     assert stub.conf[JAVA_OPTIONS] == "-Xss4m"
     stub = builder()
-    get_session(master="local[2]", extra_conf={"spark.driver.extraJavaOptions": "-Dfoo=1"})
+    get_session(master="local[2]", extra_conf={EXTRA_OPTIONS: "-Dfoo=1"})
     # Spark appends the extra options to the default ones at launch
-    assert stub.conf[JAVA_OPTIONS] == LOCAL_JIT_OPTIONS
-    assert stub.conf["spark.driver.extraJavaOptions"] == "-Dfoo=1"
+    assert stub.conf[JAVA_OPTIONS] == LOCAL_JVM_OPTIONS
+    assert stub.conf[EXTRA_OPTIONS] == "-Dfoo=1"
 
 
 def test_local_jvm_runs_two_compiler_threads(spark):
-    """The option reaches the JVM at launch, through the builder conf."""
+    """The launch policy reaches the JVM at launch, through the builder
+    conf: two compiler threads, the raised tier-4 thresholds and the
+    throughput collector."""
     jvm = spark.sparkContext._jvm
-    bean = jvm.java.lang.management.ManagementFactory.getPlatformMXBean(
+    management = jvm.java.lang.management.ManagementFactory
+    bean = management.getPlatformMXBean(
         jvm.java.lang.Class.forName("com.sun.management.HotSpotDiagnosticMXBean")
     )
     assert bean.getVMOption("CICompilerCount").getValue() == "2"
+    assert bean.getVMOption("Tier4InvocationThreshold").getValue() == "20000"
+    collectors = {gc.getName() for gc in management.getGarbageCollectorMXBeans()}
+    assert collectors == {"PS Scavenge", "PS MarkSweep"}
 
 
 @pytest.mark.parametrize("lang,value", [

@@ -17,11 +17,13 @@ The thread report reads ``/proc/<jvm pid>/task/*/stat`` once the
 session is up and every quarter second while the pipelines run, and
 prints the CPU seconds of each thread group (JIT compiler threads, GC
 threads, the executor task pool, py4j's ``Thread-N``; trailing digits
-folded to ``N``) in set-up and in the pipelines, with the JVM's
-``CICompilerCount``: the number of JIT compiler threads the measured
-JVM ran with. A thread's CPU counts up to its last read (HotSpot stops
-idle compiler threads beyond the first of each kind); what no read saw
-shows only in the process total.
+folded to ``N``) in set-up and in the pipelines, under a header naming
+the launch policy the measured JVM ran with: its ``CICompilerCount``
+(JIT compiler threads), its collector (the ``GarbageCollectorMXBean``
+names, e.g. ``G1 Young Generation`` or ``PS Scavenge``) and its
+``Tier4InvocationThreshold`` (C2 promotion). A thread's CPU counts up
+to its last read (HotSpot stops idle compiler threads beyond the first
+of each kind); what no read saw shows only in the process total.
 
 Without Hadoop's native library, local file-system calls fall back to
 forking shell commands (``readlink`` for link status, ``chmod`` for
@@ -102,10 +104,11 @@ def _by_group(threads: dict[int, tuple[str, float]]) -> collections.Counter:
     return groups
 
 
-def print_thread_report(compiler_count: str, setup: tuple, end: tuple) -> None:
-    """``setup`` and ``end``: the process's CPU seconds and its threads'
-    (:func:`thread_cpu`) once the session is up and after the pipelines."""
-    print(f"\nJVM CPU seconds by thread (CICompilerCount={compiler_count}):")
+def print_thread_report(policy: str, setup: tuple, end: tuple) -> None:
+    """``policy``: :func:`launch_policy`. ``setup`` and ``end``: the
+    process's CPU seconds and its threads' (:func:`thread_cpu`) once the
+    session is up and after the pipelines."""
+    print(f"\nJVM CPU seconds by thread ({policy}):")
     print(f"  {'set-up':>8s}  {'pipelines':>9s}  thread")
     before, after = _by_group(setup[1]), _by_group(end[1])
     for g, sec in sorted(after.items(), key=lambda kv: before[kv[0]] - kv[1]):
@@ -114,6 +117,21 @@ def print_thread_report(compiler_count: str, setup: tuple, end: tuple) -> None:
     unseen = [t - sum(groups.values()) for t, groups in ((setup[0], before), (end[0], after))]
     print(f"  {unseen[0]:8.2f}  {unseen[1] - unseen[0]:9.2f}  (threads never read)")
     print(f"  {setup[0]:8.2f}  {end[0] - setup[0]:9.2f}  process total")
+
+
+def launch_policy(jvm) -> str:
+    """The measured JVM's compiler threads, collector and C2 promotion
+    threshold, as it runs with them."""
+    management = jvm.java.lang.management.ManagementFactory
+    flags = management.getPlatformMXBean(
+        jvm.java.lang.Class.forName("com.sun.management.HotSpotDiagnosticMXBean")
+    )
+    collectors = " + ".join(gc.getName() for gc in management.getGarbageCollectorMXBeans())
+    return (
+        f"CICompilerCount={flags.getVMOption('CICompilerCount').getValue()}, "
+        f"collector={collectors}, "
+        f"Tier4InvocationThreshold={flags.getVMOption('Tier4InvocationThreshold').getValue()}"
+    )
 
 
 def record(names: list[str], sf_dir: str, recording: str) -> tuple:
@@ -129,9 +147,7 @@ def record(names: list[str], sf_dir: str, recording: str) -> tuple:
     spark.sparkContext.setLogLevel("ERROR")
     jvm = spark.sparkContext._jvm
     pid = jvm.java.lang.ProcessHandle.current().pid()
-    compiler_count = jvm.java.lang.management.ManagementFactory.getPlatformMXBean(
-        jvm.java.lang.Class.forName("com.sun.management.HotSpotDiagnosticMXBean")
-    ).getVMOption("CICompilerCount").getValue()
+    policy = launch_policy(jvm)
     qs = entrymod.queries()
     setup = _cpu(f"/proc/{pid}/stat")[1], thread_cpu(pid)
     seen, stop = dict(setup[1]), threading.Event()
@@ -153,7 +169,7 @@ def record(names: list[str], sf_dir: str, recording: str) -> tuple:
             "run the tool in a process with no Spark session yet"
         )
     recordings.get(0).dump(jvm.java.io.File(recording).toPath())
-    return compiler_count, setup, end
+    return policy, setup, end
 
 
 def process_starts(recording: str) -> list[dict]:
